@@ -191,16 +191,16 @@ def _steal_ticks() -> int:
 
 
 def main() -> None:
-    from topicalcrawler_spark.session import get_spark
+    from topicalcrawler_spark.session import default_cpus, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     spark = get_spark(app_name="bench", cpus=cpus)
     # warm-up actions so one-time startup doesn't pollute timings:
     # a scan (JVM/codegen) and a trivial Arrow pass (spawns the Python
-    # UDF workers — local[32] forks 32 of them on first use)
+    # UDF workers — local[N] forks up to N of them on first use)
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     spark.range(10_000).repartition(cpus).mapInPandas(
         lambda it: it, schema="id long"

@@ -241,6 +241,17 @@ def test_crawl_exhausts_frontier_and_stays_oracle_equal(spark, tmp_path):
         cfg.table("frontier"), icelite.latest_snapshot_id(cfg.table("frontier"))
     )["row_count"]
     assert n_left == 0
+    from topicalcrawler_spark.plans.round import crawl_round
+
+    # a no-op round reports the same counters as a working one
+    # (tools sum wall_s and read phases over every round)
+    noop = crawl_round(spark, cfg, 7)
+    assert set(noop) == {
+        "phases", "round", "n_pending", "n_robots_blocked", "n_fetched",
+        "n_errors", "n_verify_failed", "n_candidates", "n_new", "wall_s",
+    }
+    assert noop["n_pending"] == 0 and noop["phases"] == {}
+    assert noop["wall_s"] > 0
 
 
 def test_hot_host_skew_trace_parity_and_salt_spread(spark, tmp_path):

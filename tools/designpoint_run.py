@@ -78,7 +78,7 @@ def main() -> None:
     from topicalcrawler_spark.session import get_spark
     from topicalcrawler_spark.sources import fixtures as fx
 
-    spark = get_spark(app_name="designpoint", cpus=32)
+    spark = get_spark(app_name="designpoint")
     spark.range(10_000).count()  # JVM warm-up
 
     base = os.environ.get(

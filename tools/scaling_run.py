@@ -20,12 +20,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 32
+    from topicalcrawler_spark.session import default_cpus, get_spark
+
+    cpus = int(sys.argv[1]) if len(sys.argv) > 1 else default_cpus()
     n_urls = int(sys.argv[2]) if len(sys.argv) > 2 else 300_000
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 1
 
     from topicalcrawler_spark.plans.round import CrawlConfig, run_crawl
-    from topicalcrawler_spark.session import get_spark
     from topicalcrawler_spark.sources import fixtures as fx
 
     spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus)

@@ -418,7 +418,18 @@ def _crawl_round_impl(
     # against the seen set before appending)
     n_pending = n_frontier_rows - n_tomb
     if n_pending <= 0:
-        return {"round": round_n, "n_pending": 0, "n_fetched": 0}
+        return {
+            "phases": {},
+            "round": round_n,
+            "n_pending": 0,
+            "n_robots_blocked": 0,
+            "n_fetched": 0,
+            "n_errors": 0,
+            "n_verify_failed": 0,
+            "n_candidates": 0,
+            "n_new": 0,
+            "wall_s": time.monotonic() - t_start,
+        }
     frontier = icelite.read_snapshot(spark, cfg.table("frontier"), frontier_snap_id)
     if tomb_snap_id and n_tomb > 0:
         # LSM read path: pending = append-files MINUS tombstones, via
@@ -461,7 +472,11 @@ def _crawl_round_impl(
     # manifest): ~64 URLs/task, floored at 8 tasks, capped at 4x cores
     # — fine-grained at volume so the final scheduling wave stays
     # short, but never hundreds of near-empty python-worker tasks when
-    # a round is small (that fixed overhead dominated round-1's bench).
+    # a round is small.  Each Python task costs something beyond its
+    # rows: scheduling and an Arrow round trip to a reused worker, and
+    # on stock PySpark workers an import-cache invalidation that
+    # re-parses every zip on the worker path (~0.2 CPU-s per task),
+    # which the engine's worker daemon (pyworker.py) skips.
     cores = spark.sparkContext.defaultParallelism
     par = int(min(4 * cores, max(8, -(-n_pending // 64))))
     selected = selected.repartition(par, "url_hash").cache()

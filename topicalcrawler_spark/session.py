@@ -4,6 +4,22 @@ Design notes for scale (SURVEY.md §4): AQE on (skew-join split + shuffle
 coalesce), Arrow everywhere, UTC timezone pinned for DuckDB-oracle
 comparison, shuffle partitions sized to cores for local mode (a real
 cluster deployment would size this to ~2-3x total cores).
+
+Python workers run under the engine's own daemon
+(``spark.python.daemon.module`` = ``topicalcrawler_spark.pyworker``).
+Stock PySpark 4.1 calls ``importlib.invalidate_caches()`` at the start
+of every task, even in a reused worker; on CPython 3.11 that re-parses
+the central directory of every zip on the worker path (pyspark.zip has
+1,328 entries).  A warm worker under cProfile spent 14.4 of 15.5 s in
+``zipimport._read_directory``, and 64 trivial ``mapInPandas`` tasks took
+3.2 s wall and ~13 worker CPU-s against 0.07 s for the same job without
+Python.  A crawl round runs ~55 Python tasks, so that was ~11 CPU-s per
+round.  The daemon keeps the invalidation only for tasks that change
+what is importable (see pyworker.py).  It must be importable before any
+task ships files, so ``spark.executorEnv.PYTHONPATH`` carries the
+checkout that holds this package, ahead of any PYTHONPATH the caller
+passes.  Sessions built without ``get_spark`` keep stock workers and
+get the package through ``_ship_package``.
 """
 
 from __future__ import annotations
@@ -11,6 +27,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+PYWORKER_MODULE = "topicalcrawler_spark.pyworker"
+# the directory that holds this package: the Python daemon's import root
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Arrow batches carry a fat `bytes` column on the image path (U4) — cap
 # records/batch so a batch of encoded images stays well under worker memory.
@@ -30,7 +50,7 @@ def get_spark(
     mode where the default 200 just adds scheduling overhead.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cpus = default_cpus()
     if shuffle_partitions is None:
         # default = core count (right for local mode at the driver's
         # SFs); $SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for derived
@@ -56,13 +76,28 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", PYWORKER_MODULE)
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    paths = conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        dict.fromkeys(p for p in [CHECKOUT, *paths] if p)
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # redundant with the daemon's PYTHONPATH for a session built here,
+    # but getOrCreate may hand back one built elsewhere, and shipping
+    # now sets the marker that keeps registry entries (queries._ship)
+    # from adding a py-file to warm workers mid-run
     _ship_package(spark)
     return spark
+
+
+def default_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else every core of this machine."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
 
 
 def _ship_package(spark: SparkSession) -> None:
