@@ -86,25 +86,21 @@ def test_lsm_frontier_mode_is_trace_identical(spark, tmp_path):
     assert sseen == oseen
 
 
-@pytest.mark.parametrize("file_mode", [False, True])
-def test_incremental_bloom_maintenance_is_trace_identical(
-    spark, tmp_path, file_mode
-):
-    """Rounds 2+ maintain the bloom shards incrementally (manifest
+def test_incremental_bloom_maintenance_is_trace_identical(spark, tmp_path):
+    """Rounds 2+ maintain the bloom shard files incrementally (manifest
     file-diff delta OR-ed into the round-1 bitmaps) when capacity
     allows — forced here by bumping the state's capacity after round 1,
-    the mature-crawl shape where delta << seen.  Both distribution
-    forms; results must equal the oracle exactly."""
+    the mature-crawl shape where delta << seen.  Results must equal the
+    oracle exactly."""
     from topicalcrawler_spark.plans.round import (
         CrawlConfig, crawl_round, init_crawl, read_seen, read_trace,
     )
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(use_bloom=True, bloom_min_keys=0)
-    if file_mode:
-        kw["bloom_file_min_keys"] = 0
-    cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
+    cfg = CrawlConfig(
+        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
+    )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
     assert "bloom" in cfg._dims
@@ -140,8 +136,7 @@ def test_inprocess_retry_after_bloom_update_crash(spark, tmp_path, monkeypatch):
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"),
-        use_bloom=True, bloom_min_keys=0, bloom_file_min_keys=0,
+        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -174,52 +169,24 @@ def test_inprocess_retry_after_bloom_update_crash(spark, tmp_path, monkeypatch):
     assert sseen == oseen
 
 
-def test_serial_verify_order_is_trace_identical(spark, tmp_path, monkeypatch):
-    """TC_OVERLAP_VERIFY=0 forces the metrics/verify action back to the
-    serial order (no second driver thread).  The overlap is pure
-    scheduling — both orders must produce byte-identical trace + seen."""
-    monkeypatch.setenv("TC_OVERLAP_VERIFY", "0")
-    strace, sseen, _ = _spark_crawl(spark, tmp_path, 2)
-    otrace, oseen = _oracle_crawl(2)
-    assert strace == otrace
-    assert sseen == oseen
-
-
 def test_five_rounds_with_bloom_prefilter(spark, tmp_path):
     """M2/M4 gate: 5 rounds, bloom prefilter ON — results must be
-    IDENTICAL to the oracle (bloom is an optimization, never authority)."""
-    strace, sseen, _ = _spark_crawl(
+    IDENTICAL to the oracle (bloom is an optimization, never authority),
+    and the shard bitmaps must actually exist on disk as partition-local
+    parquet files (the prefilter probes them in place; no bitmap
+    transits the driver)."""
+    import glob
+
+    strace, sseen, cfg = _spark_crawl(
         spark, tmp_path, 5, use_bloom=True, bloom_min_keys=0
     )
     otrace, oseen = _oracle_crawl(5)
     assert strace == otrace
     assert sseen == oseen
-
-
-def test_bloom_file_distribution_path_is_trace_identical(spark, tmp_path):
-    """The SURVEY §4.2 design-point path: shard bitmaps as
-    partition-local parquet files probed in place (no driver
-    collect+broadcast).  Forced via bloom_file_min_keys=0 — the trace
-    and seen set must still be byte-identical to the oracle, and the
-    shard files must actually exist on disk."""
-    import glob
-    import os
-
-    strace, sseen, cfg = _spark_crawl(
-        spark,
-        tmp_path,
-        4,
-        use_bloom=True,
-        bloom_min_keys=0,
-        bloom_file_min_keys=0,
-    )
-    otrace, oseen = _oracle_crawl(4)
-    assert strace == otrace
-    assert sseen == oseen
     shard_files = glob.glob(
         os.path.join(cfg.table("bloom"), "round-*", "shard_id=*", "*.parquet")
     )
-    assert shard_files, "file-based bloom path wrote no shard bitmaps"
+    assert shard_files, "bloom prefilter wrote no shard bitmap files"
 
 
 def test_crawl_exhausts_frontier_and_stays_oracle_equal(spark, tmp_path):
@@ -350,14 +317,22 @@ def test_crawl_delay_cap_trace_parity(spark, tmp_path):
     ], "cap engaged but the trace is identical to the uncapped crawl"
 
 
-@pytest.mark.parametrize("mode", ["replace", "append"])
-def test_resume_equivalence(spark, tmp_path, mode):
+@pytest.mark.parametrize(
+    "mode, restart",
+    [("replace", "cold"), ("append", "cold"), ("replace", "inprocess")],
+    ids=["replace", "append", "replace-inprocess"],
+)
+def test_resume_equivalence(spark, tmp_path, mode, restart):
     """§3.3: crawl(k) ≡ crawl(j); resume(k−j) — byte-identical trace
-    and seen-set.  The resume leg uses a FRESH CrawlConfig (cold
-    restart, as a new spark-submit would have): all durable state must
-    live in icelite snapshots, none in the in-memory dim/bloom memos.
-    Parametrized over both frontier maintenance modes — the LSM mode's
-    tombstone table must survive a cold restart too."""
+    and seen-set, equal to the oracle.  The cold leg resumes with a
+    FRESH CrawlConfig (as a new spark-submit would have): all durable
+    state must live in icelite snapshots, none in the in-memory
+    dim/bloom memos.  Parametrized over both frontier maintenance modes
+    — the LSM mode's tombstone table must survive a cold restart too.
+    The in-process leg resumes with the SAME CrawlConfig, its bloom
+    build record still live and forced onto the incremental path:
+    resume() deletes the bloom files, so it must drop that record too,
+    or the next round updates bitmaps in a directory that is gone."""
     from topicalcrawler_spark.plans.round import resume
 
     kw = {"frontier_mode": mode, "use_bloom": True, "bloom_min_keys": 0}
@@ -370,8 +345,12 @@ def test_resume_equivalence(spark, tmp_path, mode):
     (tmp_path / "split").mkdir()
     fx.write_seed_file(seeds_path)
     root = str(tmp_path / "split" / "crawl")
-    run_crawl(spark, CrawlConfig(root=root, **kw), seeds_path, rounds=1)
-    cfg = CrawlConfig(root=root, **kw)  # cold restart
+    cfg = CrawlConfig(root=root, **kw)
+    run_crawl(spark, cfg, seeds_path, rounds=1)
+    if restart == "cold":
+        cfg = CrawlConfig(root=root, **kw)
+    else:
+        cfg._dims["bloom"]["capacity"] = 10**12  # force the incremental leg
     resume(spark, cfg, rounds=2)
     split_trace = [
         tuple(r[c] for c in TRACE_COLS)
@@ -380,6 +359,9 @@ def test_resume_equivalence(spark, tmp_path, mode):
     split_seen = {r["url_canon"] for r in read_seen(spark, cfg).collect()}
     assert split_trace == full_trace
     assert split_seen == full_seen
+    otrace, oseen = _oracle_crawl(3)
+    assert split_trace == otrace
+    assert split_seen == oseen
 
 
 def test_seen_compaction_is_result_invariant(spark, tmp_path):
@@ -723,8 +705,7 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0,
-        bloom_file_min_keys=0,
+        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)

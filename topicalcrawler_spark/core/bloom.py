@@ -9,6 +9,13 @@ JVM-side, physical plane only; the oracle never consumes bloom output,
 the exact anti-join is the correctness authority, SURVEY.md §7 hard
 part 2).
 
+"Broadcast + per-partition shards" is met by one distribution mode
+(``operators.dedup``): the bitmaps are per-shard, keyed by url_hash
+range (top hash bits, aligned with the seen table's range
+partitioning), and live as partition-local parquet files.  Only the
+shard directory is broadcast; every probe task reads the 1-2 shards its
+url_hash range touches, and no bitmap transits the driver.
+
 Bloom is append-only: the north-rule's seen-set never deletes, which is
 why a cuckoo filter's delete support buys nothing here (SURVEY.md §2
 exclusions).

@@ -39,7 +39,6 @@ import os
 import secrets
 import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import timedelta
 
@@ -58,12 +57,9 @@ from ..functions import (
 from ..operators.dedup import (
     anti_join_seen,
     anti_join_seen_files,
-    bloom_prefilter,
     bloom_prefilter_files,
-    build_bloom_shards,
     dedup_batch,
     update_bloom_shard_files,
-    update_bloom_shards,
     write_bloom_shard_files,
 )
 from ..operators.fetch import fetch_selected
@@ -91,8 +87,11 @@ class CrawlConfig:
     default_budget: int = fx.DEFAULT_BUDGET
     n_shards: int = 16
     salt: int = 8
+    # bloom prefilter (operators.dedup): shard bitmaps at fpp=0.01,
+    # written as partition-local parquet files keyed by url_hash range
+    # and probed in place (1-2 shard reads per task) — no bitmap ever
+    # transits the driver, at any seen-set size.
     use_bloom: bool = False
-    bloom_fpp: float = 0.01
     # bloom crossover: below this seen-set size the prefilter's two
     # extra python jobs cost more than the exact anti-join they would
     # save — skip them (the anti-join is always the authority, so this
@@ -100,17 +99,7 @@ class CrawlConfig:
     # bloom_min_keys=0).  At the 10^10 design point the filter always
     # engages.
     bloom_min_keys: int = 50_000
-    # second crossover (SURVEY §4.2): past this seen-set size the
-    # merged shard bitmaps are multi-GB in aggregate — they are written
-    # as partition-local parquet files (write_bloom_shard_files) and
-    # probed in place (bloom_prefilter_files, 1-2 shard reads per
-    # task), instead of collect+broadcast through the driver.  50M keys
-    # at fpp=0.01 is ~60 MB of bitmap — the last size where a driver
-    # round-trip is still harmless; at the 10^10 design point the file
-    # path always engages.  Results identical either way (trace test
-    # pins it by forcing bloom_file_min_keys=0).
-    bloom_file_min_keys: int = 50_000_000
-    # third crossover: past this seen-set size the EXACT anti-join's
+    # exact-join crossover: past this seen-set size the EXACT anti-join's
     # sort-merge shuffle of the full seen table (the single largest
     # per-round data movement at 10^10 keys — left-anti cannot
     # broadcast its right side) is replaced by the file-probed join
@@ -328,6 +317,32 @@ def _snap_as_of(table_dir: str, round_max: int) -> int | None:
     return None
 
 
+def _anti_join_snapshot(
+    spark: SparkSession,
+    df: DataFrame,
+    table_dir: str,
+    snap_id: int | None = None,
+    probe_files: bool = True,
+    n_ranges: int = 0,
+) -> DataFrame:
+    """``df`` minus the (url_hash, url_canon) keys of an icelite table
+    snapshot (latest when ``snap_id`` is None) — exact and
+    collision-safe either way.  With ``probe_files`` the table's own
+    url_hash-range-clustered files are probed in place, pruned by the
+    manifest's per-file url_hash stats (``anti_join_seen_files``: zero
+    shuffle of the table side); ``n_ranges`` > 0 first range-partitions
+    ``df`` by url_hash so a probe task overlaps few files.  Without
+    stats (a foreign or pre-stats manifest) it falls back to a plain
+    left-anti join against the snapshot — never to skipping the join,
+    which would resurrect rows the table was meant to remove."""
+    index = icelite.file_hash_index(table_dir, snap_id) if probe_files else None
+    if index is None:
+        return anti_join_seen(df, icelite.read_snapshot(spark, table_dir, snap_id))
+    if n_ranges:
+        df = df.repartitionByRange(n_ranges, "url_hash")
+    return anti_join_seen_files(df, index)
+
+
 def crawl_round(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> dict:
     """Execute one crawl round; returns the round's metric counters.
 
@@ -435,15 +450,9 @@ def _crawl_round_impl(
         # LSM read path: pending = append-files MINUS tombstones, via
         # the zero-shuffle file-probed anti-join (both tables are
         # url_hash-range-clustered; manifest stats prune file reads)
-        tomb_index = icelite.file_hash_index(fetched_tbl, tomb_snap_id)
-        if tomb_index is not None:
-            frontier = anti_join_seen_files(frontier, tomb_index)
-        else:  # stats missing (foreign table) — broadcast-anti fallback
-            frontier = frontier.join(
-                icelite.read_snapshot(spark, fetched_tbl, tomb_snap_id),
-                ["url_hash", "url_canon"],
-                "left_anti",
-            )
+        frontier = _anti_join_snapshot(
+            spark, frontier, fetched_tbl, tomb_snap_id
+        )
 
     # 2. robots gate (J2/J7/P5 — all JVM-side); the robots dim
     # (as-of-resolved) is memoized across rounds.  The gate METRICS are
@@ -515,15 +524,14 @@ def _crawl_round_impl(
     # gate metrics, all in ONE action: the three aggregate subtrees are
     # cross-joined so a single job computes them in parallel (the gate
     # side reads the cached ``gated``) instead of paying serial job
-    # round-trips per metric.  The action is submitted from a second
-    # driver thread so its Python-CPU decode pass overlaps the
-    # shuffle-bound trace phase below — the two jobs touch disjoint
-    # resources (Arrow workers vs exchange+write) and neither depends
-    # on the other; the counters are joined exactly where first needed
-    # (the corpus commit).  Concurrent job submission from driver
-    # threads is a supported Spark pattern; all inputs (``fetched`` on
-    # disk, ``gated`` cached) are immutable by then, so the overlap
-    # cannot change any result.
+    # round-trips per metric.  The action runs to completion BEFORE the
+    # trace phase, not overlapped with it from a second driver thread:
+    # that overlap measured flat on 4 cores (benchmark crawl round,
+    # 12.98 vs 13.16 reference-s, inside run-to-run noise), since the
+    # decode pass and the trace exchange compete for the same cores
+    # anyway.  Serial, every job runs inside exactly one phase, so each
+    # phase wall in the returned stats is the time of that phase's own
+    # jobs.
     from ..operators.images import decode_verify
 
     verify_agg = decode_verify(
@@ -555,62 +563,49 @@ def _crawl_round_impl(
         .crossJoin(verify_agg)
         .crossJoin(gate_agg)
     )
-    # TC_OVERLAP_VERIFY=0 forces the serial order (A/B + diagnosis
-    # escape hatch); default: overlap.
-    overlap = os.environ.get("TC_OVERLAP_VERIFY", "1") != "0"
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        if overlap:
-            metrics_fut = pool.submit(metrics_df.first)
-        else:
-            fr = metrics_df.first()
-            mark("fetch_verify")
-
-        trace_caches: list = []
-        try:
-            trace = global_fetch_order(
-                partitions=par,
-                cache_registry=trace_caches,
-                selected=fetched.select(
-                    "url_canon",
-                    "host",
-                    "depth",
-                    "relevance_q",
-                    "discovery_time",
-                    "discovery_seq",
-                    "http_status",
-                    "image_id",
-                )
-            ).select(
-                "trace_seq",
-                F.lit(round_n).alias("round"),
-                "url_canon",
-                "host",
-                "depth",
-                "relevance_q",
-                "discovery_seq",
-                F.col("http_status").alias("status"),
-                "image_id",
-            )
-            if not _round_committed(cfg.table("trace"), round_n):
-                icelite.commit(
-                    trace, cfg.table("trace"), round_n, mode="append"
-                )
-        finally:
-            # the commit materialized the ranged layout — release it
-            # even when the commit fails (a crash re-run's
-            # CommitConflict here would otherwise leak the very
-            # CacheManager entry this registry exists to free — ADVICE)
-            for c in trace_caches:
-                c.unpersist()
-        mark("trace")
-
-        if overlap:
-            fr = metrics_fut.result()
-            mark("fetch_verify")
+    fr = metrics_df.first()
     n_fetched, n_errors = int(fr["n"]), int(fr["n_err"] or 0)
     n_images = int(fr["n_img"] or 0)
     n_verify_failed = int(fr["n_bad"] or 0)
     n_blocked = int(fr["n_gated"] - (fr["n_allowed"] or 0))
+    mark("fetch_verify")
+
+    trace_caches: list = []
+    try:
+        trace = global_fetch_order(
+            partitions=par,
+            cache_registry=trace_caches,
+            selected=fetched.select(
+                "url_canon",
+                "host",
+                "depth",
+                "relevance_q",
+                "discovery_time",
+                "discovery_seq",
+                "http_status",
+                "image_id",
+            )
+        ).select(
+            "trace_seq",
+            F.lit(round_n).alias("round"),
+            "url_canon",
+            "host",
+            "depth",
+            "relevance_q",
+            "discovery_seq",
+            F.col("http_status").alias("status"),
+            "image_id",
+        )
+        if not _round_committed(cfg.table("trace"), round_n):
+            icelite.commit(trace, cfg.table("trace"), round_n, mode="append")
+    finally:
+        # the commit materialized the ranged layout — release it even
+        # when the commit fails (a crash re-run's CommitConflict here
+        # would otherwise leak the very CacheManager entry this
+        # registry exists to free — ADVICE)
+        for c in trace_caches:
+            c.unpersist()
+    mark("trace")
 
     # 6. corpus append (authoritative schema, BASELINE.json:15) —
     # zero-copy: the fetch output files ARE the corpus data; the
@@ -698,22 +693,16 @@ def _crawl_round_impl(
     seen_snap_id = _snap_as_of(cfg.table("seen"), round_n - 1)
     seen_manifest = icelite.read_manifest(cfg.table("seen"), seen_snap_id)
     n_seen = seen_manifest["row_count"]
-    seen = icelite.read_snapshot(spark, cfg.table("seen"), seen_snap_id)
-    # exact-join crossover (CrawlConfig.seen_join_file_min_keys): probe
-    # the seen table's own range-clustered files in place instead of
-    # shuffling them through a sort-merge join
-    seen_index = (
-        icelite.file_hash_index(cfg.table("seen"), seen_snap_id)
-        if n_seen >= cfg.seen_join_file_min_keys
-        else None
-    )
 
     def exact_unseen(cand: DataFrame) -> DataFrame:
-        if seen_index is not None:
-            return anti_join_seen_files(
-                cand.repartitionByRange(cfg.n_shards, "url_hash"), seen_index
-            )
-        return anti_join_seen(cand, seen)
+        # exact-join crossover (CrawlConfig.seen_join_file_min_keys):
+        # probe the seen table's own range-clustered files in place
+        # instead of shuffling them through a sort-merge join
+        return _anti_join_snapshot(
+            spark, cand, cfg.table("seen"), seen_snap_id,
+            probe_files=n_seen >= cfg.seen_join_file_min_keys,
+            n_ranges=cfg.n_shards,
+        )
 
     mark("links")
     # bloom crossover (see CrawlConfig.bloom_min_keys): the prefilter
@@ -727,86 +716,49 @@ def _crawl_round_impl(
         # all of seen (the last remaining O(seen) scan per round).
         # Full rebuild when the key count outgrows the 1.5× sizing
         # headroom (fpp would degrade past design — a perf matter
-        # only, the exact join stays the authority), when the file
-        # set is not a superset of the build's (compaction), or when
-        # the distribution mode crosses over.
+        # only, the exact join stays the authority) or when the file
+        # set is not a superset of the build's (compaction).
         bst = cfg._dims.get("bloom")
         cur_files = frozenset(seen_manifest["files"])
-        want_mode = "file" if n_seen >= cfg.bloom_file_min_keys else "bcast"
-        fresh_ok = (
+        # unique per attempt (same contract as icelite.next_data_dir):
+        # an in-process retry of a crashed round re-ORs its delta into
+        # a FRESH dir — OR-idempotent, and never out_dir == prev_dir
+        # (which update_bloom_shard_files rejects)
+        new_dir = os.path.join(
+            cfg.table("bloom"), f"round-{round_n:06d}-{secrets.token_hex(4)}"
+        )
+        if (
             bst is not None
-            and bst["mode"] == want_mode
             and n_seen <= bst["capacity"]
             and bst["files"] <= cur_files
-        )
-        delta_files = sorted(cur_files - bst["files"]) if fresh_ok else []
-        if want_mode == "file":
-            if fresh_ok:
-                k = bst["k"]
-                if delta_files:
-                    # unique per attempt (same contract as
-                    # icelite.next_data_dir): an in-process retry of a
-                    # crashed round re-ORs its delta into a FRESH dir —
-                    # OR-idempotent, and never out_dir == prev_dir
-                    # (which update_bloom_shard_files rejects)
-                    shard_dir = os.path.join(
-                        cfg.table("bloom"),
-                        f"round-{round_n:06d}-{secrets.token_hex(4)}",
-                    )
-                    update_bloom_shard_files(
-                        spark.read.parquet(*delta_files).select("url_hash"),
-                        bst["dir"], shard_dir, cfg.n_shards,
-                        bst["n_bits"], k,
-                    )
-                    shutil.rmtree(bst["dir"], ignore_errors=True)
-                    bst["dir"] = shard_dir
-                else:
-                    shard_dir = bst["dir"]
-            else:
-                shard_dir = os.path.join(
-                    cfg.table("bloom"),
-                    f"round-{round_n:06d}-{secrets.token_hex(4)}",
+        ):
+            delta_files = sorted(cur_files - bst["files"])
+            if delta_files:
+                update_bloom_shard_files(
+                    spark.read.parquet(*delta_files).select("url_hash"),
+                    bst["dir"], new_dir, cfg.n_shards, bst["n_bits"], bst["k"],
                 )
-                k, n_bits = write_bloom_shard_files(
-                    seen, shard_dir, cfg.n_shards, cfg.bloom_fpp,
-                    total=n_seen,
-                )
-                # sweep EVERY other generation, not just the in-memory
-                # bst pointer: crash debris and pre-restart dirs have
-                # no bst record but are equally superseded by this
-                # full rebuild (multi-GB each at the design point)
-                import glob as _glob
-
-                for d in _glob.glob(
-                    os.path.join(cfg.table("bloom"), "round-*")
-                ):
-                    if os.path.normpath(d) != os.path.normpath(shard_dir):
-                        shutil.rmtree(d, ignore_errors=True)
-                bst = {
-                    "mode": "file", "dir": shard_dir, "k": k,
-                    "n_bits": n_bits,
-                    "capacity": int(n_seen * cfg.bloom_capacity_factor),
-                }
-            probe = bloom_prefilter_files(links, shard_dir, cfg.n_shards, k)
+                shutil.rmtree(bst["dir"], ignore_errors=True)
+                bst["dir"] = new_dir
         else:
-            if fresh_ok:
-                k = bst["k"]
-                if delta_files:
-                    bst["bits"] = update_bloom_shards(
-                        spark.read.parquet(*delta_files).select("url_hash"),
-                        bst["bits"], cfg.n_shards, bst["n_bits"], k,
-                    )
-                shard_bits = bst["bits"]
-            else:
-                shard_bits, k = build_bloom_shards(
-                    seen, cfg.n_shards, cfg.bloom_fpp, total=n_seen
-                )
-                bst = {
-                    "mode": "bcast", "bits": shard_bits, "k": k,
-                    "n_bits": len(shard_bits[0]) * 8,
-                    "capacity": int(n_seen * cfg.bloom_capacity_factor),
-                }
-            probe = bloom_prefilter(links, shard_bits, cfg.n_shards, k)
+            k, n_bits = write_bloom_shard_files(
+                icelite.read_snapshot(spark, cfg.table("seen"), seen_snap_id),
+                new_dir, cfg.n_shards, total=n_seen,
+            )
+            # sweep EVERY other generation, not just the in-memory bst
+            # pointer: crash debris and pre-restart dirs have no bst
+            # record but are equally superseded by this full rebuild
+            # (multi-GB each at the design point)
+            import glob as _glob
+
+            for d in _glob.glob(os.path.join(cfg.table("bloom"), "round-*")):
+                if os.path.normpath(d) != os.path.normpath(new_dir):
+                    shutil.rmtree(d, ignore_errors=True)
+            bst = {
+                "dir": new_dir, "k": k, "n_bits": n_bits,
+                "capacity": int(n_seen * cfg.bloom_capacity_factor),
+            }
+        probe = bloom_prefilter_files(links, bst["dir"], cfg.n_shards, bst["k"])
         bst["files"] = cur_files
         cfg._dims["bloom"] = bst
         # cache the probe output: both branches below read it, so the
@@ -914,18 +866,10 @@ def _crawl_round_impl(
         ):
             # materialize the pending view and restart both chains —
             # amortized O(frontier / K); result-invariant (trace test)
-            pend = icelite.read_snapshot(spark, cfg.table("frontier"))
-            t_idx = icelite.file_hash_index(fetched_tbl)
-            if t_idx is not None:
-                pend = anti_join_seen_files(pend, t_idx)
-            else:  # stats unavailable — broadcast-anti fallback, never
-                # skip tombstone removal (a skipped removal resurrects
-                # already-fetched rows into the compacted frontier)
-                pend = pend.join(
-                    icelite.read_snapshot(spark, fetched_tbl),
-                    ["url_hash", "url_canon"],
-                    "left_anti",
-                )
+            pend = _anti_join_snapshot(
+                spark, icelite.read_snapshot(spark, cfg.table("frontier")),
+                fetched_tbl,
+            )
             frontier_snap = icelite.commit(
                 pend.repartitionByRange(cfg.n_shards, "url_hash"),
                 cfg.table("frontier"),
@@ -1048,10 +992,13 @@ def resume(spark: SparkSession, cfg: CrawlConfig, rounds: int) -> list[dict]:
         if os.path.isdir(cfg.table(t)):
             icelite.recover(cfg.table(t))
     # bloom bitmaps are DERIVED state keyed to an in-memory build record
-    # (cfg._dims) that did not survive the restart — the next bloom
-    # round full-rebuilds regardless, so stale round-* dirs (multi-GB at
-    # the design point) would otherwise leak one generation per restart
+    # (cfg._dims): drop both, so the next bloom round full-rebuilds.
+    # Stale round-* dirs (multi-GB at the design point) would otherwise
+    # leak one generation per restart, and a record surviving an
+    # in-process resume() would point the next incremental update at
+    # the deleted directory.
     shutil.rmtree(cfg.table("bloom"), ignore_errors=True)
+    cfg._dims.pop("bloom", None)
     head = icelite.latest_snapshot_id(cfg.table("frontier"))
     if head is None:
         raise RuntimeError(
