@@ -171,22 +171,33 @@ def test_inprocess_retry_after_bloom_update_crash(spark, tmp_path, monkeypatch):
 
 def test_five_rounds_with_bloom_prefilter(spark, tmp_path):
     """M2/M4 gate: 5 rounds, bloom prefilter ON — results must be
-    IDENTICAL to the oracle (bloom is an optimization, never authority),
-    and the shard bitmaps must actually exist on disk as partition-local
-    parquet files (the prefilter probes them in place; no bitmap
-    transits the driver)."""
-    import glob
-
-    strace, sseen, cfg = _spark_crawl(
+    IDENTICAL to the oracle (bloom is an optimization, never authority)."""
+    strace, sseen, _ = _spark_crawl(
         spark, tmp_path, 5, use_bloom=True, bloom_min_keys=0
     )
     otrace, oseen = _oracle_crawl(5)
     assert strace == otrace
     assert sseen == oseen
+
+
+def test_bloom_file_distribution_path_is_trace_identical(spark, tmp_path):
+    """The SURVEY §4.2 design-point path: shard bitmaps as
+    partition-local parquet files probed in place (no driver
+    collect+broadcast).  It is the only bloom mode — the trace and seen
+    set must be byte-identical to the oracle, and the shard files must
+    actually exist on disk."""
+    import glob
+
+    strace, sseen, cfg = _spark_crawl(
+        spark, tmp_path, 4, use_bloom=True, bloom_min_keys=0
+    )
+    otrace, oseen = _oracle_crawl(4)
+    assert strace == otrace
+    assert sseen == oseen
     shard_files = glob.glob(
         os.path.join(cfg.table("bloom"), "round-*", "shard_id=*", "*.parquet")
     )
-    assert shard_files, "bloom prefilter wrote no shard bitmap files"
+    assert shard_files, "file-based bloom path wrote no shard bitmaps"
 
 
 def test_crawl_exhausts_frontier_and_stays_oracle_equal(spark, tmp_path):
