@@ -45,6 +45,20 @@ def _oracle_crawl(rounds, max_depth=3):
     return trace, oseen
 
 
+@pytest.mark.parametrize("use_bloom", [True, False])
+def test_config_rejects_non_power_of_two_shards(tmp_path, use_bloom):
+    """n_shards places rows by the top log2(n) bits of url_hash, so a
+    bad value must fail when the config is built, with or without the
+    bloom path — not mid-round after some tables have committed."""
+    root = str(tmp_path / "crawl")
+    for bad in (12, 0, -4, 2.0):
+        with pytest.raises(ValueError, match="power of two"):
+            CrawlConfig(root=root, use_bloom=use_bloom, n_shards=bad)
+    for good in (1, 4, 16, 32):
+        cfg = CrawlConfig(root=root, use_bloom=use_bloom, n_shards=good)
+        assert cfg.n_shards == good
+
+
 @pytest.mark.parametrize("rounds", [1, 3])
 def test_trace_and_seen_match_oracle(spark, tmp_path, rounds):
     strace, sseen, _ = _spark_crawl(spark, tmp_path, rounds)
@@ -72,14 +86,13 @@ def test_file_probed_exact_join_is_trace_identical(spark, tmp_path, bloom):
 
 
 def test_lsm_frontier_mode_is_trace_identical(spark, tmp_path):
-    """frontier_mode='append' (LSM-style O(delta) frontier commits +
-    tombstone keys + read-time file-probed pending view) must equal the
-    oracle exactly — including across a mid-crawl frontier compaction
+    """The LSM frontier (O(delta) frontier commits + tombstone keys +
+    read-time file-probed pending view) must equal the oracle exactly —
+    including across a mid-crawl frontier compaction
     (compact_frontier_every=2 inside a 5-round crawl)."""
     strace, sseen, _ = _spark_crawl(
         spark, tmp_path, 5,
-        frontier_mode="append", compact_frontier_every=2,
-        use_bloom=True, bloom_min_keys=0,
+        compact_frontier_every=2, use_bloom=True, bloom_min_keys=0,
     )
     otrace, oseen = _oracle_crawl(5)
     assert strace == otrace
@@ -215,10 +228,13 @@ def test_crawl_exhausts_frontier_and_stays_oracle_equal(spark, tmp_path):
     assert sseen == oseen
     from topicalcrawler_spark import icelite
 
-    n_left = icelite.read_manifest(
-        cfg.table("frontier"), icelite.latest_snapshot_id(cfg.table("frontier"))
-    )["row_count"]
-    assert n_left == 0
+    def n_rows(table):
+        d = cfg.table(table)
+        return icelite.read_manifest(d, icelite.latest_snapshot_id(d))["row_count"]
+
+    # drained: every frontier row appended since the last compaction has
+    # its tombstone (the same arithmetic as crawl_round's n_pending)
+    assert n_rows("frontier") - n_rows("fetched") == 0
     from topicalcrawler_spark.plans.round import crawl_round
 
     # a no-op round reports the same counters as a working one
@@ -329,24 +345,21 @@ def test_crawl_delay_cap_trace_parity(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "mode, restart",
-    [("replace", "cold"), ("append", "cold"), ("replace", "inprocess")],
-    ids=["replace", "append", "replace-inprocess"],
+    "restart", ["cold", "inprocess"], ids=["append", "append-inprocess"]
 )
-def test_resume_equivalence(spark, tmp_path, mode, restart):
+def test_resume_equivalence(spark, tmp_path, restart):
     """§3.3: crawl(k) ≡ crawl(j); resume(k−j) — byte-identical trace
     and seen-set, equal to the oracle.  The cold leg resumes with a
     FRESH CrawlConfig (as a new spark-submit would have): all durable
     state must live in icelite snapshots, none in the in-memory
-    dim/bloom memos.  Parametrized over both frontier maintenance modes
-    — the LSM mode's tombstone table must survive a cold restart too.
+    dim/bloom memos — the LSM frontier's tombstone table included.
     The in-process leg resumes with the SAME CrawlConfig, its bloom
     build record still live and forced onto the incremental path:
     resume() deletes the bloom files, so it must drop that record too,
     or the next round updates bitmaps in a directory that is gone."""
     from topicalcrawler_spark.plans.round import resume
 
-    kw = {"frontier_mode": mode, "use_bloom": True, "bloom_min_keys": 0}
+    kw = {"use_bloom": True, "bloom_min_keys": 0}
     (tmp_path / "full").mkdir()
     full_trace, full_seen, _ = _spark_crawl(
         spark, tmp_path / "full", rounds=3, **kw
@@ -403,17 +416,12 @@ def test_seen_compaction_is_result_invariant(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "mode,crash_table",
-    [
-        ("append", "trace"),
-        ("append", "seen"),
-        ("append", "fetched"),
-        ("append", "frontier"),
-        ("replace", "seen"),
-    ],
+    "crash_table",
+    ["trace", "seen", "fetched", "frontier"],
+    ids=lambda t: f"append-{t}",
 )
 def test_crash_mid_round_then_resume_matches_oracle(
-    spark, tmp_path, monkeypatch, mode, crash_table
+    spark, tmp_path, monkeypatch, crash_table
 ):
     """A round is several table commits, not one atomic operation.
     Crash immediately AFTER the named table's round-2 commit, then
@@ -428,7 +436,7 @@ def test_crash_mid_round_then_resume_matches_oracle(
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(frontier_mode=mode, use_bloom=True, bloom_min_keys=0)
+    kw = dict(use_bloom=True, bloom_min_keys=0)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -487,7 +495,7 @@ def test_crash_mid_compaction_small_tombstones_then_resume(
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(frontier_mode="append", compact_frontier_every=4)
+    kw = dict(compact_frontier_every=4)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     for r in (1, 2, 3):
@@ -554,10 +562,7 @@ def test_crash_mid_frontier_compaction_then_resume(spark, tmp_path, monkeypatch)
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(
-        frontier_mode="append", compact_frontier_every=2,
-        use_bloom=True, bloom_min_keys=0,
-    )
+    kw = dict(compact_frontier_every=2, use_bloom=True, bloom_min_keys=0)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -703,9 +708,9 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     (a) stale bloom shard-file generations (crash debris, pre-restart
         dirs with no in-memory build record) leak — a full rebuild now
         sweeps every other round-* dir, and resume() clears the table;
-    (b) the replace-mode frontier commit was the only per-round commit
-        without a crash-re-run guard — a re-run must not stack a
-        redundant same-round snapshot."""
+    (b) the frontier's per-round append commit is guarded by
+        _round_committed — a crash re-run must not append the round's
+        new links again as a redundant same-round snapshot."""
     import glob as _glob
 
     from topicalcrawler_spark import icelite
@@ -731,9 +736,9 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     bloom_dirs = _glob.glob(os.path.join(cfg.table("bloom"), "round-*"))
     assert len(bloom_dirs) == 1  # full rebuild swept ALL other gens
 
-    # (b) crash right after the frontier replace commit (lineage not
+    # (b) crash right after the frontier append commit (lineage not
     # yet committed), then re-run: the frontier snapshot id must not
-    # advance — the guard skips the redundant O(frontier) rewrite
+    # advance — the guard skips the duplicate append
     real_commit = icelite.commit
 
     def crash_lineage(df, table_dir, round_n, *a, **kw):
@@ -880,7 +885,6 @@ def test_random_seed_list_all_hosts_trace_parity(spark, tmp_path):
         n_shards=4,
         use_bloom=True,
         bloom_min_keys=0,
-        frontier_mode="lsm",
         compact_frontier_every=2,
         compact_seen_every=2,
     )

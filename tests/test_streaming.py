@@ -66,18 +66,9 @@ def test_dedup_stream(spark):
     assert n_stream == n_keys
 
 
-@pytest.mark.parametrize("impl", ["apply", "tws"])
-def test_stateful_politeness_across_batches(spark, impl):
+def test_stateful_politeness_across_batches(spark):
     # 3 parquet files -> 3 micro-batches; token bucket must carry
     # state between them and admit at most the per-host budget total.
-    # Both ST6 implementations (transformWithStateInPandas primary,
-    # applyInPandasWithState fallback) must satisfy the same contract;
-    # the tws path skips where its protobuf runtime dep is absent.
-    if impl == "tws" and not st.tws_available():
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf at runtime "
-            "(absent in this sandbox; no network to install)"
-        )
     tmp = tempfile.mkdtemp()
     ev = _batch_events(spark).limit(300).repartition(3)
     ev.write.mode("overwrite").parquet(os.path.join(tmp, "in"))
@@ -86,9 +77,9 @@ def test_stateful_politeness_across_batches(spark, impl):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(tmp, "in"))
     )
-    out = st.stateful_politeness(stream, tokens_per_host=40, impl=impl)
-    st.drain_to_memory(out, f"t_budget_{impl}", output_mode="update")
-    rows = spark.table(f"t_budget_{impl}").collect()
+    out = st.stateful_politeness(stream, tokens_per_host=40)
+    st.drain_to_memory(out, "t_budget", output_mode="update")
+    rows = spark.table("t_budget").collect()
     assert len(rows) > 0
     per_host: dict[str, dict] = {}
     for r in rows:
@@ -374,7 +365,7 @@ def test_stateful_politeness_null_ts_chunk_does_not_poison_batch_ts(
         .option("latestFirst", "false")
         .parquet(os.path.join(in_dir, "*"))
     )
-    out = st.stateful_politeness(stream, tokens_per_host=100, impl="apply")
+    out = st.stateful_politeness(stream, tokens_per_host=100)
     st.drain_to_memory(out, "t_nat_budget", output_mode="update")
     rows = sorted(
         spark.table("t_nat_budget").collect(), key=lambda r: r["n_requested"]

@@ -15,7 +15,7 @@ round, because
     round-1 build),
   - the exact seen anti-join is file-probed (never shuffles the seen
     side),
-  - the frontier is in LSM append mode (O(Δ) commits + tombstones).
+  - the frontier is an LSM append table (O(Δ) commits + tombstones).
 
 Usage: python tools/designpoint_run.py [n_seen] [n_frontier] [rounds]
                                        [bloom_capacity_factor]
@@ -94,7 +94,6 @@ def main() -> None:
             use_bloom=True,            # real thresholds — nothing forced:
             # bloom_min_keys=50k and seen_join_file_min_keys=50M
             # both trip at n_seen=60M
-            frontier_mode="append",
             default_budget=400,
             budget_rows=[],
             max_depth=8,
@@ -243,7 +242,6 @@ def main() -> None:
                 "bloom_engaged": n_seen >= cfg.bloom_min_keys,
                 "seen_join_file_threshold": cfg.seen_join_file_min_keys,
                 "seen_join_file_engaged": n_seen >= cfg.seen_join_file_min_keys,
-                "frontier_mode": cfg.frontier_mode,
             },
             "bloom_capacity_factor": bloom_factor,
             "maintenance_events": events,

@@ -12,8 +12,11 @@ trace / lineage):
   7. links: explode + canon (U1) + score (U2) + scheme/depth filter
      + T1 deterministic batch dedup + (optional bloom prefilter) +
      J1 exact anti-join vs seen
-  8. commit: seen += new links, frontier = residual ∪ new links,
-     lineage += per-partition metrics
+  8. commit: seen += new links, frontier += new links, fetched +=
+     the keys this round consumed (tombstones), lineage +=
+     per-partition metrics; every ``compact_frontier_every`` rounds
+     the pending set (frontier minus tombstones) is rewritten and the
+     tombstones reset
 
 Determinism contract (SURVEY.md §7 hard part 1): ordering key =
 (relevance_q desc, depth, discovery_time, discovery_seq) — all
@@ -133,19 +136,14 @@ class CrawlConfig:
     # size, and an append-only table accumulating O(rounds) files per
     # hash range would erode that bound (round-3 ADVICE).
     compact_seen_every: int = 0
-    # frontier maintenance mode.  "replace" (default): each round
-    # commits the full residual ∪ new-links frontier — simple, but an
-    # O(frontier) rewrite per round, which at the 10^10-row design
-    # point dwarfs the actual per-round delta (new links + budget).
-    # "append" (LSM-style): the frontier table is append-only (new
-    # links per round) plus a fetched/blocked tombstone-keys table;
-    # the pending set is resolved at read time by the same zero-shuffle
-    # file-probed anti-join the seen set uses, and every
-    # ``compact_frontier_every`` rounds the materialized pending set
-    # replace-commits both tables — so per-round write cost is
-    # O(delta), amortized O(frontier / K) for maintenance.  Results
-    # identical (trace test pins it, including through a compaction).
-    frontier_mode: str = "replace"
+    # LSM frontier: the frontier table is append-only (new links per
+    # round) plus a fetched/blocked tombstone-keys table; the pending
+    # set is resolved at read time by the same zero-shuffle file-probed
+    # anti-join the seen set uses.  Every K rounds the materialized
+    # pending set replace-commits both tables — so per-round write cost
+    # is O(delta), amortized O(frontier / K) for maintenance (0 = never
+    # compact).  Results identical for any K (trace test pins it,
+    # including through a compaction).
     compact_frontier_every: int = 8
     # robots crawl-delay enforcement: when > 0, each host's effective
     # per-round budget is additionally capped at
@@ -162,6 +160,16 @@ class CrawlConfig:
     # not change between rounds; rebuilding + re-broadcasting them
     # every round is pure serial driver overhead)
     _dims: dict = field(default_factory=dict, repr=False, compare=False)
+
+    def __post_init__(self) -> None:
+        # every layout places rows by the top log2(n_shards) bits of
+        # url_hash (operators.dedup.shard_ids); reject a bad value here,
+        # not mid-round after some of the round's tables have committed
+        n = self.n_shards
+        if not (isinstance(n, int) and n > 0 and n & (n - 1) == 0):
+            raise ValueError(
+                f"CrawlConfig.n_shards must be a positive power of two, got {n!r}"
+            )
 
     def table(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -389,11 +397,7 @@ def _crawl_round_impl(
     )
     n_frontier_rows = frontier_manifest["row_count"]
     fetched_tbl = cfg.table("fetched")
-    tomb_snap_id = (
-        _snap_as_of(fetched_tbl, round_n - 1)
-        if cfg.frontier_mode == "append"
-        else None
-    )
+    tomb_snap_id = _snap_as_of(fetched_tbl, round_n - 1)
     tomb_manifest = (
         icelite.read_manifest(fetched_tbl, tomb_snap_id) if tomb_snap_id else None
     )
@@ -793,7 +797,7 @@ def _crawl_round_impl(
     new_links = new_links.repartitionByRange(cfg.n_shards, "url_hash").cache()
     caches.append(new_links)
 
-    # 8. commits: seen += new, frontier = residual ∪ new
+    # 8. commits: seen += new, frontier += new, fetched += consumed
     # (n_new comes free from the append-commit's manifest delta; each
     # append is guarded by _round_committed so a crash re-run never
     # double-appends)
@@ -837,81 +841,57 @@ def _crawl_round_impl(
         # reads there (_snap_as_of)
         icelite.expire_snapshots(cfg.table("seen"), keep_last=3)
     mark("seen")
-    if cfg.frontier_mode == "append":
-        # LSM write path: O(delta) commits — tombstones for the rows
-        # this round consumed (fetched + robots-blocked, matching the
-        # replace-mode residual which keeps only allowed-minus-selected)
-        # and an append of the new links.  No O(frontier) rewrite.
-        tombs = (
-            gated.filter(~F.col("robots_allowed"))
-            .select("url_canon", "url_hash")
-            .unionByName(selected.select("url_canon", "url_hash"))
-            .repartitionByRange(cfg.n_shards, "url_hash")
+    # LSM write path: O(delta) commits — tombstones for the rows
+    # this round consumed (fetched + robots-blocked; what stays pending
+    # is the allowed rows the budget did not select) and an append of
+    # the new links.  No O(frontier) rewrite.
+    tombs = (
+        gated.filter(~F.col("robots_allowed"))
+        .select("url_canon", "url_hash")
+        .unionByName(selected.select("url_canon", "url_hash"))
+        .repartitionByRange(cfg.n_shards, "url_hash")
+    )
+    if not _round_committed(fetched_tbl, round_n):
+        icelite.commit(tombs, fetched_tbl, round_n, mode="append")
+    if not _round_committed(cfg.table("frontier"), round_n):
+        frontier_snap = icelite.commit(
+            new_links.select(*[f.name for f in FRONTIER.fields]),
+            cfg.table("frontier"),
+            round_n,
+            mode="append",
         )
-        if not _round_committed(fetched_tbl, round_n):
-            icelite.commit(tombs, fetched_tbl, round_n, mode="append")
-        if not _round_committed(cfg.table("frontier"), round_n):
-            frontier_snap = icelite.commit(
-                new_links.select(*[f.name for f in FRONTIER.fields]),
-                cfg.table("frontier"),
-                round_n,
-                mode="append",
-            )
-        else:
-            frontier_snap = icelite.latest_snapshot_id(cfg.table("frontier"))
-        if (
-            cfg.compact_frontier_every
-            and round_n % cfg.compact_frontier_every == 0
-            and not _compaction_done(cfg.table("frontier"), round_n)
-        ):
-            # materialize the pending view and restart both chains —
-            # amortized O(frontier / K); result-invariant (trace test)
-            pend = _anti_join_snapshot(
-                spark, icelite.read_snapshot(spark, cfg.table("frontier")),
-                fetched_tbl,
-            )
-            frontier_snap = icelite.commit(
-                pend.repartitionByRange(cfg.n_shards, "url_hash"),
-                cfg.table("frontier"),
-                round_n,
-                meta={"compacted": True},
-                mode="replace",
-            )
-            icelite.commit(
-                spark.createDataFrame(
-                    [], "url_canon string, url_hash long"
-                ).repartition(1),
-                fetched_tbl,
-                round_n,
-                mode="replace",
-            )
-            # keep_last=3: see the seen-table expiry note (crash
-            # re-runs pin reads to the r-1 snapshots)
-            icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
-            icelite.expire_snapshots(fetched_tbl, keep_last=3)
     else:
-        residual = allowed.join(
-            selected.select("url_canon"), "url_canon", "left_anti"
-        ).select(*[f.name for f in FRONTIER.fields])
-        new_frontier = residual.unionByName(new_links).repartitionByRange(
-            cfg.n_shards, "url_hash"
+        frontier_snap = icelite.latest_snapshot_id(cfg.table("frontier"))
+    if (
+        cfg.compact_frontier_every
+        and round_n % cfg.compact_frontier_every == 0
+        and not _compaction_done(cfg.table("frontier"), round_n)
+    ):
+        # materialize the pending view and restart both chains —
+        # amortized O(frontier / K); result-invariant (trace test)
+        pend = _anti_join_snapshot(
+            spark, icelite.read_snapshot(spark, cfg.table("frontier")),
+            fetched_tbl,
         )
-        # same crash-re-run guard as every other per-round commit: the
-        # content would be identical (pinned reads), but an unguarded
-        # re-run wastes an O(frontier) rewrite and stacks a redundant
-        # same-round snapshot whose superseded files replace mode never
-        # expires
-        if not _round_committed(cfg.table("frontier"), round_n):
-            frontier_snap = icelite.commit(
-                new_frontier, cfg.table("frontier"), round_n, mode="replace"
-            )
-            # replace mode rewrites the whole frontier each round, so
-            # without expiry storage grows O(rounds x frontier);
-            # keep_last=3 preserves the r-1 snapshot crash re-runs pin
-            # (same policy as the seen table and the LSM branch)
-            icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
-        else:
-            frontier_snap = icelite.latest_snapshot_id(cfg.table("frontier"))
+        frontier_snap = icelite.commit(
+            pend.repartitionByRange(cfg.n_shards, "url_hash"),
+            cfg.table("frontier"),
+            round_n,
+            meta={"compacted": True},
+            mode="replace",
+        )
+        icelite.commit(
+            spark.createDataFrame(
+                [], "url_canon string, url_hash long"
+            ).repartition(1),
+            fetched_tbl,
+            round_n,
+            mode="replace",
+        )
+        # keep_last=3: see the seen-table expiry note (crash
+        # re-runs pin reads to the r-1 snapshots)
+        icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
+        icelite.expire_snapshots(fetched_tbl, keep_last=3)
     mark("frontier")
 
     # lineage: per-partition fetch metrics + a round-total row (S7)

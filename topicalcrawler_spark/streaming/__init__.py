@@ -117,27 +117,9 @@ _BUDGET_OUT = T.StructType(
 _BUDGET_STATE = T.StructType([T.StructField("tokens", T.LongType())])
 
 
-def tws_available() -> bool:
-    """Whether ``transformWithStateInPandas`` can actually RUN here.
-
-    The API exists in PySpark 4.1, but its driver-side state server
-    speaks protobuf (``google.protobuf``) — a runtime dependency this
-    sandbox does not ship (verified: the query crashes with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE / ImportError on
-    google.protobuf; no network to install it).  On a normal cluster
-    with protobuf present the preferred path below engages
-    automatically."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _drain_bucket_chunks(pdfs) -> tuple[int, object]:
     """Fold a group's Arrow chunks into (n_requested, max non-null ts)
-    — the shared per-batch reduction of BOTH ST6 implementations.
+    — the per-batch reduction of the ST6 token bucket.
 
     NaT-safe: a chunk whose ts column is all NULL (or empty) simply
     does not contribute — pandas ``max(NaT, ts)`` is order-dependent
@@ -154,77 +136,16 @@ def _drain_bucket_chunks(pdfs) -> tuple[int, object]:
     return n_req, max_ts
 
 
-def stateful_politeness_tws(
-    stream: DataFrame,
-    tokens_per_host: int = 100,
-    host_col: str = "event_type",
-) -> DataFrame:
-    """ST6 (preferred API) — the same per-host token bucket on
-    ``transformWithStateInPandas`` (SURVEY §2.I names this primary).
-    Semantics identical to the applyInPandasWithState fallback: one
-    output row per (host, batch), admitting at most the tokens left.
-    Requires ``tws_available()`` (protobuf at runtime)."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _TokenBucket(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._tokens = handle.getValueState("tokens", _BUDGET_STATE)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (host,) = key
-            tokens = (
-                self._tokens.get()[0]
-                if self._tokens.exists()
-                else tokens_per_host
-            )
-            n_req, max_ts = _drain_bucket_chunks(rows)
-            admitted = min(n_req, tokens)
-            tokens -= admitted
-            self._tokens.update((tokens,))
-            yield pd.DataFrame(
-                {
-                    "host": [host],
-                    "batch_ts": [max_ts],
-                    "n_requested": [n_req],
-                    "n_admitted": [admitted],
-                    "tokens_left": [tokens],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.withColumn("host", F.col(host_col)).groupBy(
-        "host"
-    ).transformWithStateInPandas(
-        _TokenBucket(),
-        outputStructType=_BUDGET_OUT,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
 def stateful_politeness(
     stream: DataFrame,
     tokens_per_host: int = 100,
     host_col: str = "event_type",
-    impl: str = "auto",
 ) -> DataFrame:
-    """ST6 — per-host token bucket across micro-batches.  Each group's
-    state is its remaining token count; a batch admits at most the
-    tokens left.  State is keyed by HOST (bounded cardinality —
-    SURVEY.md §7 hard part 6: URL-grain state lives only in the seen
-    table, never here).
-
-    ``impl``: 'auto' uses the ``applyInPandasWithState`` path — the one
-    whose cross-batch parity test has actually EXECUTED (the tws leg
-    skips in this sandbox: no protobuf, so its runtime behavior is
-    unverified here).  'tws' forces ``transformWithStateInPandas`` —
-    opt in once the parity test has run on a protobuf-equipped cluster
-    (the test is parametrized over both impls and engages
-    automatically there); 'apply' forces the fallback explicitly."""
-    if impl == "tws":
-        return stateful_politeness_tws(stream, tokens_per_host, host_col)
+    """ST6 — per-host token bucket across micro-batches, on
+    ``applyInPandasWithState``.  Each group's state is its remaining
+    token count; a batch admits at most the tokens left.  State is
+    keyed by HOST (bounded cardinality — SURVEY.md §7 hard part 6:
+    URL-grain state lives only in the seen table, never here)."""
 
     def bucket(key, pdfs, state: GroupState):
         (host,) = key
