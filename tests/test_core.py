@@ -206,10 +206,34 @@ def test_relevance_integer_and_deterministic():
     assert score_q("spark crawl frontier") > score_q("pebble umbrella violin")
 
 
+@pytest.mark.parametrize("n_shards", [1, 2, 4, 16, 1024])
+def test_shard_col_matches_shard_ids(spark, n_shards):
+    """The Spark shard function places rows where the numpy one probes
+    them, on random int64 keys of both signs and the extremes.  n=1
+    pins the ``lit(0)`` case: Spark's 64-bit unsigned shift returns
+    its input unchanged."""
+    from topicalcrawler_spark.operators.dedup import shard_col, shard_ids
+
+    rng = np.random.default_rng(n_shards)
+    keys = rng.integers(-(1 << 63), (1 << 63) - 1, size=2000, dtype=np.int64)
+    keys = np.concatenate(
+        [keys, np.array([-(1 << 63), -5, -1, 0, 1, (1 << 63) - 1], dtype=np.int64)]
+    )
+    assert (keys < 0).any() and (keys > 0).any()
+    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
+    got = {
+        r["url_hash"]: r["sid"]
+        for r in df.select("url_hash", shard_col("url_hash", n_shards).alias("sid"))
+        .collect()
+    }
+    want = shard_ids(keys, n_shards)
+    assert [got[int(k)] for k in keys] == want.tolist()
+
+
 def test_probe_batches_loads_only_touched_shards():
     """The distributed-bitmap probe must pull exactly the shards its
-    keys map to (1-2 per task when links are url_hash-range
-    partitioned) — the property that makes the file-based path
+    keys map to (one per task when links are placed by
+    ``place_by_shard``) — the property that makes the file-based path
     O(bitmap x shards-touched) per task instead of O(all shards)."""
     import pandas as pd
 

@@ -390,7 +390,7 @@ def test_resume_equivalence(spark, tmp_path, restart):
 
 def test_seen_compaction_is_result_invariant(spark, tmp_path):
     """compact_seen_every rewrites the seen table mid-crawl (fewer,
-    range-clustered files + expiry of superseded snapshots) — a purely
+    shard-placed files + expiry of superseded snapshots) — a purely
     physical maintenance op that must not change one trace row or seen
     URL, and must actually shrink the table's file count."""
     import os
@@ -413,6 +413,49 @@ def test_seen_compaction_is_result_invariant(spark, tmp_path):
     # on top of it
     assert len(files) <= cfg.n_shards * 3
     assert all(os.path.exists(f) for f in files)
+
+
+def test_every_table_file_holds_one_shard(spark, tmp_path):
+    """Every url_hash-keyed table is placed by the one shard function
+    (``operators.dedup.place_by_shard``): each data file of seen,
+    frontier and fetched holds one top-bits shard (its manifest
+    url_hash min and max map to the same ``shard_ids`` value), and no
+    two files of one commit share a shard.  Benchmark crawl settings:
+    bloom and file-probed join forced on, both tables compacted every
+    round, checked after two rounds over every live commit."""
+    import numpy as np
+
+    from topicalcrawler_spark import icelite
+    from topicalcrawler_spark.operators.dedup import shard_ids
+
+    n_shards = 4
+    _, _, cfg = _spark_crawl(
+        spark, tmp_path, 2,
+        n_shards=n_shards, max_depth=4, default_budget=60, budget_rows=[],
+        use_bloom=True, bloom_min_keys=0, seen_join_file_min_keys=0,
+        compact_seen_every=1, compact_frontier_every=1,
+    )
+    for table in ("seen", "frontier", "fetched"):
+        n_files = 0
+        for m in icelite.history(cfg.table(table)):
+            own = [
+                f for f in m["files"]
+                if os.path.dirname(f) == os.path.normpath(m["data_dir"])
+            ]
+            sids = []
+            for f in own:
+                lo, hi = shard_ids(
+                    np.array(m["file_stats"][f], dtype=np.int64), n_shards
+                )
+                assert lo == hi, (
+                    f"{table} snap {m['snapshot_id']}: {f} spans shards {lo}..{hi}"
+                )
+                sids.append(int(lo))
+            assert len(sids) == len(set(sids)), (
+                f"{table} snap {m['snapshot_id']}: files share a shard {sorted(sids)}"
+            )
+            n_files += len(own)
+        assert n_files > 0, f"{table}: no data files checked"
 
 
 @pytest.mark.parametrize(

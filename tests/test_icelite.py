@@ -204,6 +204,8 @@ def test_manifest_file_stats_and_hash_index(spark, tmp_path):
     tables without the column."""
     from pyspark.sql import functions as F
 
+    from topicalcrawler_spark.operators.dedup import shard_col
+
     t = str(tmp_path / "seen")
     df = (
         spark.range(1000)
@@ -228,7 +230,9 @@ def test_manifest_file_stats_and_hash_index(spark, tmp_path):
     idx2 = icelite.file_hash_index(t)
     assert idx2 is not None and len(idx2) > len(idx)
 
-    icelite.compact(spark, t, round_n=2, range_cols=["url_hash"], target_files=2)
+    icelite.compact(
+        spark, t, round_n=2, partition_id=shard_col("url_hash", 2), target_files=2
+    )
     idx3 = icelite.file_hash_index(t)
     assert idx3 is not None and len(idx3) <= 4
 

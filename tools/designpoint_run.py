@@ -74,6 +74,7 @@ def main() -> None:
         relevance_expr,
         url_hash_expr,
     )
+    from topicalcrawler_spark.operators.dedup import place_by_shard
     from topicalcrawler_spark.plans.round import CrawlConfig, crawl_round
     from topicalcrawler_spark.schemas import FRONTIER
     from topicalcrawler_spark.session import get_spark
@@ -113,7 +114,7 @@ def main() -> None:
             F.lit(".test/p/"),
             F.lpad(F.lower(F.hex(idc)), 12, "0"),
         )
-        frontier0 = (
+        frontier0 = place_by_shard(
             spark.range(n_frontier)
             .select(
                 idc.alias("_id"),
@@ -145,8 +146,8 @@ def main() -> None:
             .withColumn("parent_url", F.lit(None).cast("string"))
             .withColumn("round", F.lit(0))
             .withColumn("status", F.lit("pending"))
-            .select(*[f.name for f in FRONTIER.fields])
-            .repartitionByRange(cfg.n_shards, "url_hash")
+            .select(*[f.name for f in FRONTIER.fields]),
+            cfg.n_shards,
         )
         icelite.commit(frontier0, cfg.table("frontier"), 0, mode="replace")
         # seen = frontier keys (admission-time seen, as init_crawl does)
@@ -163,11 +164,11 @@ def main() -> None:
             )
             .withColumn("url_hash", url_hash_expr("url_canon"))
         )
-        seen0 = (
+        seen0 = place_by_shard(
             icelite.read_snapshot(spark, cfg.table("frontier"))
             .select("url_canon", "url_hash")
-            .unionByName(history_keys)
-            .repartitionByRange(cfg.n_shards, "url_hash")
+            .unionByName(history_keys),
+            cfg.n_shards,
         )
         icelite.commit(seen0, cfg.table("seen"), 0, mode="replace")
         synth_wall = round(time.monotonic() - t_synth, 2)

@@ -55,15 +55,6 @@ def shingles_expr(text: str | Column = "text", n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles_sql(text: str, n: int = 3) -> str:
-    """DuckDB twin of shingles_expr over a column expression ``text``."""
-    toks = f"string_split({text}, ' ')"
-    return (
-        f"list_transform(range(0, greatest(len({toks})-{n - 1}, 0)), "
-        f"i -> array_to_string(({toks})[i+1:i+{n}], ' '))"
-    )
-
-
 def chunk_explode(
     df, sig_col: str, id_col: str, n_chunks: int, chunk_bits: int
 ):

@@ -382,10 +382,11 @@ def ivf_neardup(
     each other in vectorized numpy and emits ONLY the pairs surviving
     the threshold prefilter.  Remaining shuffles: the one cell-key
     exchange (unavoidable — it IS the bucketing) and a distinct over
-    surviving pairs (output-sized, not candidate-sized).  Per-cell
-    memory is bounded regardless of quantizer skew: rows are scored in
+    surviving pairs (output-sized, not candidate-sized).  Only the dot
+    block is bounded regardless of quantizer skew (rows are scored in
     chunks of ~2²² / cell_size against the strictly-greater suffix, so
-    the dot block never exceeds ~32 MB.
+    it stays under ~32 MB); the per-group embedding stack is not, and
+    under ``auto_cells`` it grows as nprobe·√n rows.
 
     Dots are bit-identical to ``cosine_neardup``'s for a shared pair:
     the block dot is an ascending-j rank-1 fold (element-order

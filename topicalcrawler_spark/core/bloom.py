@@ -10,11 +10,11 @@ the exact anti-join is the correctness authority, SURVEY.md §7 hard
 part 2).
 
 "Broadcast + per-partition shards" is met by one distribution mode
-(``operators.dedup``): the bitmaps are per-shard, keyed by url_hash
-range (top hash bits, aligned with the seen table's range
-partitioning), and live as partition-local parquet files.  Only the
-shard directory is broadcast; every probe task reads the 1-2 shards its
-url_hash range touches, and no bitmap transits the driver.
+(``operators.dedup``): the bitmaps are per-shard, keyed by the top
+url_hash bits (the same shard function that places the seen table and
+the probed links), and live as partition-local parquet files.  Only the
+shard directory is broadcast; every probe task reads the one shard its
+partition holds, and no bitmap transits the driver.
 
 Bloom is append-only: the north-rule's seen-set never deletes, which is
 why a cuckoo filter's delete support buys nothing here (SURVEY.md §2

@@ -17,8 +17,6 @@ from __future__ import annotations
 import zlib
 from hashlib import blake2b
 
-_MASK64 = (1 << 64) - 1
-
 
 def stable64u(s: str) -> int:
     """Unsigned 64-bit deterministic hash of a string (blake2b/8)."""
@@ -34,11 +32,3 @@ def stable64(s: str) -> int:
 def token_bucket(token: str, nbuckets: int) -> int:
     """Hash a token into a relevance-model bucket (crc32, stdlib, fast)."""
     return zlib.crc32(token.encode("utf-8")) % nbuckets
-
-
-def mix64(v: int, salt: int) -> int:
-    """Cheap xorshift-multiply mixer for deriving k bloom probe positions."""
-    v = (v ^ salt) & _MASK64
-    v = (v ^ (v >> 33)) * 0xFF51AFD7ED558CCD & _MASK64
-    v = (v ^ (v >> 33)) * 0xC4CEB9FE1A85EC53 & _MASK64
-    return (v ^ (v >> 33)) & _MASK64

@@ -48,7 +48,7 @@ import secrets
 from glob import glob
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 class CommitConflict(Exception):
@@ -609,7 +609,7 @@ def compact(
     spark: SparkSession,
     table_dir: str,
     round_n: int,
-    range_cols: list[str] | None = None,
+    partition_id: Column | None = None,
     target_files: int | None = None,
 ) -> int:
     """Iceberg ``rewriteDataFiles`` analogue: rewrite the LATEST
@@ -623,9 +623,9 @@ def compact(
     on EVERY subsequent scan of the table (the seen-set is re-read each
     round for the anti-join).  Compaction restores O(target_files).
 
-    ``range_cols``: repartitionByRange on these columns (keeps the
-    seen-set's url_hash-range clustering so the bloom shard alignment
-    and range pruning survive compaction); plain round-robin otherwise.
+    ``partition_id``: an int expression placing each row's output file
+    (``repartitionById``) — the crawl passes its url_hash shard function
+    so file i stays shard i; plain round-robin otherwise.
     """
     # ONE pointer read pins everything: the snapshot compacted, the
     # epoch meta carried forward, and the commit's expected parent.
@@ -639,8 +639,8 @@ def compact(
     df = read_snapshot(spark, table_dir, parent)
     if target_files is None:
         target_files = max(spark.sparkContext.defaultParallelism, 4)
-    if range_cols:
-        df = df.repartitionByRange(target_files, *range_cols)
+    if partition_id is not None:
+        df = df.repartitionById(target_files, partition_id)
     else:
         df = df.repartition(target_files)
     meta: dict = {"compacted": True}

@@ -14,12 +14,13 @@ silently drop URLs the reference fetches).  Architecture:
            bound makes pure-hash joins wrong).
 
 The spec's "broadcast + per-partition shards" filter has ONE form here:
-shard bitmaps keyed by url_hash range (``shard_ids``: top hash bits,
-aligned with the seen table's range partitioning) are written as
-partition-local parquet files straight from their merge tasks
-(``write_bloom_shard_files``, ``update_bloom_shard_files``).  What is
-broadcast is only the shard directory path; every probe task reads the
-1-2 shards its url_hash range touches (``bloom_prefilter_files``), so no
+shard bitmaps keyed by the top url_hash bits (``shard_ids``) are written
+as partition-local parquet files straight from their merge tasks
+(``write_bloom_shard_files``, ``update_bloom_shard_files``).  The same
+shard function places every url_hash-keyed table and the crawl's
+candidates (``place_by_shard``), so table file i is bloom shard i is
+probe task i: what is broadcast is only the shard directory path, each
+probe task reads its one shard (``bloom_prefilter_files``), and no
 bitmap ever transits the driver, at any seen-set size.
 """
 
@@ -29,7 +30,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -40,13 +41,12 @@ from ..functions import order_cols
 def shard_ids(keys: np.ndarray, n_shards: int) -> np.ndarray:
     """Shard assignment = top log2(n_shards) bits of the unsigned
     url_hash.  Computable from the key alone (the probe side needs
-    that) AND aligned with the seen table's url_hash RANGE partitioning
-    — so one partition overlaps only ~1-2 shards, which is what lets
-    the builder keep just a couple of partial bitmaps per task.
-    n_shards must be a power of two — asserted HERE (not only in
-    the build) so a probe-side caller with a mismatched
-    n_shards fails fast instead of silently truncating log2 (and
-    n_shards=1 never reaches an undefined 64-bit numpy shift)."""
+    that), and the same function ``shard_col`` computes in Spark — so
+    a table file or probe partition placed by ``place_by_shard`` holds
+    exactly one shard.  n_shards must be a power of two — asserted
+    HERE (not only in the build) so a probe-side caller with a
+    mismatched n_shards fails fast instead of silently truncating log2
+    (and n_shards=1 never reaches an undefined 64-bit numpy shift)."""
     assert n_shards > 0 and n_shards & (n_shards - 1) == 0, "power of two"
     if n_shards == 1:
         return np.zeros(len(keys), dtype=np.int64)
@@ -54,6 +54,21 @@ def shard_ids(keys: np.ndarray, n_shards: int) -> np.ndarray:
     return (
         np.ascontiguousarray(keys.astype(np.int64)).view(np.uint64) >> shift
     ).astype(np.int64)
+
+
+def shard_col(url_hash: str | Column, n_shards: int) -> Column:
+    """``shard_ids`` as an int Spark expression.  n_shards=1 is
+    ``lit(0)``: Spark's ``shiftrightunsigned(x, 64)`` returns x."""
+    assert n_shards > 0 and n_shards & (n_shards - 1) == 0, "power of two"
+    if n_shards == 1:
+        return F.lit(0)
+    return F.shiftrightunsigned(url_hash, 64 - int(math.log2(n_shards))).cast("int")
+
+
+def place_by_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    """Partition i = url_hash shard i.  The ids are computed, so unlike
+    a range exchange this runs no sampling job."""
+    return df.repartitionById(n_shards, shard_col("url_hash", n_shards))
 
 
 def dedup_batch(links: DataFrame, order: list | None = None) -> DataFrame:
@@ -99,20 +114,21 @@ def anti_join_seen_files(
     seen set is the big one), so past broadcast size Spark plans a
     sort-merge join that SHUFFLES the full 10^10-row seen table every
     round — the single largest per-round data movement at the design
-    point.  But the seen table's files are url_hash-range-clustered
-    (every commit goes through repartitionByRange, compaction preserves
-    it) and the manifest records per-file url_hash [min,max]
-    (icelite commit footer stats — the Iceberg manifest-stats
+    point.  But the seen table's files are url_hash-clustered (every
+    commit and compaction goes through ``place_by_shard``, so each file
+    holds one shard) and the manifest records per-file url_hash
+    [min,max] (icelite commit footer stats — the Iceberg manifest-stats
     analogue).  So each probe task can read ONLY the seen files
     overlapping its batch's url_hash range and anti-merge locally:
     the seen side is read once, never shuffled, never sorted.
 
     ``file_index``: [(path, min_hash, max_hash)] from the manifest —
     O(n_files) metadata, broadcast with the closure.  Callers should
-    range-partition ``links`` by url_hash first so a task overlaps
-    O(n_files/n_partitions + 1) files.  Exactness: membership is tested
-    on the full (url_hash, url_canon) pair via a vectorized indicator
-    merge — identical semantics to ``anti_join_seen`` (collision-safe).
+    place ``links`` with ``place_by_shard`` so task i overlaps only
+    shard i's files (the pruning is exact on any layout).  Exactness:
+    membership is tested on the full (url_hash, url_canon) pair via a
+    vectorized indicator merge — identical semantics to
+    ``anti_join_seen`` (collision-safe).
 
     Per-task memory bound: the probe side is ADDITIONALLY sorted within
     each partition by url_hash, so a task's Arrow batches arrive in
@@ -220,9 +236,9 @@ def bloom_prefilter_files(
     possible hits must go through it (it is the authority).
 
     The bitmaps never transit the driver: each probe task lazily reads
-    ONLY the shards its url_hash range touches (shard = top url_hash
-    bits = the seen table's range-partitioning key, so that is 1-2
-    files per task), caching them for the task's remaining batches.
+    ONLY the shards its keys map to (shard = top url_hash bits; links
+    placed by ``place_by_shard`` make that exactly one file per task),
+    caching them for the task's remaining batches.
     At the 10^10-key design point that is O(bitmap × shards-touched)
     per executor read from shared storage (on a cluster, ``shard_dir``
     is an HDFS/S3 path).  A shard with no keys has no file and probes

@@ -62,6 +62,8 @@ from ..operators.dedup import (
     anti_join_seen_files,
     bloom_prefilter_files,
     dedup_batch,
+    place_by_shard,
+    shard_col,
     update_bloom_shard_files,
     write_bloom_shard_files,
 )
@@ -91,9 +93,9 @@ class CrawlConfig:
     n_shards: int = 16
     salt: int = 8
     # bloom prefilter (operators.dedup): shard bitmaps at fpp=0.01,
-    # written as partition-local parquet files keyed by url_hash range
-    # and probed in place (1-2 shard reads per task) — no bitmap ever
-    # transits the driver, at any seen-set size.
+    # written as partition-local parquet files keyed by the top url_hash
+    # bits and probed in place (one shard read per task) — no bitmap
+    # ever transits the driver, at any seen-set size.
     use_bloom: bool = False
     # bloom crossover: below this seen-set size the prefilter's two
     # extra python jobs cost more than the exact anti-join they would
@@ -106,11 +108,10 @@ class CrawlConfig:
     # sort-merge shuffle of the full seen table (the single largest
     # per-round data movement at 10^10 keys — left-anti cannot
     # broadcast its right side) is replaced by the file-probed join
-    # (operators.dedup.anti_join_seen_files): links are range-
-    # partitioned by url_hash and each task reads ONLY the seen files
-    # overlapping its range, via the manifest's commit-time per-file
-    # url_hash stats.  Results identical (trace test pins it by forcing
-    # seen_join_file_min_keys=0).
+    # (operators.dedup.anti_join_seen_files): links are placed by url_hash
+    # shard and probe task i reads ONLY the seen files of shard i, found
+    # via the manifest's commit-time per-file url_hash stats.  Results
+    # identical (trace test pins it by forcing seen_join_file_min_keys=0).
     seen_join_file_min_keys: int = 50_000_000
     # bloom rebuild TRIGGER headroom: a full rebuild fires when n_seen
     # outgrows capacity = n_seen_at_build * bloom_capacity_factor.
@@ -134,7 +135,7 @@ class CrawlConfig:
     # becomes MANDATORY every ``AUTO_COMPACT_SEEN_EVERY`` rounds: the
     # probe's per-task memory is bounded by compaction's target file
     # size, and an append-only table accumulating O(rounds) files per
-    # hash range would erode that bound (round-3 ADVICE).
+    # shard would erode that bound (round-3 ADVICE).
     compact_seen_every: int = 0
     # LSM frontier: the frontier table is append-only (new links per
     # round) plus a fetched/blocked tombstone-keys table; the pending
@@ -163,7 +164,7 @@ class CrawlConfig:
 
     def __post_init__(self) -> None:
         # every layout places rows by the top log2(n_shards) bits of
-        # url_hash (operators.dedup.shard_ids); reject a bad value here,
+        # url_hash (operators.dedup.shard_col); reject a bad value here,
         # not mid-round after some of the round's tables have committed
         n = self.n_shards
         if not (isinstance(n, int) and n > 0 and n & (n - 1) == 0):
@@ -238,9 +239,8 @@ def init_crawl(spark: SparkSession, cfg: CrawlConfig, seeds_path: str) -> None:
             init_caches,
         )
         .select(*[f.name for f in FRONTIER.fields])
-        .repartitionByRange(cfg.n_shards, "url_hash")
     )
-    frontier0 = frontier0.cache()
+    frontier0 = place_by_shard(frontier0, cfg.n_shards).cache()
     try:
         # idempotent, same discipline as crawl_round's commits: init is
         # TWO commits, and a crash between them must be repairable —
@@ -269,8 +269,8 @@ def _ensure_seen_initialized(spark: SparkSession, cfg: CrawlConfig) -> None:
         spark, cfg.table("frontier"), _snap_as_of(cfg.table("frontier"), 0)
     )
     icelite.commit(
-        f0.select("url_canon", "url_hash"), cfg.table("seen"), 0,
-        mode="replace",
+        place_by_shard(f0.select("url_canon", "url_hash"), cfg.n_shards),
+        cfg.table("seen"), 0, mode="replace",
     )
 
 
@@ -331,24 +331,27 @@ def _anti_join_snapshot(
     table_dir: str,
     snap_id: int | None = None,
     probe_files: bool = True,
-    n_ranges: int = 0,
 ) -> DataFrame:
     """``df`` minus the (url_hash, url_canon) keys of an icelite table
     snapshot (latest when ``snap_id`` is None) — exact and
     collision-safe either way.  With ``probe_files`` the table's own
-    url_hash-range-clustered files are probed in place, pruned by the
-    manifest's per-file url_hash stats (``anti_join_seen_files``: zero
-    shuffle of the table side); ``n_ranges`` > 0 first range-partitions
-    ``df`` by url_hash so a probe task overlaps few files.  Without
-    stats (a foreign or pre-stats manifest) it falls back to a plain
-    left-anti join against the snapshot — never to skipping the join,
-    which would resurrect rows the table was meant to remove."""
+    shard-placed files are probed in place, pruned by the manifest's
+    per-file url_hash stats (``anti_join_seen_files``: zero shuffle of
+    the table side); a ``df`` placed by ``place_by_shard`` makes probe
+    task i read only shard i's files.  Without stats (a foreign or
+    pre-stats manifest) it falls back to a plain left-anti join
+    against the snapshot — never to skipping the join, which would
+    resurrect rows the table was meant to remove."""
     index = icelite.file_hash_index(table_dir, snap_id) if probe_files else None
     if index is None:
         return anti_join_seen(df, icelite.read_snapshot(spark, table_dir, snap_id))
-    if n_ranges:
-        df = df.repartitionByRange(n_ranges, "url_hash")
     return anti_join_seen_files(df, index)
+
+
+def _reset_tombstones(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> None:
+    """Replace-commit an empty tombstone table at ``round_n``."""
+    empty = spark.createDataFrame([], "url_canon string, url_hash long")
+    icelite.commit(empty.repartition(1), cfg.table("fetched"), round_n, mode="replace")
 
 
 def crawl_round(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> dict:
@@ -423,14 +426,7 @@ def _crawl_round_impl(
         and tomb_manifest["round"] <= frontier_manifest["round"]
     )
     if reset_missing or n_tomb > n_frontier_rows:
-        icelite.commit(
-            spark.createDataFrame(
-                [], "url_canon string, url_hash long"
-            ).repartition(1),
-            fetched_tbl,
-            round_n - 1,
-            mode="replace",
-        )
+        _reset_tombstones(spark, cfg, round_n - 1)
         tomb_snap_id, n_tomb = None, 0
     # exact: every tombstone key is a distinct frontier-append row
     # (frontier entries are globally unique — they were anti-joined
@@ -453,7 +449,7 @@ def _crawl_round_impl(
     if tomb_snap_id and n_tomb > 0:
         # LSM read path: pending = append-files MINUS tombstones, via
         # the zero-shuffle file-probed anti-join (both tables are
-        # url_hash-range-clustered; manifest stats prune file reads)
+        # shard-placed; manifest stats prune file reads)
         frontier = _anti_join_snapshot(
             spark, frontier, fetched_tbl, tomb_snap_id
         )
@@ -697,22 +693,29 @@ def _crawl_round_impl(
     seen_snap_id = _snap_as_of(cfg.table("seen"), round_n - 1)
     seen_manifest = icelite.read_manifest(cfg.table("seen"), seen_snap_id)
     n_seen = seen_manifest["row_count"]
+    bloom_on = cfg.use_bloom and n_seen >= cfg.bloom_min_keys
+    probe_files = n_seen >= cfg.seen_join_file_min_keys
+    if bloom_on or probe_files:
+        # the one candidate layout, partition i = url_hash shard i, read
+        # by the bloom probe and the file-probed join.  Below both
+        # crossovers the shuffle join exchanges on its own keys, so a
+        # placement there would be one more shuffle that nothing reads.
+        links = place_by_shard(links, cfg.n_shards)
 
     def exact_unseen(cand: DataFrame) -> DataFrame:
         # exact-join crossover (CrawlConfig.seen_join_file_min_keys):
-        # probe the seen table's own range-clustered files in place
+        # probe the seen table's own shard-placed files in place
         # instead of shuffling them through a sort-merge join
         return _anti_join_snapshot(
             spark, cand, cfg.table("seen"), seen_snap_id,
-            probe_files=n_seen >= cfg.seen_join_file_min_keys,
-            n_ranges=cfg.n_shards,
+            probe_files=probe_files,
         )
 
     mark("links")
     # bloom crossover (see CrawlConfig.bloom_min_keys): the prefilter
     # pays only when the seen table is big enough that skipping the
     # exact join for definitely-fresh rows beats the two bloom jobs
-    if cfg.use_bloom and n_seen >= cfg.bloom_min_keys:
+    if bloom_on:
         # Incremental maintenance: bloom bitmaps are OR-monotone and
         # the seen table is append-only, so the manifest file-diff
         # since the last build is an EXACT delta — OR only the new
@@ -794,7 +797,7 @@ def _crawl_round_impl(
         caches,
         base=n_seen,
     ).select(*[f.name for f in FRONTIER.fields])
-    new_links = new_links.repartitionByRange(cfg.n_shards, "url_hash").cache()
+    new_links = place_by_shard(new_links, cfg.n_shards).cache()
     caches.append(new_links)
 
     # 8. commits: seen += new, frontier += new, fetched += consumed
@@ -816,7 +819,7 @@ def _crawl_round_impl(
     n_candidates = cand_df.count()
     # maintenance plane: the seen table is re-read EVERY round for the
     # anti-join but grows by O(n_shards) files per append — periodic
-    # compaction (url_hash-range, preserving shard alignment) + expiry
+    # compaction (by url_hash shard, keeping file i = shard i) + expiry
     # keeps its file count O(n_shards) forever.  Pure physical rewrite:
     # the trace test with compact_seen_every=2 pins result equality.
     compact_every = cfg.compact_seen_every or (
@@ -833,7 +836,7 @@ def _crawl_round_impl(
             spark,
             cfg.table("seen"),
             round_n,
-            range_cols=["url_hash"],
+            partition_id=shard_col("url_hash", cfg.n_shards),
             target_files=cfg.n_shards,
         )
         # keep_last=3 (not 2): round r's maintenance must leave the
@@ -845,11 +848,11 @@ def _crawl_round_impl(
     # this round consumed (fetched + robots-blocked; what stays pending
     # is the allowed rows the budget did not select) and an append of
     # the new links.  No O(frontier) rewrite.
-    tombs = (
+    tombs = place_by_shard(
         gated.filter(~F.col("robots_allowed"))
         .select("url_canon", "url_hash")
-        .unionByName(selected.select("url_canon", "url_hash"))
-        .repartitionByRange(cfg.n_shards, "url_hash")
+        .unionByName(selected.select("url_canon", "url_hash")),
+        cfg.n_shards,
     )
     if not _round_committed(fetched_tbl, round_n):
         icelite.commit(tombs, fetched_tbl, round_n, mode="append")
@@ -874,20 +877,13 @@ def _crawl_round_impl(
             fetched_tbl,
         )
         frontier_snap = icelite.commit(
-            pend.repartitionByRange(cfg.n_shards, "url_hash"),
+            place_by_shard(pend, cfg.n_shards),
             cfg.table("frontier"),
             round_n,
             meta={"compacted": True},
             mode="replace",
         )
-        icelite.commit(
-            spark.createDataFrame(
-                [], "url_canon string, url_hash long"
-            ).repartition(1),
-            fetched_tbl,
-            round_n,
-            mode="replace",
-        )
+        _reset_tombstones(spark, cfg, round_n)
         # keep_last=3: see the seen-table expiry note (crash
         # re-runs pin reads to the r-1 snapshots)
         icelite.expire_snapshots(cfg.table("frontier"), keep_last=3)
