@@ -122,7 +122,7 @@ def bench_crawl(
             if big_budget
             else {}
         )
-        cfg = CrawlConfig(root=os.path.join(root, "crawl"), use_bloom=True, **kw)
+        cfg = CrawlConfig(root=os.path.join(root, "crawl"), **kw)
         s0 = _steal_ticks()
         t0 = time.monotonic()
         stats = run_crawl(spark, cfg, seeds, rounds=rounds)

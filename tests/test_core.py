@@ -390,8 +390,7 @@ def test_anti_join_seen_files_eviction_under_small_batches(spark, tmp_path):
 
 def test_update_bloom_shard_files_rejects_in_place(spark, tmp_path):
     """out_dir == prev_dir would overwrite bitmaps while the merge
-    tasks read them and hardlink files onto themselves — must fail
-    fast, not corrupt silently."""
+    tasks read them — must fail fast, not corrupt silently."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -416,34 +415,59 @@ def test_update_bloom_shard_files_rejects_in_place(spark, tmp_path):
 
 def test_incremental_bloom_equals_full_build(spark):
     """OR-monotonicity: build(all) == update(build(part1), part2) at
-    equal (n_bits, k) — bit-for-bit, over the shard bitmap files."""
+    equal (n_bits, k) — bit-for-bit, over every shard bitmap file.  Two
+    deltas: a key range spread over all shards, and a delta whose keys
+    all map to ONE shard, so every other shard of the update is the
+    previous bitmap passed through the merge unchanged."""
     import tempfile
 
+    import numpy as np
     from pyspark.sql import functions as F
 
     from topicalcrawler_spark.operators.dedup import (
+        shard_ids,
         update_bloom_shard_files,
         write_bloom_shard_files,
     )
 
-    def keys(lo, hi):
-        return spark.range(lo, hi).select(
-            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-        )
+    def hashed(df):
+        return df.select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
 
-    n_all = 5000
-    with tempfile.TemporaryDirectory() as td:
-        d_full, d_part, d_upd = f"{td}/full", f"{td}/part", f"{td}/upd"
-        kf, nb = write_bloom_shard_files(keys(0, n_all), d_full, 8, total=n_all)
-        kp, nbp = write_bloom_shard_files(keys(0, 3000), d_part, 8, total=n_all)
-        assert (kf, nb) == (kp, nbp)
-        update_bloom_shard_files(keys(3000, n_all), d_part, d_upd, 8, nb, kf)
+    n_shards, n_all, n_part = 8, 5000, 3000
+    # one-shard delta: ids n_part.. whose url_hash falls in shard 5
+    cand = np.array(
+        [r["url_hash"] for r in hashed(spark.range(n_part, n_all + 20000)).collect()],
+        dtype=np.int64,
+    )
+    one_shard = [
+        n_part + i for i in np.flatnonzero(shard_ids(cand, n_shards) == 5)[:1500]
+    ]
+    deltas = {
+        "range": spark.range(n_part, n_all),
+        "one_shard": spark.createDataFrame([(int(i),) for i in one_shard], "id long"),
+    }
 
-        def load(d):
-            rows = spark.read.parquet(d).collect()
-            return {r["shard_id"]: bytes(r["bits"]) for r in rows}
+    def load(d):
+        rows = spark.read.parquet(d).collect()
+        return {r["shard_id"]: bytes(r["bits"]) for r in rows}
 
-        assert load(d_upd) == load(d_full)
+    for name, delta in deltas.items():
+        full = spark.range(n_part).unionByName(delta)
+        with tempfile.TemporaryDirectory() as td:
+            d_full, d_part, d_upd = f"{td}/full", f"{td}/part", f"{td}/upd"
+            kf, nb = write_bloom_shard_files(
+                hashed(full), d_full, n_shards, total=n_all
+            )
+            kp, nbp = write_bloom_shard_files(
+                hashed(spark.range(n_part)), d_part, n_shards, total=n_all
+            )
+            assert (kf, nb) == (kp, nbp)
+            update_bloom_shard_files(hashed(delta), d_part, d_upd, n_shards, nb, kf)
+            upd, ref = load(d_upd), load(d_full)
+            assert sorted(upd) == list(range(n_shards)), name
+            assert upd == ref, name
+            if name == "one_shard":
+                assert {s for s in ref if ref[s] != load(d_part)[s]} == {5}
 
 
 def test_crawl_delay_cap_float_parity_with_oracle(spark):

@@ -45,17 +45,19 @@ def _oracle_crawl(rounds, max_depth=3):
     return trace, oseen
 
 
-@pytest.mark.parametrize("use_bloom", [True, False])
-def test_config_rejects_non_power_of_two_shards(tmp_path, use_bloom):
+@pytest.mark.parametrize("bloom", [True, False])
+def test_config_rejects_non_power_of_two_shards(tmp_path, bloom):
     """n_shards places rows by the top log2(n) bits of url_hash, so a
-    bad value must fail when the config is built, with or without the
-    bloom path — not mid-round after some tables have committed."""
+    bad value must fail when the config is built, whether the bloom
+    prefilter is forced on from round 1 or left at its default
+    threshold — not mid-round after some tables have committed."""
     root = str(tmp_path / "crawl")
+    extra = {"bloom_min_keys": 0} if bloom else {}
     for bad in (12, 0, -4, 2.0):
         with pytest.raises(ValueError, match="power of two"):
-            CrawlConfig(root=root, use_bloom=use_bloom, n_shards=bad)
+            CrawlConfig(root=root, n_shards=bad, **extra)
     for good in (1, 4, 16, 32):
-        cfg = CrawlConfig(root=root, use_bloom=use_bloom, n_shards=good)
+        cfg = CrawlConfig(root=root, n_shards=good, **extra)
         assert cfg.n_shards == good
 
 
@@ -74,12 +76,14 @@ def test_file_probed_exact_join_is_trace_identical(spark, tmp_path, bloom):
     """The third crossover (CrawlConfig.seen_join_file_min_keys): the
     exact anti-join probed from the seen table's own files via manifest
     url_hash stats — forced on from round 1, once with the bloom
-    prefilter (maybe-side path) and once without (full-links path).
+    prefilter (maybe-side path) and once without (full-links path: the
+    default bloom_min_keys is above this crawl's seen-set size).
     Results must equal the oracle exactly."""
-    strace, sseen, _ = _spark_crawl(
-        spark, tmp_path, 3,
-        use_bloom=bloom, bloom_min_keys=0, seen_join_file_min_keys=0,
+    strace, sseen, cfg = _spark_crawl(
+        spark, tmp_path, 3, seen_join_file_min_keys=0,
+        **({"bloom_min_keys": 0} if bloom else {}),
     )
+    assert ("bloom" in cfg._dims) == bloom
     otrace, oseen = _oracle_crawl(3)
     assert strace == otrace
     assert sseen == oseen
@@ -92,7 +96,7 @@ def test_lsm_frontier_mode_is_trace_identical(spark, tmp_path):
     (compact_frontier_every=2 inside a 5-round crawl)."""
     strace, sseen, _ = _spark_crawl(
         spark, tmp_path, 5,
-        compact_frontier_every=2, use_bloom=True, bloom_min_keys=0,
+        compact_frontier_every=2, bloom_min_keys=0,
     )
     otrace, oseen = _oracle_crawl(5)
     assert strace == otrace
@@ -112,7 +116,7 @@ def test_incremental_bloom_maintenance_is_trace_identical(spark, tmp_path):
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
+        root=str(tmp_path / "crawl"), bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -149,7 +153,7 @@ def test_inprocess_retry_after_bloom_update_crash(spark, tmp_path, monkeypatch):
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
+        root=str(tmp_path / "crawl"), bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -186,7 +190,7 @@ def test_five_rounds_with_bloom_prefilter(spark, tmp_path):
     """M2/M4 gate: 5 rounds, bloom prefilter ON — results must be
     IDENTICAL to the oracle (bloom is an optimization, never authority)."""
     strace, sseen, _ = _spark_crawl(
-        spark, tmp_path, 5, use_bloom=True, bloom_min_keys=0
+        spark, tmp_path, 5, bloom_min_keys=0
     )
     otrace, oseen = _oracle_crawl(5)
     assert strace == otrace
@@ -202,7 +206,7 @@ def test_bloom_file_distribution_path_is_trace_identical(spark, tmp_path):
     import glob
 
     strace, sseen, cfg = _spark_crawl(
-        spark, tmp_path, 4, use_bloom=True, bloom_min_keys=0
+        spark, tmp_path, 4, bloom_min_keys=0
     )
     otrace, oseen = _oracle_crawl(4)
     assert strace == otrace
@@ -359,7 +363,7 @@ def test_resume_equivalence(spark, tmp_path, restart):
     or the next round updates bitmaps in a directory that is gone."""
     from topicalcrawler_spark.plans.round import resume
 
-    kw = {"use_bloom": True, "bloom_min_keys": 0}
+    kw = {"bloom_min_keys": 0}
     (tmp_path / "full").mkdir()
     full_trace, full_seen, _ = _spark_crawl(
         spark, tmp_path / "full", rounds=3, **kw
@@ -398,7 +402,7 @@ def test_seen_compaction_is_result_invariant(spark, tmp_path):
     from topicalcrawler_spark import icelite
 
     strace, sseen, cfg = _spark_crawl(
-        spark, tmp_path, 4, use_bloom=True, bloom_min_keys=0,
+        spark, tmp_path, 4, bloom_min_keys=0,
         compact_seen_every=2,
     )
     otrace, oseen = _oracle_crawl(4)
@@ -432,7 +436,7 @@ def test_every_table_file_holds_one_shard(spark, tmp_path):
     _, _, cfg = _spark_crawl(
         spark, tmp_path, 2,
         n_shards=n_shards, max_depth=4, default_budget=60, budget_rows=[],
-        use_bloom=True, bloom_min_keys=0, seen_join_file_min_keys=0,
+        bloom_min_keys=0, seen_join_file_min_keys=0,
         compact_seen_every=1, compact_frontier_every=1,
     )
     for table in ("seen", "frontier", "fetched"):
@@ -479,7 +483,7 @@ def test_crash_mid_round_then_resume_matches_oracle(
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(use_bloom=True, bloom_min_keys=0)
+    kw = dict(bloom_min_keys=0)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -605,7 +609,7 @@ def test_crash_mid_frontier_compaction_then_resume(spark, tmp_path, monkeypatch)
 
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
-    kw = dict(compact_frontier_every=2, use_bloom=True, bloom_min_keys=0)
+    kw = dict(compact_frontier_every=2, bloom_min_keys=0)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"), **kw)
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -662,7 +666,7 @@ def test_round_failure_releases_all_round_caches(spark, tmp_path, monkeypatch):
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
+        root=str(tmp_path / "crawl"), bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -764,7 +768,7 @@ def test_bloom_generations_swept_and_frontier_rerun_guarded(
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(
-        root=str(tmp_path / "crawl"), use_bloom=True, bloom_min_keys=0
+        root=str(tmp_path / "crawl"), bloom_min_keys=0
     )
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
@@ -924,9 +928,7 @@ def test_random_seed_list_all_hosts_trace_parity(spark, tmp_path):
         root=str(tmp_path / "crawl"),
         max_depth=2,
         default_budget=5,
-        salt=4,
         n_shards=4,
-        use_bloom=True,
         bloom_min_keys=0,
         compact_frontier_every=2,
         compact_seen_every=2,

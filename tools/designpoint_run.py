@@ -18,17 +18,18 @@ round, because
   - the frontier is an LSM append table (O(Δ) commits + tombstones).
 
 Usage: python tools/designpoint_run.py [n_seen] [n_frontier] [rounds]
-                                       [bloom_capacity_factor]
-Defaults: 60M seen keys, 6M pending frontier rows, 3 rounds, 1.5.
+                                       [rebuild_every]
+Defaults: 60M seen keys, 6M pending frontier rows, 3 rounds, 0 (no
+forced bloom rebuild).
 
 Round-5 extension — periodic-maintenance evidence (the last unmeasured
 cost-model rows): run with rounds >= 9 so BOTH compaction cadences fire
 at their REAL thresholds mid-run (seen auto-compaction and frontier
 LSM compaction both every 8 rounds once the file crossovers are
-engaged), and pass a bloom_capacity_factor slightly above 1.0 (e.g.
-1.002) so the bloom full rebuild's capacity check trips on real table
-growth — the rebuild COST at n_seen keys is factor-independent; only
-the trigger ratio is scaled down (50% growth cannot be simulated in a
+engaged), and pass a rebuild period K (e.g. 4): after every K-th round
+the tool lowers the in-memory bloom record's capacity below n_seen, so
+the next round's capacity check fires a full rebuild at its real cost
+(the 50% table growth that trips it naturally cannot be simulated in a
 sandbox round).  The tool records per-round maintenance events +
 manifest file counts, and asserts each event fired when due, that
 seen-table compaction collapsed the file count back to O(n_shards)
@@ -63,7 +64,7 @@ def main() -> None:
     n_seen = int(sys.argv[1]) if len(sys.argv) > 1 else 60_000_000
     n_frontier = int(sys.argv[2]) if len(sys.argv) > 2 else 6_000_000
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    bloom_factor = float(sys.argv[4]) if len(sys.argv) > 4 else 1.5
+    rebuild_every = int(sys.argv[4]) if len(sys.argv) > 4 else 0
     assert n_seen > n_frontier
 
     from pyspark.sql import functions as F
@@ -92,13 +93,11 @@ def main() -> None:
         cfg = CrawlConfig(
             root=os.path.join(root, "crawl"),
             n_shards=32,
-            use_bloom=True,            # real thresholds — nothing forced:
-            # bloom_min_keys=50k and seen_join_file_min_keys=50M
-            # both trip at n_seen=60M
+            # real thresholds — nothing forced: bloom_min_keys=50k and
+            # seen_join_file_min_keys=50M both trip at n_seen=60M
             default_budget=400,
             budget_rows=[],
             max_depth=8,
-            bloom_capacity_factor=bloom_factor,
         )
         assert n_seen >= cfg.seen_join_file_min_keys
 
@@ -203,6 +202,9 @@ def main() -> None:
             stats["bloom_capacity"] = cap
             if prev_capacity is not None and cap != prev_capacity:
                 events["bloom_rebuild"].append(r)
+            if rebuild_every and r % rebuild_every == 0:
+                # force the next round's full rebuild
+                cap = cfg._dims["bloom"]["capacity"] = -1
             prev_capacity = cap
             if (fr_man.get("meta") or {}).get("compacted"):
                 events["frontier_compaction"].append(r)
@@ -228,10 +230,10 @@ def main() -> None:
             )
             after = per_round[7]
             assert after["seen_files"] <= cfg.n_shards, after
-        if bloom_factor < 1.01 and rounds >= 3:
-            assert events["bloom_rebuild"], (
-                "bloom capacity rebuild never fired despite the "
-                "lowered capacity factor"
+        if rebuild_every:
+            due = list(range(rebuild_every + 1, rounds + 1, rebuild_every))
+            assert set(due) <= set(events["bloom_rebuild"]), (
+                f"bloom capacity rebuild did not fire in rounds {due}"
             )
 
         out = {
@@ -244,7 +246,7 @@ def main() -> None:
                 "seen_join_file_threshold": cfg.seen_join_file_min_keys,
                 "seen_join_file_engaged": n_seen >= cfg.seen_join_file_min_keys,
             },
-            "bloom_capacity_factor": bloom_factor,
+            "bloom_rebuild_every": rebuild_every,
             "maintenance_events": events,
             "synth_wall_s": synth_wall,
             "rounds_wall_s": wall,

@@ -52,7 +52,6 @@ def main() -> None:
         # spawn + JIT warmup, so efficiency is computed on rounds>=2
         cfg = CrawlConfig(
             root=os.path.join(root, "crawl"),
-            use_bloom=True,
             default_budget=max(n_urls // 40, 1000),
             budget_rows=[],
             max_depth=4,

@@ -22,6 +22,12 @@ candidates (``place_by_shard``), so table file i is bloom shard i is
 probe task i: what is broadcast is only the shard directory path, each
 probe task reads its one shard (``bloom_prefilter_files``), and no
 bitmap ever transits the driver, at any seen-set size.
+
+The build has ONE plan: per-task partial bitmaps OR-merged per shard
+and written.  The incremental update runs that plan over the delta keys
+with the previous generation's bitmaps added to the merge — the seen
+table is append-only and bitmaps are OR-monotone, so the result equals
+a full build bit-for-bit.
 """
 
 from __future__ import annotations
@@ -36,6 +42,10 @@ from pyspark.sql.window import Window
 
 from ..core import bloom
 from ..functions import order_cols
+
+# bitmaps are sized for this multiple of the build-time key count, and
+# the crawl rebuilds them once the seen set outgrows that size
+BLOOM_HEADROOM = 1.5
 
 
 def shard_ids(keys: np.ndarray, n_shards: int) -> np.ndarray:
@@ -110,10 +120,9 @@ def anti_join_seen_files(
     side probed IN PLACE from its own icelite data files instead of
     shuffled.
 
-    Why: ``links LEFT ANTI seen`` cannot broadcast the right side (the
-    seen set is the big one), so past broadcast size Spark plans a
-    sort-merge join that SHUFFLES the full 10^10-row seen table every
-    round — the single largest per-round data movement at the design
+    Why: ``links LEFT ANTI seen`` broadcasts the seen side only while
+    it is small; past broadcast size Spark plans a sort-merge join that
+    SHUFFLES the full 10^10-row seen table every round — the single largest per-round data movement at the design
     point.  But the seen table's files are url_hash-clustered (every
     commit and compaction goes through ``place_by_shard``, so each file
     holds one shard) and the manifest records per-file url_hash
@@ -274,35 +283,12 @@ def bloom_prefilter_files(
     return links.mapInPandas(probe_iter, schema=out_schema)
 
 
-def _merged_shard_bitmaps(
-    seen: DataFrame,
-    n_shards: int,
-    fpp: float,
-    total: int | None,
-    params: tuple[int, int] | None = None,
-) -> tuple[DataFrame, int, int]:
-    """The shared scale-safe BUILD: streamed per-partition partial
-    bitmaps OR-merged per shard.  Returns (merged_df(shard_id, bits),
-    n_bits, k), shared by the full build and the incremental update.
-
-    Per-task memory is O(bitmap), never O(keys): round 1's grouped-map
-    build pulled every url_hash of a shard into ONE pandas group (~5 GB
-    of keys per task at the 10^10-key design point); the OR-merge is
-    commutative (property-tested).  All shards share one (n_bits, k) so
-    probe code stays branch-free.
-
-    ``params``: fixed (n_bits, k) — the incremental-maintenance path
-    passes the params of the bitmaps it is OR-ing into (delta partials
-    must match them bit-for-bit); by default params are sized from
-    ``total`` with 1.5× headroom."""
-    assert n_shards > 0 and n_shards & (n_shards - 1) == 0, "power of two"
-    if params is not None:
-        n_bits, k = params
-    else:
-        if total is None:
-            total = seen.count()
-        per_shard = max(total // n_shards, 1)
-        n_bits, k = bloom.params_for(int(per_shard * 1.5), fpp)
+def _shard_partials(seen: DataFrame, n_shards: int, n_bits: int, k: int) -> DataFrame:
+    """Per-task partial bitmaps (shard_id, bits) over ``seen``'s
+    url_hash, at fixed (n_bits, k).  Per-task memory is O(bitmap), never
+    O(keys): one pandas group per shard would pull every url_hash of a
+    shard into one task (~5 GB of keys at the 10^10-key design point).
+    All shards share one (n_bits, k) so probe code stays branch-free."""
 
     def partials(batches):
         acc: dict[int, np.ndarray] = {}
@@ -323,18 +309,14 @@ def _merged_shard_bitmaps(
                 }
             )
 
-    partial_df = seen.select("url_hash").mapInPandas(
+    return seen.select("url_hash").mapInPandas(
         partials, schema="shard_id int, bits binary"
     )
-    merged = partial_df.groupBy("shard_id").applyInPandas(
-        _merge_shard_group, schema="shard_id int, bits binary"
-    )
-    return merged, n_bits, k
 
 
 def _merge_shard_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-shard OR-merge kernel, shared by the full build and the
-    incremental file update."""
+    """Per-shard OR-merge kernel (the OR-merge is commutative,
+    property-tested)."""
     arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bits"]]
     return pd.DataFrame(
         {
@@ -344,27 +326,35 @@ def _merge_shard_group(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _write_merged(bitmaps: DataFrame, out_dir: str) -> None:
+    """The one build plan's tail: OR-merge bitmaps per shard and write
+    each shard's result straight from its merge task as
+    ``out_dir/shard_id=N/`` parquet.  Dictionary encoding off: bitmaps
+    are fat unique binaries (same pathology as the corpus bytes
+    column)."""
+    (
+        bitmaps.groupBy("shard_id")
+        .applyInPandas(_merge_shard_group, schema="shard_id int, bits binary")
+        .write.mode("overwrite")
+        .option("parquet.enable.dictionary", "false")
+        .partitionBy("shard_id")
+        .parquet(out_dir)
+    )
+
+
 def write_bloom_shard_files(
-    seen: DataFrame,
-    out_dir: str,
-    n_shards: int,
-    fpp: float = 0.01,
-    total: int | None = None,
+    seen: DataFrame, out_dir: str, n_shards: int, total: int
 ) -> tuple[int, int]:
-    """A5 — per-shard bloom bitmaps over ``seen``'s url_hash, written
-    straight from their merge tasks as parquet files partitioned by
-    shard_id (``out_dir/shard_id=N/``), so NO bitmap ever transits the
-    driver; ``bloom_prefilter_files`` probes them in place.  Returns
-    (k, n_bits) — the params incremental maintenance
-    (``update_bloom_shard_files``) must reuse.  Pass ``total`` (e.g. an
-    icelite manifest row_count) to skip the sizing count job; n_shards
-    must be a power of two (top-bits shard function).  Dictionary
-    encoding off: bitmaps are fat unique binaries (same pathology as
-    the corpus bytes column)."""
-    merged, n_bits, k = _merged_shard_bitmaps(seen, n_shards, fpp, total)
-    merged.write.mode("overwrite").option(
-        "parquet.enable.dictionary", "false"
-    ).partitionBy("shard_id").parquet(out_dir)
+    """A5 — per-shard bloom bitmaps over ``seen``'s url_hash at
+    fpp=0.01, sized for ``BLOOM_HEADROOM`` × ``total`` keys (e.g. an
+    icelite manifest row_count), written as parquet files partitioned
+    by shard_id so NO bitmap ever transits the driver;
+    ``bloom_prefilter_files`` probes them in place.  Returns (k, n_bits)
+    — the params ``update_bloom_shard_files`` must reuse.  n_shards
+    must be a power of two (top-bits shard function)."""
+    per_shard = max(total // n_shards, 1)
+    n_bits, k = bloom.params_for(int(per_shard * BLOOM_HEADROOM), 0.01)
+    _write_merged(_shard_partials(seen, n_shards, n_bits, k), out_dir)
     return k, n_bits
 
 
@@ -376,77 +366,27 @@ def update_bloom_shard_files(
     n_bits: int,
     k: int,
 ) -> None:
-    """A5, incremental form: OR the DELTA keys into the existing shard
-    bitmaps at the bitmaps' own (n_bits, k).  Bloom bitmaps are
-    OR-monotone and the seen table is append-only, so build(all keys)
-    == build(old keys) | build(new keys) at equal params — the
-    per-round build cost drops from O(seen) to O(delta).  Callers own
-    the capacity rule (full rebuild via ``write_bloom_shard_files`` when
-    the key count outgrows the sizing; fpp degradation can only cost
-    performance, never correctness — the exact join is the authority).
-
-    Only the shards the delta touches are re-merged (previous bitmap
-    files for those shards unioned with the delta's partials,
-    executor-side); untouched shards are carried forward as hardlinks,
-    an O(1)-metadata op per shard.  Per-round I/O is therefore O(touched-shard bitmap bytes), not O(total
-    bitmap bytes) — at the multi-GB design-point bitmap set, a delta
-    landing in 2 of 4096 shards rewrites 2 bitmaps, not 4096.
+    """A5, incremental form: the full build's plan over the DELTA keys,
+    with the previous generation's shard bitmaps added to the per-shard
+    OR-merge.  Bloom bitmaps are OR-monotone and the seen table is
+    append-only, so build(all keys) == build(old keys) | build(new keys)
+    at equal (n_bits, k) — the per-round key scan drops from O(seen) to
+    O(delta).  Every shard is rewritten (a delta of tens of thousands
+    of keys touches every shard anyway).  Callers own the capacity rule
+    (full rebuild via ``write_bloom_shard_files`` once the key count
+    outgrows the sizing; fpp degradation can only cost performance,
+    never correctness — the exact join is the authority).
 
     ``out_dir`` must differ from ``prev_dir``: an in-place update would
-    overwrite the previous bitmaps WHILE the merge tasks read them (and
-    hardlink files onto themselves) — asserted here rather than left to
-    corrupt silently.  Note for object-store deployments: the
-    carry-forward loop below is O(untouched shards) driver-side
-    hardlink syscalls; local/HDFS filesystems make each O(1) metadata,
-    but S3-style stores implement "link" as a full copy — there, keep
-    per-shard bitmap files small or batch the carry-forward through a
-    manifest that references the previous round's objects instead of
-    re-linking them."""
-    import glob as _glob
+    overwrite the previous bitmaps WHILE the merge tasks read them —
+    asserted here rather than left to corrupt silently."""
     import os as _os
 
     assert _os.path.realpath(out_dir) != _os.path.realpath(prev_dir), (
         "update_bloom_shard_files: out_dir must differ from prev_dir "
         "(in-place update would overwrite bitmaps while reading them)"
     )
-    spark = seen_delta.sparkSession
-    delta_partials, _, _ = _merged_shard_bitmaps(
-        seen_delta, n_shards, fpp=0.0, total=None, params=(n_bits, k)
+    prev = seen_delta.sparkSession.read.parquet(prev_dir).select("shard_id", "bits")
+    _write_merged(
+        prev.unionByName(_shard_partials(seen_delta, n_shards, n_bits, k)), out_dir
     )
-    delta_partials = delta_partials.cache()
-    touched = sorted(
-        r["shard_id"] for r in delta_partials.select("shard_id").distinct().collect()
-    )
-    prev = (
-        spark.read.parquet(prev_dir)
-        .select("shard_id", "bits")
-        .filter(F.col("shard_id").isin([int(s) for s in touched]))
-    )
-    (
-        prev.unionByName(delta_partials)
-        .groupBy("shard_id")
-        .applyInPandas(_merge_shard_group, schema="shard_id int, bits binary")
-        .write.mode("overwrite")
-        .option("parquet.enable.dictionary", "false")
-        .partitionBy("shard_id")
-        .parquet(out_dir)
-    )
-    delta_partials.unpersist()
-    # carry untouched shards forward by hardlink (fall back to copy on
-    # filesystems without link support)
-    import shutil as _shutil
-
-    touched_set = set(touched)
-    for d in _glob.glob(f"{prev_dir}/shard_id=*"):
-        sid = int(d.rsplit("=", 1)[1])
-        if sid in touched_set:
-            continue
-        dst = f"{out_dir}/shard_id={sid}"
-        _os.makedirs(dst, exist_ok=True)
-        for f in _glob.glob(f"{d}/*.parquet"):
-            target = _os.path.join(dst, _os.path.basename(f))
-            try:
-                _os.link(f, target)
-            except OSError:
-                _shutil.copy2(f, target)
-

@@ -58,6 +58,7 @@ from ..functions import (
     with_canon_and_relevance,
 )
 from ..operators.dedup import (
+    BLOOM_HEADROOM,
     anti_join_seen,
     anti_join_seen_files,
     bloom_prefilter_files,
@@ -91,43 +92,33 @@ class CrawlConfig:
     max_depth: int = 3
     default_budget: int = fx.DEFAULT_BUDGET
     n_shards: int = 16
-    salt: int = 8
     # bloom prefilter (operators.dedup): shard bitmaps at fpp=0.01,
     # written as partition-local parquet files keyed by the top url_hash
     # bits and probed in place (one shard read per task) — no bitmap
-    # ever transits the driver, at any seen-set size.
-    use_bloom: bool = False
-    # bloom crossover: below this seen-set size the prefilter's two
-    # extra python jobs cost more than the exact anti-join they would
-    # save — skip them (the anti-join is always the authority, so this
-    # never changes results; trace tests pin that by forcing
-    # bloom_min_keys=0).  At the 10^10 design point the filter always
-    # engages.
+    # ever transits the driver, at any seen-set size.  Crossover: below
+    # this seen-set size the prefilter's extra python jobs cost more
+    # than the exact anti-join they would save, so the bloom is off
+    # (the anti-join is always the authority, so this never changes
+    # results; trace tests pin that by forcing bloom_min_keys=0).  Set
+    # it above any reachable n_seen to turn the bloom off.  At the
+    # 10^10 design point the filter always engages.  Bitmaps are sized
+    # for operators.dedup.BLOOM_HEADROOM x the build-time n_seen, and a
+    # full rebuild fires once n_seen outgrows that size.
     bloom_min_keys: int = 50_000
     # exact-join crossover: past this seen-set size the EXACT anti-join's
     # sort-merge shuffle of the full seen table (the single largest
-    # per-round data movement at 10^10 keys — left-anti cannot
-    # broadcast its right side) is replaced by the file-probed join
-    # (operators.dedup.anti_join_seen_files): links are placed by url_hash
-    # shard and probe task i reads ONLY the seen files of shard i, found
-    # via the manifest's commit-time per-file url_hash stats.  Results
-    # identical (trace test pins it by forcing seen_join_file_min_keys=0).
+    # per-round data movement at 10^10 keys) is replaced by the
+    # file-probed join (operators.dedup.anti_join_seen_files): links are
+    # placed by url_hash shard and probe task i reads ONLY the seen
+    # files of shard i, found via the manifest's commit-time per-file
+    # url_hash stats.  Below spark.sql.autoBroadcastJoinThreshold the
+    # shuffle path is itself a broadcast join (LeftAnti, BuildRight —
+    # the seen side is the one broadcast), which is why the crossover
+    # stays: at fixture size forcing the file probe made the seen phase
+    # slower (~1.5-2.3 s -> ~2.1-3.1 s per round over 3 rounds).
+    # Results identical (trace test pins it by forcing
+    # seen_join_file_min_keys=0).
     seen_join_file_min_keys: int = 50_000_000
-    # bloom rebuild TRIGGER headroom: a full rebuild fires when n_seen
-    # outgrows capacity = n_seen_at_build * bloom_capacity_factor.
-    # Bitmap SIZING is not scaled by this knob — a (re)build always
-    # sizes bitmaps for fixed 1.5x the build-time n_seen
-    # (operators.dedup._merged_shard_bitmaps), which is why the rebuild
-    # COST at a given n_seen is factor-independent (the property the
-    # design-point maintenance run relies on: lowering the factor to
-    # ~1.0 fires rebuilds mid-run at full, representative cost without
-    # simulating 50% table growth).  Consequences: factor < 1.5 only
-    # rebuilds earlier than the sized headroom strictly needs; factor
-    # > 1.5 defers rebuilds past it, letting fpp degrade gradually
-    # between 1.5x and factor-x growth — a perf matter only (more
-    # definitely-fresh links reach the exact anti-join, which stays
-    # the authority).
-    bloom_capacity_factor: float = 1.5
     # compact+expire the seen table every K rounds (0 = auto).  Physical
     # maintenance only — never changes results (trace-test-pinned).
     # Auto: off while the seen table is small, but once the file-probed
@@ -471,7 +462,7 @@ def _crawl_round_impl(
         budgeted = with_crawl_delay_cap(
             budgeted, robots_cur, cfg.round_window_s
         )
-    selected = select_per_host_topk(budgeted, salt=cfg.salt)
+    selected = select_per_host_topk(budgeted)
     # AQE coalesces the politeness window's shuffle down to ~1
     # partition (its INPUT bytes are tiny) — but the next stage runs
     # the CPU-heavy fetch UDF, which would then execute on one core.
@@ -693,7 +684,7 @@ def _crawl_round_impl(
     seen_snap_id = _snap_as_of(cfg.table("seen"), round_n - 1)
     seen_manifest = icelite.read_manifest(cfg.table("seen"), seen_snap_id)
     n_seen = seen_manifest["row_count"]
-    bloom_on = cfg.use_bloom and n_seen >= cfg.bloom_min_keys
+    bloom_on = n_seen >= cfg.bloom_min_keys
     probe_files = n_seen >= cfg.seen_join_file_min_keys
     if bloom_on or probe_files:
         # the one candidate layout, partition i = url_hash shard i, read
@@ -721,10 +712,11 @@ def _crawl_round_impl(
         # since the last build is an EXACT delta — OR only the new
         # files' keys into the existing bitmaps instead of rescanning
         # all of seen (the last remaining O(seen) scan per round).
-        # Full rebuild when the key count outgrows the 1.5× sizing
-        # headroom (fpp would degrade past design — a perf matter
-        # only, the exact join stays the authority) or when the file
-        # set is not a superset of the build's (compaction).
+        # Full rebuild when the key count outgrows the count the
+        # bitmaps were sized for (BLOOM_HEADROOM × the build's n_seen;
+        # fpp would degrade past design — a perf matter only, the exact
+        # join stays the authority) or when the file set is not a
+        # superset of the build's (compaction).
         bst = cfg._dims.get("bloom")
         cur_files = frozenset(seen_manifest["files"])
         # unique per attempt (same contract as icelite.next_data_dir):
@@ -763,7 +755,7 @@ def _crawl_round_impl(
                     shutil.rmtree(d, ignore_errors=True)
             bst = {
                 "dir": new_dir, "k": k, "n_bits": n_bits,
-                "capacity": int(n_seen * cfg.bloom_capacity_factor),
+                "capacity": int(n_seen * BLOOM_HEADROOM),
             }
         probe = bloom_prefilter_files(links, bst["dir"], cfg.n_shards, bst["k"])
         bst["files"] = cur_files
