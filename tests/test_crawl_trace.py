@@ -4,6 +4,7 @@ set under the same seed list + politeness budgets."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -460,6 +461,44 @@ def test_every_table_file_holds_one_shard(spark, tmp_path):
             )
             n_files += len(own)
         assert n_files > 0, f"{table}: no data files checked"
+
+
+def test_lineage_rows_follow_fetch_tasks(spark, tmp_path):
+    """Lineage holds one row per fetch task of a round — one per
+    non-empty part file the fetch wrote, keyed by its part-NNNNN index
+    and counting that file's rows — and the rows sum to the round's
+    n_fetched.  Keying by spark_partition_id() of the re-read instead
+    counts file-scan splits, which pack several small fetch files into
+    one partition."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from topicalcrawler_spark import icelite
+
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    cfg = CrawlConfig(root=str(tmp_path / "crawl"))
+    stats = run_crawl(spark, cfg, seeds_path, 2)
+    lineage = icelite.read_snapshot(spark, cfg.table("lineage")).collect()
+    for st in stats:
+        (corpus,) = [
+            m for m in icelite.history(cfg.table("corpus"))
+            if m["round"] == st["round"]
+        ]
+        files = {}
+        for f in glob.glob(os.path.join(corpus["data_dir"], "part-*.parquet")):
+            n = pq.ParquetFile(f).metadata.num_rows
+            if n:
+                files[int(re.match(r"part-(\d+)", os.path.basename(f)).group(1))] = n
+        rows = {
+            r["partition_id"]: r["n_fetched"]
+            for r in lineage if r["round"] == st["round"]
+        }
+        assert len(files) > 1
+        assert rows == files
+        assert sum(rows.values()) == st["n_fetched"]
+        assert len([r for r in lineage if r["round"] == st["round"]]) == len(files)
 
 
 @pytest.mark.parametrize(

@@ -3,11 +3,48 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
+import uuid
 
 import pyarrow.parquet as pq
 
 from topicalcrawler_spark import icelite
+
+
+def _read_jobs(spark, table_dir: str) -> tuple[set, int]:
+    """(rows, Spark jobs started while read_snapshot built the frame):
+    the call runs in its own job group, and the listener bus is drained
+    before the group's job ids are read."""
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_snapshot")
+    try:
+        df = icelite.read_snapshot(spark, table_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return {tuple(r) for r in df.collect()}, jobs
+
+
+def _check_schema_read(spark, table_dir: str, expect_cols: list[str]) -> None:
+    """The head manifest records the Spark schema and read_snapshot
+    starts no job; with the schema key removed (a manifest from before
+    the key existed) the same rows still read, through the one-job
+    schema-inference path."""
+    path = icelite._manifest_path(table_dir, icelite.latest_snapshot_id(table_dir))
+    with open(path) as f:
+        manifest = json.load(f)
+    assert [fl["name"] for fl in manifest["schema"]["fields"]] == expect_cols
+    rows, jobs = _read_jobs(spark, table_dir)
+    assert jobs == 0
+    del manifest["schema"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    legacy_rows, legacy_jobs = _read_jobs(spark, table_dir)
+    assert legacy_rows == rows
+    assert legacy_jobs >= 1  # the probe does see the inference job
 
 
 def test_commit_read_append_timetravel(spark, tmp_path):
@@ -229,6 +266,7 @@ def test_manifest_file_stats_and_hash_index(spark, tmp_path):
     icelite.commit(df2, t, round_n=1, mode="append")
     idx2 = icelite.file_hash_index(t)
     assert idx2 is not None and len(idx2) > len(idx)
+    _check_schema_read(spark, t, ["url_hash", "url_canon"])
 
     icelite.compact(
         spark, t, round_n=2, partition_id=shard_col("url_hash", 2), target_files=2
@@ -513,6 +551,7 @@ def test_commit_files_carries_stats(spark, tmp_path):
     lo = min(f[1] for f in idx)
     hi = max(f[2] for f in idx)
     assert all(lo <= r["url_hash"] <= hi for r in rows)
+    _check_schema_read(spark, t, ["url_hash", "url_canon"])
 
 
 def test_commit_files_empty_partition_keeps_index(spark, tmp_path):

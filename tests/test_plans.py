@@ -130,9 +130,33 @@ def _window_specs(plan: str) -> list[str]:
 def test_no_unpartitioned_window_in_trace_plan(spark):
     """The round-1 scale-killer: global_fetch_order's old global
     row_number single-partitioned each round's selected set (five
-    WindowExec warnings in the driver bench).  The new range-partition
-    + offset plan must contain ONLY partitioned Window nodes."""
-    from topicalcrawler_spark.operators.politeness import global_fetch_order
+    WindowExec warnings in the driver bench).  global_rank now ranks
+    with no Window at all — range exchange, per-partition sort,
+    driver-side offsets — so its plan must hold no Window, no
+    BroadcastNestedLoopJoin and exactly one range exchange, and its
+    ranks must be exactly base+1..base+n: for the trace order, for
+    base > 0, and when a range partition is left empty."""
+    from topicalcrawler_spark.operators.politeness import (
+        global_fetch_order,
+        global_rank,
+    )
+
+    def check(df, caches, key_cols, out_col, base):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        )
+        assert not _window_specs(plan), plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        # global_rank is eager, so the persisted layout's plan is final;
+        # count the exchange once, not again in its initial plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("Exchange rangepartitioning") == 1, plan
+        rows = df.orderBy(out_col).collect()
+        assert [r[out_col] for r in rows] == list(range(base + 1, base + len(rows) + 1))
+        keys = [key_cols(r) for r in rows]
+        assert keys == sorted(keys)
+        for c in caches:
+            c.unpersist()
 
     frontier = spark.range(1000).select(
         F.col("id").alias("discovery_seq"),
@@ -140,25 +164,30 @@ def test_no_unpartitioned_window_in_trace_plan(spark):
         (F.col("id") % 3).cast("int").alias("depth"),
         F.lit("2026-02-01 00:00:00").cast("timestamp").alias("discovery_time"),
     )
+    trace_key = lambda r: (  # noqa: E731
+        -r["relevance_q"], r["depth"], r["discovery_time"], r["discovery_seq"]
+    )
     caches: list = []
     df = global_fetch_order(frontier, caches, partitions=8)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
+    check(df, caches, trace_key, "trace_seq", 0)
+
+    # base > 0 (the admission rank: base = n_seen)
+    caches = []
+    df = global_rank(
+        frontier, [F.col("discovery_seq").asc()], "rk", caches, 8, base=5000
     )
-    for spec in _window_specs(plan):
-        # an empty partition spec prints as "], [], [" between the
-        # function list and the ordering list
-        assert "], [], [" not in spec, f"unpartitioned window: {spec}"
-    # the global rank must equal a plain orderBy rank (total order key)
-    rows = df.orderBy("trace_seq").collect()
-    assert [r["trace_seq"] for r in rows] == list(range(1, 1001))
-    keys = [
-        (-r["relevance_q"], r["depth"], r["discovery_time"], r["discovery_seq"])
-        for r in rows
-    ]
-    assert keys == sorted(keys)
-    for c in caches:
-        c.unpersist()
+    check(df, caches, lambda r: r["discovery_seq"], "rk", 5000)
+
+    # 7 distinct keys then 100 ties at the maximum: the sampled range
+    # bounds end at that maximum, so the last range partition is empty
+    skewed = spark.range(107, numPartitions=1).select(
+        F.least(F.col("id"), F.lit(7)).alias("k")
+    )
+    caches = []
+    df = global_rank(skewed, [F.col("k").asc()], "rk", caches, 8, base=3)
+    ranged = caches[0]
+    assert ranged.select("_pid").distinct().count() < ranged.rdd.getNumPartitions()
+    check(df, caches, lambda r: r["k"], "rk", 3)
 
 
 def test_registry_wide_plan_sweep(spark):
@@ -267,3 +296,41 @@ def test_canon_and_relevance_is_one_pruned_arrow_node(spark):
     )
     assert "canon_udf" in arrow_line and "relevance_q_udf" in arrow_line
     assert "MapInPandas" not in plan
+
+
+def test_crawl_link_and_seed_plans_run_canon_once(spark, tmp_path):
+    """The crawl's real link plan and init_crawl's seed plan each hold
+    exactly ONE ArrowEvalPython node.  Were canon_udf deterministic,
+    Catalyst would push the P4 scheme filter (startswith on url_canon)
+    below the projection that computes url_canon, copying canon_udf
+    into the filter: two Python nodes, so canon would run twice on
+    every link and every seed.  The link plan's one node carries both
+    UDFs, and the depth half of the gate sits below it, so over-deep
+    links never reach Python."""
+    import re
+
+    from topicalcrawler_spark.plans.round import (
+        CrawlConfig,
+        _candidate_links,
+        _seed_frontier,
+    )
+    from topicalcrawler_spark.schemas import FETCHED
+    from topicalcrawler_spark.sources import fixtures as fx
+
+    def plan_lines(df) -> list[str]:
+        return spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        ).splitlines()
+
+    links = plan_lines(_candidate_links(spark.createDataFrame([], FETCHED), 3, 1))
+    arrow = [i for i, ln in enumerate(links) if "ArrowEvalPython" in ln]
+    assert len(arrow) == 1, "\n".join(links)
+    assert "canon_udf" in links[arrow[0]] and "relevance_q_udf" in links[arrow[0]]
+    depth = [i for i, ln in enumerate(links) if re.search(r"\(depth#\d+ \+ 1\) <= 3", ln)]
+    assert depth and min(depth) > arrow[0], "\n".join(links)
+
+    seeds = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds)
+    cfg = CrawlConfig(root=str(tmp_path / "crawl"))
+    seed_plan = plan_lines(_seed_frontier(spark, cfg, seeds))
+    assert sum("ArrowEvalPython" in ln for ln in seed_plan) == 1, "\n".join(seed_plan)

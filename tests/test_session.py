@@ -117,3 +117,43 @@ def test_setup_invalidates_only_when_importable_set_changes(tmp_path, monkeypatc
     from pyspark import worker_util
 
     assert worker_util.importlib is importlib
+
+
+_FIRST_TASK = """
+import sys
+from topicalcrawler_spark.session import get_spark
+
+spark = get_spark(app_name="warm-fork-probe", cpus=1, shuffle_partitions=1)
+def probe(_):
+    import gc
+
+    mods = sorted(m for m in ("pandas", "pyarrow") if m in sys.modules)
+    return [(mods, gc.get_freeze_count() > 0)]
+
+mods, frozen = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()[0]
+print("PRELOADED", ",".join(mods), "frozen" if frozen else "unfrozen")
+spark.stop()
+"""
+
+
+def test_forked_worker_starts_with_the_arrow_stack(tmp_path):
+    """The first Python task of a new session runs on a worker the daemon
+    has just forked; pandas and pyarrow must already be imported there
+    (pyworker.PRELOAD), not imported by the worker's first Arrow task,
+    and frozen out of the worker's per-task gc.collect().  The task is a
+    plain RDD task, whose body imports nothing before the check."""
+    import subprocess
+
+    from topicalcrawler_spark.session import CHECKOUT
+
+    env = {
+        **os.environ,
+        "PYTHONPATH": CHECKOUT,
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _FIRST_TASK],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "PRELOADED pandas,pyarrow frozen" in out.stdout.splitlines(), out.stdout

@@ -1,7 +1,7 @@
 import sys; sys.path.insert(0, "/root/repo")
 import tempfile, os
 from topicalcrawler_spark.session import get_spark
-from topicalcrawler_spark.plans.round import CrawlConfig, run_crawl
+from topicalcrawler_spark.plans.round import CrawlConfig, crawl_round, init_crawl
 from topicalcrawler_spark import icelite, streaming as st
 from topicalcrawler_spark.sources import fixtures as fx
 from topicalcrawler_spark.operators.images import decode_verify
@@ -10,8 +10,17 @@ root = tempfile.mkdtemp(); seeds = os.path.join(root, "seeds.txt")
 fx.write_seed_file(seeds)
 spark = get_spark(cpus=8, shuffle_partitions=8)
 cfg = CrawlConfig(root=os.path.join(root, "crawl"))
-stats = run_crawl(spark, cfg, seeds, rounds=2)
-assert all(s["n_verify_failed"] == 0 for s in stats)
+init_crawl(spark, cfg, seeds)
+tracker = spark.sparkContext.statusTracker()
+for r in (1, 2):
+    # job ids with no job group: every job a crawl round starts
+    before = set(tracker.getJobIdsForGroup())
+    s = crawl_round(spark, cfg, r)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(set(tracker.getJobIdsForGroup()) - before)
+    print(f"round {r}: {n_jobs} Spark jobs, n_fetched={s['n_fetched']}, "
+          f"n_new={s['n_new']}, wall {s['wall_s']:.1f} s")
+    assert s["n_verify_failed"] == 0
 corpus = icelite.read_snapshot(spark, cfg.table("corpus"))
 assert decode_verify(corpus).filter("NOT decode_ok OR dec_phash != phash").count() == 0
 table = os.path.join(root, "stream_counts")

@@ -24,6 +24,12 @@ def canon_udf(urls: pd.Series) -> pd.Series:
     return canon_series(urls)
 
 
+# Deterministic in fact; declared nondeterministic so Catalyst never
+# copies it into a predicate it pushes below the projection that
+# computes url_canon (see with_canon_and_relevance).
+canon_udf = canon_udf.asNondeterministic()
+
+
 @F.pandas_udf(T.LongType())
 def relevance_q_udf(context: pd.Series) -> pd.Series:
     """U2 — integer hashed-BoW link-context relevance (core.relevance)."""
@@ -50,6 +56,18 @@ def with_canon_and_relevance(
     buffers simultaneously (task stuck in selector with Recv-Q 33 MB /
     Send-Q 4 MB, observed round 4).  Bounding per-task socket payload
     is also simply the right shape at 100 TB.
+
+    ``canon_udf`` is declared nondeterministic, which keeps a filter on
+    ``url_canon`` (the P4 scheme gate, ``operators.gates``) above this
+    projection.  Catalyst only pushes a filter through a projection of
+    deterministic expressions, and when it does, it substitutes the UDF
+    for ``url_canon`` inside the pushed predicate: a second
+    ArrowEvalPython node, so canon would run twice on every link and
+    seed, with one more Arrow round trip and Python worker per task
+    (tests/test_plans.py pins one node on the crawl's link and seed
+    plans).  Filters on columns that exist before the canon pass belong
+    below it, written there by the caller (``plans.round`` applies the
+    gate's depth half to the fetched rows).
     Adds columns: url_canon:string, relevance_q:long.
     """
     return df.withColumns(

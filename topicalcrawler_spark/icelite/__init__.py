@@ -18,8 +18,17 @@ Physical layout::
                                               <tok> = unique per attempt)
       manifests/snap-000001.json          {snapshot_id, parent_id, files,
                                            row_count, round, meta,
-                                           data_dir}
+                                           file_stats, schema, data_dir}
       LATEST.json                          (atomic pointer, os.replace)
+
+The manifest carries the table schema, as Iceberg's table metadata
+does: the Spark schema JSON from the parquet footers, harvested in the
+same footer pass as the per-file stats.  ``read_snapshot`` hands it to
+``spark.read.schema`` and starts no Spark job, where a bare
+``spark.read.parquet`` runs a schema-inference job on every read.  A
+manifest without a ``schema`` key (written before it was recorded, or
+over files no Spark writer produced) keeps the inference read, so old
+crawl roots still resume.
 
 A commit writes data first, manifest second, pointer last — a crashed
 commit leaves the previous snapshot intact and fully readable
@@ -49,6 +58,10 @@ from glob import glob
 
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class CommitConflict(Exception):
@@ -130,14 +143,16 @@ EMPTY_RANGE_SENTINEL: list[int] = [(1 << 63) - 1, -(1 << 63)]
 
 def _collect_file_stats(
     files: list[str], on_empty: str
-) -> tuple[list[str], int, dict[str, list[int]], list[str]]:
+) -> tuple[list[str], int, dict[str, list[int]], list[str], dict | None]:
     """One parquet-footer pass over a commit's part files — the SHARED
     stats loop of ``commit`` and ``commit_files`` (a hand-duplicated
     copy drifting in one of them would silently break
     ``file_hash_index``'s every-file-has-stats completeness check on
     that path, permanently demoting the file-probed anti-join to its
     shuffle fallback).  Returns (kept_files, row_count, file_stats,
-    empty_files).
+    empty_files, schema); ``schema`` is the Spark schema JSON of the
+    first footer that has one (0-row files included), None when no
+    file was written by Spark.
 
     ``on_empty`` is the 0-row-file policy — the one legitimate
     difference between the two commit paths:
@@ -157,8 +172,11 @@ def _collect_file_stats(
     empties: list[str] = []
     row_count = 0
     file_stats: dict[str, list[int]] = {}
+    schema = None
     for f in files:
         md = pq.ParquetFile(f).metadata
+        if schema is None and SPARK_SCHEMA_KEY in (md.metadata or {}):
+            schema = json.loads(md.metadata[SPARK_SCHEMA_KEY])
         if md.num_rows == 0:
             empties.append(f)
             if on_empty == "sentinel":
@@ -170,7 +188,7 @@ def _collect_file_stats(
         st = _url_hash_stats(md)
         if st is not None:
             file_stats[f] = st
-    return kept, row_count, file_stats, empties
+    return kept, row_count, file_stats, empties, schema
 
 
 def _claim_manifest(manifest: dict, mpath: str) -> None:
@@ -283,7 +301,7 @@ def commit(
     # column-stats analogue: they let readers prune files by url_hash
     # range WITHOUT opening footers at read time (the file-probed exact
     # anti-join depends on this — operators/dedup.anti_join_seen_files).
-    nonempty, row_count, file_stats, empty = _collect_file_stats(
+    nonempty, row_count, file_stats, empty, schema = _collect_file_stats(
         files, on_empty="drop"
     )
     if nonempty:
@@ -309,6 +327,7 @@ def commit(
         "round": round_n,
         "meta": meta or {},
         "file_stats": file_stats,
+        "schema": schema,
         "data_dir": data_dir,
     }
     try:
@@ -355,7 +374,9 @@ def commit_files(
     # fallback for the rest of the table's life.  0-row files stay
     # listed with EMPTY_RANGE_SENTINEL (see _collect_file_stats: the
     # zero-copy contract forbids deleting the caller's files).
-    files, _, file_stats, _ = _collect_file_stats(files, on_empty="sentinel")
+    files, _, file_stats, _, schema = _collect_file_stats(
+        files, on_empty="sentinel"
+    )
     if mode == "append" and parent is not None:
         pm = read_manifest(table_dir, parent)
         files = pm["files"] + files
@@ -371,6 +392,7 @@ def commit_files(
         "round": round_n,
         "meta": meta or {},
         "file_stats": file_stats,
+        "schema": schema,
         "data_dir": data_dir,
     }
     _claim_manifest(manifest, _manifest_path(table_dir, snap_id))
@@ -416,21 +438,26 @@ def read_snapshot(
 ) -> DataFrame:
     """DataFrame over one snapshot's exact file list (manifest
     pruning); applies the manifest's logical view (where/select) when
-    the snapshot was committed via commit_files."""
+    the snapshot was committed via commit_files.  Reads with the
+    manifest's schema when it has one (no Spark job), else infers it
+    from a footer (a legacy manifest: one inference job)."""
     if snapshot_id is None:
         snapshot_id = latest_snapshot_id(table_dir)
         if snapshot_id is None:
             raise FileNotFoundError(f"no snapshots in {table_dir}")
     manifest = read_manifest(table_dir, snapshot_id)
+    reader = spark.read
+    if manifest.get("schema"):
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
     if not manifest["files"]:
         # empty snapshot: re-read the (schema-bearing) empty parquet dir
-        return spark.read.parquet(
+        return reader.parquet(
             manifest.get(
                 "data_dir",
                 os.path.join(table_dir, "data", f"snap-{snapshot_id:06d}"),
             )
         )
-    df = spark.read.parquet(*manifest["files"])
+    df = reader.parquet(*manifest["files"])
     meta = manifest.get("meta") or {}
     if meta.get("where"):
         df = df.where(meta["where"])

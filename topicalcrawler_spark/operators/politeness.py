@@ -100,65 +100,49 @@ def global_rank(
     base: int = 0,
 ) -> DataFrame:
     """Scale-safe global dense rank (``base`` + 1-based position in the
-    total order ``order``) with NO single-partition window (the round-1
-    plan moved whole sets to one task — the driver bench logged five
-    `WindowExec: No Partition Defined` warnings):
+    total order ``order``) with no Window, self-join or broadcast, and
+    one range exchange:
 
-      1. ``repartitionByRange`` on the order key — partition i holds
-         globally-smaller keys than partition i+1 (parallel, sampled
-         boundaries);
-      2. per-partition counts → each partition's cumulative offset,
-         computed as a tiny self-join aggregate over ≤ #partitions rows
-         (no window at all, so nothing single-partitions);
-      3. rank = base + offset(pid) + row_number within the partition.
+      1. ``repartitionByRange`` on the order key (partition i holds
+         smaller keys than partition i+1), ``sortWithinPartitions`` on
+         the same key, and per row its partition id and position in the
+         partition (the low 33 bits of ``monotonically_increasing_id``
+         are documented as the record number within the partition);
+      2. one job (eager, at call time) collects the ≤ #partitions row
+         counts to the driver, which turns them into offsets;
+      3. rank = base + offset[partition] + position + 1.
 
-    All one declarative plan, and the result is deterministic whenever
-    ``order`` is a total order on the rows — boundary placement can
-    never change the rank.  Every point of the plan is
-    O(rows/partitions) per task.
+    A ``Window.partitionBy`` over the partition id would add a hash
+    exchange of rows already range placed.  Deterministic whenever
+    ``order`` is a total order on the rows; O(rows/partitions) per task.
 
-    ``cache_registry`` (required): the internally persisted ranged
-    layout is appended here so the CALLER can unpersist it once the
-    result is materialized.  Required, not optional — persist()
-    registers a CacheManager entry at call time, so any call site that
-    "didn't care" would leak one entry per call, which is exactly the
-    per-round leak the registry was introduced to fix (round-3 ADVICE).
+    ``cache_registry`` (required): the ranged layout is persisted, so the
+    counts and the ranks read the SAME range boundaries, and appended
+    here so the CALLER can unpersist it once the result is materialized.
+    Required, not optional — persist() registers a CacheManager entry at
+    call time, so a call site that "didn't care" would leak one entry
+    per call (the per-round leak of round-3 ADVICE).
     """
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    # persist the ranged layout: BOTH consumers below (the counts
-    # subtree and the per-partition rank) must see the SAME sampled
-    # range boundaries.  Relying on ReuseExchange alone is fragile
-    # (spark.sql.exchange.reuse off, or plan divergence, would let the
-    # two subtrees re-sample different boundaries and desync _pid from
-    # the offsets) — a persisted partitioning is computed once by
-    # construction.
+    n = partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (
         df.repartitionByRange(n, *order)
+        .sortWithinPartitions(*order)
         .withColumn("_pid", F.spark_partition_id())
+        .withColumn(
+            "_pos", F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        )
         .persist()
     )
     cache_registry.append(ranged)
-    counts = ranged.groupBy("_pid").agg(F.count("*").alias("_cnt"))
-    offsets = (
-        counts.alias("a")
-        .join(counts.alias("b"), F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_off"))
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order)
-    return (
-        ranged.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            out_col,
-            (
-                F.lit(base).cast("long")
-                + F.col("_off")
-                + F.row_number().over(w_local)
-            ).cast("long"),
-        )
-        .drop("_pid", "_off")
-    )
+    counts = dict(ranged.groupBy("_pid").count().collect())
+    offsets, total = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(total)
+        total += counts.get(pid, 0)
+    off = F.array(*[F.lit(o).cast("long") for o in offsets])[F.col("_pid")]
+    return ranged.withColumn(
+        out_col, (F.lit(base).cast("long") + off + F.col("_pos") + 1).cast("long")
+    ).drop("_pid", "_pos")
 
 
 def global_fetch_order(

@@ -78,7 +78,7 @@ from ..operators.politeness import (
     with_crawl_delay_cap,
 )
 from ..operators.robots import latest_robots, with_robots_decision
-from ..schemas import FRONTIER, HOST_BUDGET, ROBOTS
+from ..schemas import FETCHED, FRONTIER, HOST_BUDGET, ROBOTS
 from ..sources import fixtures as fx
 
 # compaction cadence applied automatically once the file-probed seen
@@ -189,8 +189,9 @@ def _budgets_df(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
     return cfg._dims["budgets"]
 
 
-def init_crawl(spark: SparkSession, cfg: CrawlConfig, seeds_path: str) -> None:
-    """Round 0: seeds → canon → dedup (first line wins) → frontier+seen."""
+def _seed_frontier(spark: SparkSession, cfg: CrawlConfig, seeds_path: str) -> DataFrame:
+    """The admitted seed rows (FRONTIER columns, discovery_seq = the
+    seed-file line number): seeds → canon → scheme gate."""
     from ..sources import load_seeds
 
     seeds = (
@@ -212,37 +213,39 @@ def init_crawl(spark: SparkSession, cfg: CrawlConfig, seeds_path: str) -> None:
     # canon_url returns unchanged, urlcanon.py's contract being "the
     # engine's scheme filter (P4) drops them later" — must never reach
     # the frontier, the seen set, or a fetch.  The oracle crawler
-    # applies the identical gate to its seed loop.
-    seeds = scheme_depth_gate(seeds, cfg.max_depth)
-    # dense ADMISSION renumber (the module-docstring seq contract):
-    # gated/duplicate lines must not leave gaps, so that n_seen always
-    # equals the max assigned seq — round 1's new links start at
-    # n_seen + 1 and can never collide with a seed's seq.  The rank is
-    # over the pre-gate line number (load_seeds), preserving seed-file
-    # order among admitted seeds exactly as the oracle's admission loop
-    # does.
+    # applies the identical gate to its seed loop.  canon_udf is
+    # nondeterministic to Catalyst, so this filter stays above the one
+    # Arrow pass that computes url_canon (see with_canon_and_relevance).
+    return scheme_depth_gate(seeds, cfg.max_depth)
+
+
+def init_crawl(spark: SparkSession, cfg: CrawlConfig, seeds_path: str) -> None:
+    """Round 0: seeds → canon → dedup (first line wins) → frontier+seen."""
     init_caches: list = []
-    frontier0 = (
-        global_rank(
-            dedup_batch(seeds).withColumnRenamed("discovery_seq", "_line"),
-            [F.col("_line").asc()],
-            "discovery_seq",
-            init_caches,
-        )
-        .select(*[f.name for f in FRONTIER.fields])
-    )
-    frontier0 = place_by_shard(frontier0, cfg.n_shards).cache()
     try:
         # idempotent, same discipline as crawl_round's commits: init is
         # TWO commits, and a crash between them must be repairable —
         # by re-running init_crawl OR by resume() (both funnel the
         # second commit through _ensure_seen_initialized)
         if not _round_committed(cfg.table("frontier"), 0):
-            icelite.commit(frontier0, cfg.table("frontier"), 0,
-                           mode="replace")
+            # dense ADMISSION renumber (the module-docstring seq
+            # contract): gated/duplicate lines must not leave gaps, so
+            # that n_seen always equals the max assigned seq — round 1's
+            # new links start at n_seen + 1 and can never collide with a
+            # seed's seq.  The rank is over the pre-gate line number
+            # (load_seeds), preserving seed-file order among admitted
+            # seeds exactly as the oracle's admission loop does.
+            seeds = dedup_batch(_seed_frontier(spark, cfg, seeds_path))
+            frontier0 = global_rank(
+                seeds.withColumnRenamed("discovery_seq", "_line"),
+                [F.col("_line").asc()],
+                "discovery_seq",
+                init_caches,
+            ).select(*[f.name for f in FRONTIER.fields])
+            icelite.commit(place_by_shard(frontier0, cfg.n_shards),
+                           cfg.table("frontier"), 0, mode="replace")
         _ensure_seen_initialized(spark, cfg)
     finally:
-        frontier0.unpersist()
         for c in init_caches:
             c.unpersist()
 
@@ -343,6 +346,60 @@ def _reset_tombstones(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> No
     """Replace-commit an empty tombstone table at ``round_n``."""
     empty = spark.createDataFrame([], "url_canon string, url_hash long")
     icelite.commit(empty.repartition(1), cfg.table("fetched"), round_n, mode="replace")
+
+
+def _candidate_links(fetched: DataFrame, max_depth: int, round_n: int) -> DataFrame:
+    """The round's gated out-links (FRONTIER columns but discovery_seq,
+    plus the (parent_seq, idx) rank key): explode → canon (U1) +
+    relevance (U2) in one Arrow pass → scheme/depth gate (P4)."""
+    discovery_time = fx.T0 + timedelta(seconds=round_n)
+    links = (
+        # the depth half of the P4 gate, applied before the Python node
+        # so over-deep links never cross to a worker; scheme_depth_gate
+        # below stays the authority (its url_canon half cannot move
+        # here, and canon_udf's nondeterminism keeps Catalyst from
+        # pushing it down as a second canon pass)
+        fetched.filter(
+            (F.col("http_status") == 200) & (F.col("depth") + 1 <= max_depth)
+        )
+        .select(
+            F.col("url_canon").alias("parent_url"),
+            F.col("depth").alias("parent_depth"),
+            F.col("discovery_seq").alias("parent_seq"),
+            F.posexplode(F.arrays_zip("out_links", "link_context")).alias(
+                "idx", "z"
+            ),
+        )
+        .select(
+            F.col("z.out_links").alias("url"),
+            F.col("z.link_context").alias("context"),
+            "parent_url",
+            "parent_depth",
+            "parent_seq",
+            "idx",
+        )
+    )
+    # discovery_seq is NOT computed here: it is a post-dedup ADMISSION
+    # rank (module docstring) — the (parent_seq, idx) pair rides along
+    # as the within-batch tie-break and the rank key until assignment.
+    links = (
+        with_canon_and_relevance(links)
+        .withColumn("url_hash", url_hash_expr("url_canon"))
+        .withColumn("host", host_expr("url_canon"))
+        .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
+        .withColumn("discovery_time", F.lit(discovery_time))
+        .withColumn("relevance", relevance_expr("relevance_q"))
+        .withColumn("round", F.lit(round_n))
+        .withColumn("status", F.lit("pending"))
+        .select(
+            *[f.name for f in FRONTIER.fields if f.name != "discovery_seq"],
+            "parent_seq",
+            "idx",
+        )
+    )
+    # P4: scheme + depth gate (operators.gates — oracle-checked by the
+    # frontier_scheme_depth_filter registry entry)
+    return scheme_depth_gate(links, max_depth)
 
 
 def crawl_round(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> dict:
@@ -507,7 +564,8 @@ def _crawl_round_impl(
     fetch_selected(selected).write.mode("overwrite").option(
         "parquet.enable.dictionary", "false"  # fat binary col, see icelite
     ).parquet(fetch_dir)
-    fetched = spark.read.parquet(fetch_dir)
+    # the schema is known (fetch_selected emits FETCHED): no inference job
+    fetched = spark.read.schema(FETCHED).parquet(fetch_dir)
     mark("fetch_write")
 
     # 5. fetch metrics + U4 decode/phash verification (north_star:
@@ -563,31 +621,31 @@ def _crawl_round_impl(
 
     trace_caches: list = []
     try:
-        trace = global_fetch_order(
-            partitions=par,
-            cache_registry=trace_caches,
-            selected=fetched.select(
+        if not _round_committed(cfg.table("trace"), round_n):
+            trace = global_fetch_order(
+                partitions=par,
+                cache_registry=trace_caches,
+                selected=fetched.select(
+                    "url_canon",
+                    "host",
+                    "depth",
+                    "relevance_q",
+                    "discovery_time",
+                    "discovery_seq",
+                    "http_status",
+                    "image_id",
+                )
+            ).select(
+                "trace_seq",
+                F.lit(round_n).alias("round"),
                 "url_canon",
                 "host",
                 "depth",
                 "relevance_q",
-                "discovery_time",
                 "discovery_seq",
-                "http_status",
+                F.col("http_status").alias("status"),
                 "image_id",
             )
-        ).select(
-            "trace_seq",
-            F.lit(round_n).alias("round"),
-            "url_canon",
-            "host",
-            "depth",
-            "relevance_q",
-            "discovery_seq",
-            F.col("http_status").alias("status"),
-            "image_id",
-        )
-        if not _round_committed(cfg.table("trace"), round_n):
             icelite.commit(trace, cfg.table("trace"), round_n, mode="append")
     finally:
         # the commit materialized the ranged layout — release it even
@@ -624,49 +682,7 @@ def _crawl_round_impl(
     mark("corpus")
 
     # 7. new links
-    discovery_time = fx.T0 + timedelta(seconds=round_n)
-    links = (
-        fetched.filter(F.col("http_status") == 200)
-        .select(
-            F.col("url_canon").alias("parent_url"),
-            F.col("depth").alias("parent_depth"),
-            F.col("discovery_seq").alias("parent_seq"),
-            F.posexplode(F.arrays_zip("out_links", "link_context")).alias(
-                "idx", "z"
-            ),
-        )
-        .select(
-            F.col("z.out_links").alias("url"),
-            F.col("z.link_context").alias("context"),
-            "parent_url",
-            "parent_depth",
-            "parent_seq",
-            "idx",
-        )
-    )
-    # canon (U1) + relevance (U2) fused into one Arrow pass — one
-    # python worker per task instead of one per UDF per task
-    # discovery_seq is NOT computed here: it is a post-dedup ADMISSION
-    # rank (module docstring) — the (parent_seq, idx) pair rides along
-    # as the within-batch tie-break and the rank key until assignment.
-    links = (
-        with_canon_and_relevance(links)
-        .withColumn("url_hash", url_hash_expr("url_canon"))
-        .withColumn("host", host_expr("url_canon"))
-        .withColumn("depth", (F.col("parent_depth") + 1).cast("int"))
-        .withColumn("discovery_time", F.lit(discovery_time))
-        .withColumn("relevance", relevance_expr("relevance_q"))
-        .withColumn("round", F.lit(round_n))
-        .withColumn("status", F.lit("pending"))
-        .select(
-            *[f.name for f in FRONTIER.fields if f.name != "discovery_seq"],
-            "parent_seq",
-            "idx",
-        )
-    )
-    # P4: scheme + depth gate (operators.gates — oracle-checked by the
-    # frontier_scheme_depth_filter registry entry)
-    links = scheme_depth_gate(links, cfg.max_depth)
+    links = _candidate_links(fetched, cfg.max_depth, round_n)
     # T1 tie-break: (relevance desc, depth, time, parent_seq, idx) —
     # identical relative order to the assigned seq (monotone in
     # (parent_seq, idx); time is constant within a batch)
@@ -734,7 +750,7 @@ def _crawl_round_impl(
             delta_files = sorted(cur_files - bst["files"])
             if delta_files:
                 update_bloom_shard_files(
-                    spark.read.parquet(*delta_files).select("url_hash"),
+                    spark.read.schema("url_hash long").parquet(*delta_files),
                     bst["dir"], new_dir, cfg.n_shards, bst["n_bits"], bst["k"],
                 )
                 shutil.rmtree(bst["dir"], ignore_errors=True)
@@ -882,9 +898,15 @@ def _crawl_round_impl(
         icelite.expire_snapshots(fetched_tbl, keep_last=3)
     mark("frontier")
 
-    # lineage: per-partition fetch metrics + a round-total row (S7)
+    # lineage: per-fetch-task metrics + the round totals on every row
+    # (S7).  Keyed by the fetch task, i.e. the part-NNNNN index of the
+    # file it wrote — not spark_partition_id() of this re-read, whose
+    # file-scan splits pack several small files into one partition.
+    fetch_task = F.regexp_extract(
+        F.col("_metadata.file_name"), r"^part-(\d+)", 1
+    ).cast("int")
     per_part = (
-        fetched.groupBy(F.spark_partition_id().alias("partition_id"))
+        fetched.groupBy(fetch_task.alias("partition_id"))
         .agg(
             F.count("*").alias("n_fetched"),
             F.sum((F.col("http_status") != 200).cast("long")).alias("n_errors"),

@@ -15,11 +15,18 @@ the central directory of every zip on the worker path (pyspark.zip has
 3.2 s wall and ~13 worker CPU-s against 0.07 s for the same job without
 Python.  A crawl round runs ~55 Python tasks, so that was ~11 CPU-s per
 round.  The daemon keeps the invalidation only for tasks that change
-what is importable (see pyworker.py).  It must be importable before any
-task ships files, so ``spark.executorEnv.PYTHONPATH`` carries the
-checkout that holds this package, ahead of any PYTHONPATH the caller
-passes.  Sessions built without ``get_spark`` keep stock workers and
-get the package through ``_ship_package``.
+what is importable (see pyworker.py).  Before it forks any worker, the
+daemon also imports pandas, pyarrow (with ``.compute`` and ``.parquet``),
+PySpark's Arrow serializers and the engine's UDF modules
+(``pyworker.PRELOAD``), so a worker forked mid-round starts warm instead
+of importing them on its first Arrow task.  The one thread the preload
+adds to the daemon is pyarrow's jemalloc background thread; the
+fork-safety argument and its check are in pyworker.py.  The daemon
+must be importable before any task ships files, so
+``spark.executorEnv.PYTHONPATH`` carries the checkout that holds this
+package, ahead of any PYTHONPATH the caller passes.
+Sessions built without ``get_spark`` keep stock workers and get the
+package through ``_ship_package``.
 """
 
 from __future__ import annotations
