@@ -470,6 +470,51 @@ def test_incremental_bloom_equals_full_build(spark):
                 assert {s for s in ref if ref[s] != load(d_part)[s]} == {5}
 
 
+def test_incremental_bloom_update_runs_no_more_jobs_than_full_build(
+    spark, tmp_path
+):
+    """The incremental update is the full build's plan plus the previous
+    bitmaps, read with their known schema: it starts as many Spark jobs
+    as a full build (a schema-inferring read of the previous generation
+    would add one)."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from topicalcrawler_spark.operators.dedup import (
+        update_bloom_shard_files,
+        write_bloom_shard_files,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"bloom-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bloom")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def hashed(lo, hi):
+        return spark.range(lo, hi).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        )
+
+    n_shards = 8
+    (k, nb), full_jobs = jobs(lambda: write_bloom_shard_files(
+        hashed(0, 20_000), str(tmp_path / "full"), n_shards, total=20_000
+    ))
+    _, upd_jobs = jobs(lambda: update_bloom_shard_files(
+        hashed(20_000, 25_000), str(tmp_path / "full"), str(tmp_path / "upd"),
+        n_shards, nb, k,
+    ))
+    assert full_jobs > 0
+    assert upd_jobs == full_jobs
+
+
 def test_crawl_delay_cap_float_parity_with_oracle(spark):
     """The crawl-delay cap's trace parity rests on one claim: Spark's
     floor(lit(window) / crawl_delay) (IEEE-double divide, then floor)

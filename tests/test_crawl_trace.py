@@ -73,19 +73,76 @@ def test_trace_and_seen_match_oracle(spark, tmp_path, rounds):
 
 
 @pytest.mark.parametrize("bloom", [True, False])
-def test_file_probed_exact_join_is_trace_identical(spark, tmp_path, bloom):
-    """The third crossover (CrawlConfig.seen_join_file_min_keys): the
-    exact anti-join probed from the seen table's own files via manifest
-    url_hash stats — forced on from round 1, once with the bloom
-    prefilter (maybe-side path) and once without (full-links path: the
-    default bloom_min_keys is above this crawl's seen-set size).
-    Results must equal the oracle exactly."""
+def test_file_probed_exact_join_is_trace_identical(
+    spark, tmp_path, monkeypatch, bloom
+):
+    """The exact anti-join is probed from the seen table's own files via
+    manifest url_hash stats at every seen-set size — with the default
+    config, once with the bloom prefilter forced on (maybe-side path)
+    and once without (full-links path: the default bloom_min_keys is
+    above this crawl's seen-set size).  The plain left_anti join is
+    only the fallback for stats-less manifests, so it must never run
+    here.  Results must equal the oracle exactly."""
+    from topicalcrawler_spark.plans import round as round_mod
+
+    def no_shuffle_join(*a, **k):
+        raise AssertionError("shuffle anti-join ran on a stats-bearing table")
+
+    monkeypatch.setattr(round_mod, "anti_join_seen", no_shuffle_join)
     strace, sseen, cfg = _spark_crawl(
-        spark, tmp_path, 3, seen_join_file_min_keys=0,
-        **({"bloom_min_keys": 0} if bloom else {}),
+        spark, tmp_path, 3, **({"bloom_min_keys": 0} if bloom else {}),
     )
     assert ("bloom" in cfg._dims) == bloom
     otrace, oseen = _oracle_crawl(3)
+    assert strace == otrace
+    assert sseen == oseen
+
+
+def test_stats_less_seen_manifest_falls_back_to_shuffle_join(
+    spark, tmp_path, monkeypatch
+):
+    """A seen manifest without per-file url_hash stats (a foreign or
+    pre-stats manifest) cannot be file-probed: the round falls back to
+    the plain left_anti join against the snapshot, never to skipping
+    the join.  Two default-config rounds, with the stats stripped from
+    the seen head manifest before round 2: round 1 file-probes, round 2
+    falls back."""
+    import json
+
+    from topicalcrawler_spark import icelite
+    from topicalcrawler_spark.plans import round as round_mod
+    from topicalcrawler_spark.plans.round import crawl_round, init_crawl
+
+    calls = []
+    real = round_mod.anti_join_seen
+
+    def counting(links, seen):
+        calls.append(1)
+        return real(links, seen)
+
+    monkeypatch.setattr(round_mod, "anti_join_seen", counting)
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    cfg = CrawlConfig(root=str(tmp_path / "crawl"))
+    init_crawl(spark, cfg, seeds_path)
+    crawl_round(spark, cfg, 1)
+    assert not calls, "round 1 ran the shuffle anti-join on a stats-bearing table"
+    seen_dir = cfg.table("seen")
+    path = icelite._manifest_path(seen_dir, icelite.latest_snapshot_id(seen_dir))
+    with open(path) as f:
+        manifest = json.load(f)
+    del manifest["file_stats"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    assert icelite.file_hash_index(seen_dir) is None
+    crawl_round(spark, cfg, 2)
+    assert calls, "round 2 did not fall back to the shuffle anti-join"
+    strace = [
+        tuple(r[c] for c in TRACE_COLS)
+        for r in read_trace(spark, cfg).select(*TRACE_COLS).collect()
+    ]
+    sseen = {r["url_canon"] for r in read_seen(spark, cfg).collect()}
+    otrace, oseen = _oracle_crawl(2)
     assert strace == otrace
     assert sseen == oseen
 
@@ -426,8 +483,8 @@ def test_every_table_file_holds_one_shard(spark, tmp_path):
     frontier and fetched holds one top-bits shard (its manifest
     url_hash min and max map to the same ``shard_ids`` value), and no
     two files of one commit share a shard.  Benchmark crawl settings:
-    bloom and file-probed join forced on, both tables compacted every
-    round, checked after two rounds over every live commit."""
+    bloom forced on, both tables compacted every round, checked after
+    two rounds over every live commit."""
     import numpy as np
 
     from topicalcrawler_spark import icelite
@@ -437,7 +494,7 @@ def test_every_table_file_holds_one_shard(spark, tmp_path):
     _, _, cfg = _spark_crawl(
         spark, tmp_path, 2,
         n_shards=n_shards, max_depth=4, default_budget=60, budget_rows=[],
-        bloom_min_keys=0, seen_join_file_min_keys=0,
+        bloom_min_keys=0,
         compact_seen_every=1, compact_frontier_every=1,
     )
     for table in ("seen", "frontier", "fetched"):

@@ -5,12 +5,17 @@ bench_sf1 treats ``os.path.isdir(sf1_dir)`` as "tier complete", so a
 partial directory left by a crashed or replica-count-changed build
 would be silently benchmarked forever after (round-5 review finding).
 These tests pin the invariant ``out_dir exists => tier complete`` on
-the tiny driver sf0.001 tables (~2 s per build).
+the tiny driver sf0.001 tables (~2 s per build).  The design-point
+tool gets a tiny end-to-end run, so a ``CrawlConfig`` change that
+breaks it fails here rather than at its next full-size run.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -72,3 +77,33 @@ def test_make_sf_crashed_build_leaves_no_partial_tier(tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="simulated crash"):
         make_sf.build(out, replicas=3, src=SRC)
     assert len(os.listdir(f"{out}/documents.parquet")) == 2
+
+
+def test_designpoint_run_smoke(tmp_path):
+    """tools/designpoint_run.py end to end at a tiny size (100k seen
+    keys, 2k frontier rows, one round) in its own process: its one JSON
+    line reports a seen table grown by exactly the round's n_new, with
+    the bloom prefilter engaged by its default threshold."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scale_root = tmp_path / "scale"
+    scale_root.mkdir()
+    env = {
+        **os.environ,
+        "TC_SCALE_ROOT": str(scale_root),
+        "SPARK_GRAFT_DRIVER_MEM": "2g",
+    }
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "designpoint_run.py"),
+         "100000", "2000", "1"],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["metric"] == "designpoint_phase_walls"
+    assert out["crossovers"]["bloom_engaged"]
+    (rnd,) = out["per_round"]
+    assert rnd["n_fetched"] > 0 and rnd["n_new"] > 0
+    assert rnd["n_seen_after"] == 100_000 + rnd["n_new"]
+    assert rnd["bloom_capacity"] is not None  # the round built the bloom
+    assert os.listdir(scale_root) == []  # the tool removed its crawl root

@@ -1,15 +1,15 @@
 """Design-point demonstration: the per-round cost model at the largest
-frontier this sandbox can hold, with BOTH dedup crossovers (bloom
-prefilter, file-probed exact join) engaged by their REAL thresholds (not
-test-forced).
+frontier one machine can hold, with the bloom prefilter engaged by its
+REAL threshold (not test-forced) in front of the file-probed exact join.
 
 Synthesizes a mature crawl state — a multi-M-row pending frontier and a
-seen table past ``seen_join_file_min_keys`` (50M keys) — directly as
-icelite snapshots, then runs consecutive crawl_rounds with the DEFAULT
-CrawlConfig thresholds and records every phase wall.  The claim under test (BASELINE.md "Design-point cost
-model"): at steady state no per-round phase grows O(table) — round r+1
-phase walls stay flat while the seen/frontier tables grow by Δ each
-round, because
+seen table of tens of millions of keys — directly as icelite snapshots,
+then runs consecutive crawl_rounds with the DEFAULT CrawlConfig
+settings and records every phase wall.  It runs at any size; small
+sizes (e.g. ``100000 2000 1``) make a quick smoke run.  The claim under
+test (BASELINE.md "Design-point cost model"): at steady state no
+per-round phase grows O(table) — round r+1 phase walls stay flat while
+the seen/frontier tables grow by Δ each round, because
   - the bloom prefilter is file-distributed (probed in place, no
     driver round-trip) and maintained incrementally (O(Δ) after the
     round-1 build),
@@ -24,11 +24,11 @@ forced bloom rebuild).
 
 Round-5 extension — periodic-maintenance evidence (the last unmeasured
 cost-model rows): run with rounds >= 9 so BOTH compaction cadences fire
-at their REAL thresholds mid-run (seen auto-compaction and frontier
-LSM compaction both every 8 rounds once the file crossovers are
-engaged), and pass a rebuild period K (e.g. 4): after every K-th round
-the tool lowers the in-memory bloom record's capacity below n_seen, so
-the next round's capacity check fires a full rebuild at its real cost
+at their DEFAULT settings mid-run (seen compaction and frontier LSM
+compaction both every 8 rounds), and pass a rebuild period K (e.g. 4):
+after every K-th round the tool lowers the in-memory bloom record's
+capacity below n_seen, so the next round's capacity check fires a full
+rebuild at its real cost
 (the 50% table growth that trips it naturally cannot be simulated in a
 sandbox round).  The tool records per-round maintenance events +
 manifest file counts, and asserts each event fired when due, that
@@ -36,8 +36,8 @@ seen-table compaction collapsed the file count back to O(n_shards)
 without changing row counts, and that post-maintenance steady-state
 rounds return to flat phase walls.
 
-Prints ONE JSON line; the driver-facing copy goes to
-bench_results/r5_designpoint_*.json.
+Prints ONE JSON line on stdout (per-round progress goes to stderr);
+earlier runs' lines are kept in bench_results/*designpoint*.json.
 """
 
 from __future__ import annotations
@@ -93,13 +93,12 @@ def main() -> None:
         cfg = CrawlConfig(
             root=os.path.join(root, "crawl"),
             n_shards=32,
-            # real thresholds — nothing forced: bloom_min_keys=50k and
-            # seen_join_file_min_keys=50M both trip at n_seen=60M
+            # default settings — nothing forced: bloom_min_keys=50k
+            # trips at any n_seen past it
             default_budget=400,
             budget_rows=[],
             max_depth=8,
         )
-        assert n_seen >= cfg.seen_join_file_min_keys
 
         # --- synthesize the mature crawl state as round-0 snapshots ---
         t_synth = time.monotonic()
@@ -221,8 +220,7 @@ def main() -> None:
             assert st["n_seen_after"] == expect + st["n_new"], st
         if rounds >= 8:
             assert events["seen_compaction"], (
-                "seen auto-compaction (every 8 rounds past the file "
-                "crossover) never fired"
+                "seen compaction (compact_seen_every=8) never fired"
             )
             assert events["frontier_compaction"], (
                 "frontier LSM compaction (compact_frontier_every=8) "
@@ -241,11 +239,7 @@ def main() -> None:
             "n_seen0": n_seen,
             "n_frontier0": n_frontier,
             "rounds": rounds,
-            "crossovers": {
-                "bloom_engaged": n_seen >= cfg.bloom_min_keys,
-                "seen_join_file_threshold": cfg.seen_join_file_min_keys,
-                "seen_join_file_engaged": n_seen >= cfg.seen_join_file_min_keys,
-            },
+            "crossovers": {"bloom_engaged": n_seen >= cfg.bloom_min_keys},
             "bloom_rebuild_every": rebuild_every,
             "maintenance_events": events,
             "synth_wall_s": synth_wall,

@@ -7,11 +7,15 @@ silently drop URLs the reference fetches).  Architecture:
   phase 1 (optional, scale): bloom-shard prefilter inside an
            Arrow-batch UDF — drops ~(1-fpp) of already-seen candidates
            before any shuffle;
-  phase 2 (authority): exact left_anti join against the seen table on
+  phase 2 (authority): exact anti-join against the seen table on
            (url_hash, url_canon) — hash first so the join keys compare
            cheaply, canonical string second so a 64-bit collision can
            never merge two distinct URLs (at 10^10 keys the birthday
-           bound makes pure-hash joins wrong).
+           bound makes pure-hash joins wrong).  One form at every
+           seen-set size: the seen table's own shard files probed in
+           place (``anti_join_seen_files``); ``anti_join_seen``, a
+           plain left_anti join, serves only manifests without
+           per-file stats.
 
 The spec's "broadcast + per-partition shards" filter has ONE form here:
 shard bitmaps keyed by the top url_hash bits (``shard_ids``) are written
@@ -100,7 +104,8 @@ def dedup_batch(links: DataFrame, order: list | None = None) -> DataFrame:
 
 
 def anti_join_seen(links: DataFrame, seen: DataFrame) -> DataFrame:
-    """J1 phase 2 — the exact-set authority."""
+    """J1 phase 2 as a plain left_anti join — the fallback for a seen
+    snapshot whose manifest has no per-file url_hash stats."""
     return links.join(seen, ["url_hash", "url_canon"], "left_anti")
 
 
@@ -116,16 +121,19 @@ def overlapping_files(
 def anti_join_seen_files(
     links: DataFrame, file_index: list[tuple[str, int, int]]
 ) -> DataFrame:
-    """J1 phase 2, design-point form: the exact anti-join with the seen
-    side probed IN PLACE from its own icelite data files instead of
-    shuffled.
+    """J1 phase 2: the exact anti-join with the seen side probed IN
+    PLACE from its own icelite data files instead of shuffled — the
+    crawl's one exact seen join, at every seen-set size.
 
     Why: ``links LEFT ANTI seen`` broadcasts the seen side only while
     it is small; past broadcast size Spark plans a sort-merge join that
-    SHUFFLES the full 10^10-row seen table every round — the single largest per-round data movement at the design
-    point.  But the seen table's files are url_hash-clustered (every
-    commit and compaction goes through ``place_by_shard``, so each file
-    holds one shard) and the manifest records per-file url_hash
+    SHUFFLES the full 10^10-row seen table every round — the single
+    largest per-round data movement at the design point.  At fixture
+    size the two forms measured equal (same job counts and round
+    walls), so there is no crossover between them.  The seen table's
+    files are url_hash-clustered (every commit and compaction goes
+    through ``place_by_shard``, so each file holds one shard) and the
+    manifest records per-file url_hash
     [min,max] (icelite commit footer stats — the Iceberg manifest-stats
     analogue).  So each probe task can read ONLY the seen files
     overlapping its batch's url_hash range and anti-merge locally:
@@ -386,7 +394,10 @@ def update_bloom_shard_files(
         "update_bloom_shard_files: out_dir must differ from prev_dir "
         "(in-place update would overwrite bitmaps while reading them)"
     )
-    prev = seen_delta.sparkSession.read.parquet(prev_dir).select("shard_id", "bits")
+    # the schema is known, so the read runs no schema-inference job
+    prev = seen_delta.sparkSession.read.schema("shard_id int, bits binary").parquet(
+        prev_dir
+    )
     _write_merged(
         prev.unionByName(_shard_partials(seen_delta, n_shards, n_bits, k)), out_dir
     )

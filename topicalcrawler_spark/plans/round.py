@@ -11,12 +11,14 @@ trace / lineage):
   6. U4 decode/verify -> corpus append
   7. links: explode + canon (U1) + score (U2) + scheme/depth filter
      + T1 deterministic batch dedup + (optional bloom prefilter) +
-     J1 exact anti-join vs seen
+     J1 exact anti-join vs seen, probed in place from the seen
+     table's own shard files (no shuffle of the seen side, at any size)
   8. commit: seen += new links, frontier += new links, fetched +=
      the keys this round consumed (tombstones), lineage +=
-     per-partition metrics; every ``compact_frontier_every`` rounds
-     the pending set (frontier minus tombstones) is rewritten and the
-     tombstones reset
+     per-partition metrics; every ``compact_seen_every`` rounds the
+     seen table is rewritten one file per shard, and every
+     ``compact_frontier_every`` rounds the pending set (frontier minus
+     tombstones) is rewritten and the tombstones reset
 
 Determinism contract (SURVEY.md §7 hard part 1): ordering key =
 (relevance_q desc, depth, discovery_time, discovery_seq) — all
@@ -81,10 +83,6 @@ from ..operators.robots import latest_robots, with_robots_decision
 from ..schemas import FETCHED, FRONTIER, HOST_BUDGET, ROBOTS
 from ..sources import fixtures as fx
 
-# compaction cadence applied automatically once the file-probed seen
-# join engages and the caller left compact_seen_every at 0 (auto)
-AUTO_COMPACT_SEEN_EVERY = 8
-
 
 @dataclass
 class CrawlConfig:
@@ -105,29 +103,13 @@ class CrawlConfig:
     # for operators.dedup.BLOOM_HEADROOM x the build-time n_seen, and a
     # full rebuild fires once n_seen outgrows that size.
     bloom_min_keys: int = 50_000
-    # exact-join crossover: past this seen-set size the EXACT anti-join's
-    # sort-merge shuffle of the full seen table (the single largest
-    # per-round data movement at 10^10 keys) is replaced by the
-    # file-probed join (operators.dedup.anti_join_seen_files): links are
-    # placed by url_hash shard and probe task i reads ONLY the seen
-    # files of shard i, found via the manifest's commit-time per-file
-    # url_hash stats.  Below spark.sql.autoBroadcastJoinThreshold the
-    # shuffle path is itself a broadcast join (LeftAnti, BuildRight —
-    # the seen side is the one broadcast), which is why the crossover
-    # stays: at fixture size forcing the file probe made the seen phase
-    # slower (~1.5-2.3 s -> ~2.1-3.1 s per round over 3 rounds).
-    # Results identical (trace test pins it by forcing
-    # seen_join_file_min_keys=0).
-    seen_join_file_min_keys: int = 50_000_000
-    # compact+expire the seen table every K rounds (0 = auto).  Physical
-    # maintenance only — never changes results (trace-test-pinned).
-    # Auto: off while the seen table is small, but once the file-probed
-    # exact anti-join engages (seen_join_file_min_keys) compaction
-    # becomes MANDATORY every ``AUTO_COMPACT_SEEN_EVERY`` rounds: the
-    # probe's per-task memory is bounded by compaction's target file
-    # size, and an append-only table accumulating O(rounds) files per
-    # shard would erode that bound (round-3 ADVICE).
-    compact_seen_every: int = 0
+    # compact+expire the seen table every K rounds (0 = never), by
+    # url_hash shard so file i stays shard i.  Physical maintenance
+    # only — never changes results (trace-test-pinned).  It also bounds
+    # the exact anti-join: its per-task memory is the compacted file
+    # size, which an append-only table gaining O(n_shards) files a
+    # round would erode.
+    compact_seen_every: int = 8
     # LSM frontier: the frontier table is append-only (new links per
     # round) plus a fetched/blocked tombstone-keys table; the pending
     # set is resolved at read time by the same zero-shuffle file-probed
@@ -324,19 +306,18 @@ def _anti_join_snapshot(
     df: DataFrame,
     table_dir: str,
     snap_id: int | None = None,
-    probe_files: bool = True,
 ) -> DataFrame:
     """``df`` minus the (url_hash, url_canon) keys of an icelite table
     snapshot (latest when ``snap_id`` is None) — exact and
-    collision-safe either way.  With ``probe_files`` the table's own
-    shard-placed files are probed in place, pruned by the manifest's
-    per-file url_hash stats (``anti_join_seen_files``: zero shuffle of
-    the table side); a ``df`` placed by ``place_by_shard`` makes probe
-    task i read only shard i's files.  Without stats (a foreign or
-    pre-stats manifest) it falls back to a plain left-anti join
-    against the snapshot — never to skipping the join, which would
-    resurrect rows the table was meant to remove."""
-    index = icelite.file_hash_index(table_dir, snap_id) if probe_files else None
+    collision-safe.  The table's own shard-placed files are probed in
+    place, pruned by the manifest's per-file url_hash stats
+    (``anti_join_seen_files``: zero shuffle of the table side, at any
+    table size); a ``df`` placed by ``place_by_shard`` makes probe task
+    i read only shard i's files.  Without stats (a foreign or pre-stats
+    manifest) it falls back to a plain left-anti join against the
+    snapshot — never to skipping the join, which would resurrect rows
+    the table was meant to remove."""
+    index = icelite.file_hash_index(table_dir, snap_id)
     if index is None:
         return anti_join_seen(df, icelite.read_snapshot(spark, table_dir, snap_id))
     return anti_join_seen_files(df, index)
@@ -701,23 +682,9 @@ def _crawl_round_impl(
     seen_manifest = icelite.read_manifest(cfg.table("seen"), seen_snap_id)
     n_seen = seen_manifest["row_count"]
     bloom_on = n_seen >= cfg.bloom_min_keys
-    probe_files = n_seen >= cfg.seen_join_file_min_keys
-    if bloom_on or probe_files:
-        # the one candidate layout, partition i = url_hash shard i, read
-        # by the bloom probe and the file-probed join.  Below both
-        # crossovers the shuffle join exchanges on its own keys, so a
-        # placement there would be one more shuffle that nothing reads.
-        links = place_by_shard(links, cfg.n_shards)
-
-    def exact_unseen(cand: DataFrame) -> DataFrame:
-        # exact-join crossover (CrawlConfig.seen_join_file_min_keys):
-        # probe the seen table's own shard-placed files in place
-        # instead of shuffling them through a sort-merge join
-        return _anti_join_snapshot(
-            spark, cand, cfg.table("seen"), seen_snap_id,
-            probe_files=probe_files,
-        )
-
+    # the one candidate layout, partition i = url_hash shard i, read by
+    # the bloom probe and the file-probed exact join
+    links = place_by_shard(links, cfg.n_shards)
     mark("links")
     # bloom crossover (see CrawlConfig.bloom_min_keys): the prefilter
     # pays only when the seen table is big enough that skipping the
@@ -784,15 +751,19 @@ def _crawl_round_impl(
         # through the exact anti-join (the authority)
         fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        new_links = fresh.unionByName(exact_unseen(maybe))
+        new_links = fresh.unionByName(
+            _anti_join_snapshot(spark, maybe, cfg.table("seen"), seen_snap_id)
+        )
         cand_df = probed
     else:
         links = links.cache()
         caches.append(links)
-        new_links = exact_unseen(links)
+        new_links = _anti_join_snapshot(
+            spark, links, cfg.table("seen"), seen_snap_id
+        )
         cand_df = links
     # discovery_seq = ADMISSION rank (module docstring): base = n_seen
-    # (the as-of manifest row count already read for the crossovers —
+    # (the as-of manifest row count already read for the crossover —
     # O(1), and pinned to round_n-1 so a crash re-run reproduces the
     # identical seqs), rank over (parent_seq, idx) among the admitted
     # links.  O(Δ log Δ) — one range exchange of the new links, the
@@ -825,19 +796,14 @@ def _crawl_round_impl(
     # the commit just materialized cand_df's cache as a side effect, so
     # this count is a cache-local read, not a recompute job
     n_candidates = cand_df.count()
-    # maintenance plane: the seen table is re-read EVERY round for the
+    # maintenance plane: the seen table is probed EVERY round by the
     # anti-join but grows by O(n_shards) files per append — periodic
     # compaction (by url_hash shard, keeping file i = shard i) + expiry
     # keeps its file count O(n_shards) forever.  Pure physical rewrite:
     # the trace test with compact_seen_every=2 pins result equality.
-    compact_every = cfg.compact_seen_every or (
-        AUTO_COMPACT_SEEN_EVERY
-        if n_seen >= cfg.seen_join_file_min_keys
-        else 0
-    )
     if (
-        compact_every
-        and round_n % compact_every == 0
+        cfg.compact_seen_every
+        and round_n % cfg.compact_seen_every == 0
         and not _compaction_done(cfg.table("seen"), round_n)
     ):
         icelite.compact(
