@@ -1152,3 +1152,166 @@ def test_randomized_robots_table_trace_parity(spark, tmp_path, monkeypatch):
     assert len(strace) == 179 and len(sseen) == 590  # the recorded trial
     assert strace == otrace
     assert sseen == oseen
+
+
+# (n_pending, n_robots_blocked, n_fetched, n_errors, n_verify_failed,
+#  n_candidates, n_new) of rounds 1-4 on the seed fixture, with or
+# without the bloom prefilter; each counter's source must reproduce them
+FIXTURE_ROUND_COUNTERS = [
+    (193, 7, 68, 3, 0, 270, 270),
+    (388, 30, 95, 6, 0, 333, 333),
+    (596, 34, 120, 3, 0, 481, 481),
+    (923, 57, 158, 3, 0, 94, 94),
+]
+COUNTER_KEYS = (
+    "n_pending", "n_robots_blocked", "n_fetched", "n_errors",
+    "n_verify_failed", "n_candidates", "n_new",
+)
+
+
+@pytest.mark.parametrize("bloom", [True, False], ids=["bloom", "default"])
+def test_round_counters_pinned_and_match_tables(spark, tmp_path, bloom):
+    """Every counter crawl_round returns, and the lineage rows, equal
+    the pinned values, and agree with the tables they count: n_fetched
+    is the round's trace rows, n_errors those with status != 200, n_new
+    the seen delta, the corpus row count the round's traced images.
+    Benchmarks sum n_fetched + n_candidates as work done, so a counter
+    observed twice (a re-evaluated plan) would show here."""
+    from pyspark.sql import functions as F
+
+    from topicalcrawler_spark import icelite
+    from topicalcrawler_spark.plans.round import crawl_round, init_crawl
+
+    def rows(table):
+        d = cfg.table(table)
+        snap = icelite.latest_snapshot_id(d)
+        return icelite.read_manifest(d, snap)["row_count"] if snap else 0
+
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    cfg = CrawlConfig(
+        root=str(tmp_path / "crawl"), **({"bloom_min_keys": 0} if bloom else {})
+    )
+    init_crawl(spark, cfg, seeds_path)
+    for r, want in enumerate(FIXTURE_ROUND_COUNTERS, start=1):
+        seen0, corpus0 = rows("seen"), rows("corpus")
+        st = crawl_round(spark, cfg, r)
+        assert tuple(st[k] for k in COUNTER_KEYS) == want, r
+        assert all(type(st[k]) is int for k in COUNTER_KEYS)
+        trace = read_trace(spark, cfg).filter(F.col("round") == r).collect()
+        assert st["n_fetched"] == len(trace)
+        assert st["n_errors"] == sum(t["status"] != 200 for t in trace)
+        assert st["n_new"] == rows("seen") - seen0
+        assert rows("corpus") - corpus0 == sum(
+            t["image_id"] is not None for t in trace
+        )
+        lineage = icelite.read_snapshot(spark, cfg.table("lineage")).filter(
+            F.col("round") == r
+        ).collect()
+        assert {
+            (x["n_candidates"], x["n_dedup"], x["n_robots_blocked"])
+            for x in lineage
+        } == {
+            (st["n_candidates"], st["n_candidates"] - st["n_new"],
+             st["n_robots_blocked"])
+        }
+        assert sum(x["n_fetched"] for x in lineage) == st["n_fetched"]
+        assert sum(x["n_errors"] for x in lineage) == st["n_errors"]
+
+
+# round 2's Spark jobs below, in the test session (local[8], 8 shuffle
+# partitions)
+WARM_ROUND_JOBS = 43
+
+
+def test_warm_round_spark_job_count(spark, tmp_path):
+    """A warm round in the benchmark's crawl settings (4 shards, bloom
+    forced on, both compactions every round) starts a pinned number of
+    Spark jobs: its counters ride jobs it runs anyway (Observations on
+    the fetch write and the robots gate cache, one verify aggregate),
+    not a separate metrics action.  A change that adds a job per round
+    fails here and has to update the count on purpose."""
+    import uuid
+
+    from topicalcrawler_spark.plans.round import crawl_round, init_crawl
+
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    cfg = CrawlConfig(
+        root=str(tmp_path / "crawl"), n_shards=4, max_depth=4,
+        default_budget=60, budget_rows=[], bloom_min_keys=0,
+        compact_seen_every=1, compact_frontier_every=1,
+    )
+    init_crawl(spark, cfg, seeds_path)
+    crawl_round(spark, cfg, 1)
+    sc = spark.sparkContext
+    group = f"round-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "crawl_round")
+    try:
+        st = crawl_round(spark, cfg, 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert st["n_fetched"] > 0 and st["n_new"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == WARM_ROUND_JOBS
+
+
+def test_round_counters_survive_a_crash_rerun(spark, tmp_path, monkeypatch):
+    """A crash after every table commit of round 2 but lineage (both
+    compactions and expiries included) leaves a re-run nothing to
+    append: it must still return the clean run's counters, the skipped
+    appends' deltas read from their manifests and the fetch counters
+    observed on the re-fetch into a scratch dir."""
+    from topicalcrawler_spark import icelite
+    from topicalcrawler_spark.plans.round import crawl_round, init_crawl
+
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    cfg = CrawlConfig(
+        root=str(tmp_path / "crawl"), compact_seen_every=1,
+        compact_frontier_every=1,
+    )
+    init_crawl(spark, cfg, seeds_path)
+    crawl_round(spark, cfg, 1)
+
+    class Boom(Exception):
+        pass
+
+    real_expire = icelite.expire_snapshots
+
+    def crashing(table_dir, *a, **kw):
+        out = real_expire(table_dir, *a, **kw)
+        if table_dir == cfg.table("fetched"):
+            raise Boom(table_dir)
+        return out
+
+    monkeypatch.setattr(icelite, "expire_snapshots", crashing)
+    with pytest.raises(Boom):
+        crawl_round(spark, cfg, 2)
+    monkeypatch.setattr(icelite, "expire_snapshots", real_expire)
+    st = crawl_round(spark, cfg, 2)
+    assert tuple(st[k] for k in COUNTER_KEYS) == FIXTURE_ROUND_COUNTERS[1]
+    lineage = icelite.read_snapshot(spark, cfg.table("lineage")).collect()
+    assert {x["n_robots_blocked"] for x in lineage if x["round"] == 2} == {
+        st["n_robots_blocked"]
+    }
+    assert not glob.glob(os.path.join(cfg.root, "_refetch-*"))
+
+
+def test_all_blocked_round_counts_every_url_as_blocked(spark, tmp_path):
+    """Robots rules that disallow every host leave the fetch, the links
+    and the candidate set empty: the round still reports its counters
+    (an Observation pruned by AQE along with an empty plan would fail
+    here instead), and the next round finds nothing pending."""
+    from topicalcrawler_spark.plans.round import crawl_round, init_crawl
+
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    robots = [
+        dict(r, rules=[{"prefix": "/", "allow": False}]) for r in fx.make_robots()
+    ]
+    cfg = CrawlConfig(root=str(tmp_path / "crawl"), robots_rows=robots)
+    init_crawl(spark, cfg, seeds_path)
+    st = crawl_round(spark, cfg, 1)
+    assert tuple(st[k] for k in COUNTER_KEYS) == (193, 193, 0, 0, 0, 0, 0)
+    assert crawl_round(spark, cfg, 2)["n_pending"] == 0

@@ -1,5 +1,5 @@
-import sys; sys.path.insert(0, "/root/repo")
-import tempfile, os
+import os, sys, tempfile
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from topicalcrawler_spark.session import get_spark
 from topicalcrawler_spark.plans.round import CrawlConfig, crawl_round, init_crawl
 from topicalcrawler_spark import icelite, streaming as st

@@ -26,12 +26,13 @@ from ..core.imagecodec import decode, phash64
 
 
 def decode_verify(df: DataFrame, bytes_col="bytes", fmt_col="fmt") -> DataFrame:
-    """U4 — adds dec_w, dec_h, dec_phash, decode_ok from the payload."""
+    """U4 — adds dec_w, dec_h, dec_phash, decode_ok from the payload,
+    which is decoded but not returned (its bytes never leave Python)."""
     from pyspark.sql import types as T
 
     # build a fresh StructType — .add() on df.schema mutates the cached one
     out_schema = T.StructType(
-        list(df.schema.fields)
+        [f for f in df.schema.fields if f.name != bytes_col]
         + [
             T.StructField("dec_w", T.IntegerType()),
             T.StructField("dec_h", T.IntegerType()),
@@ -52,7 +53,7 @@ def decode_verify(df: DataFrame, bytes_col="bytes", fmt_col="fmt") -> DataFrame:
                     oks.append(True)
                 except Exception:
                     ws.append(0), hs.append(0), phs.append(0), oks.append(False)
-            yield pdf.assign(
+            yield pdf.drop(columns=bytes_col).assign(
                 dec_w=pd.array(ws, dtype="int32"),
                 dec_h=pd.array(hs, dtype="int32"),
                 dec_phash=pd.array(phs, dtype="Int64"),

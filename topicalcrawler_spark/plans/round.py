@@ -47,7 +47,7 @@ import time
 from dataclasses import dataclass, field
 from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import icelite
@@ -72,6 +72,7 @@ from ..operators.dedup import (
 )
 from ..operators.fetch import fetch_selected
 from ..operators.gates import scheme_depth_gate
+from ..operators.images import decode_verify
 from ..operators.politeness import (
     global_fetch_order,
     global_rank,
@@ -323,6 +324,19 @@ def _anti_join_snapshot(
     return anti_join_seen_files(df, index)
 
 
+def _appended_rows(table_dir: str, round_n: int) -> int:
+    """Rows added by the table's first round_n commit (its append): a
+    later same-round compaction or reset does not hide them, nor does a
+    crash re-run that skipped the append (expiry keeps its parent)."""
+    m = icelite.read_manifest(table_dir, icelite.latest_snapshot_id(table_dir))
+    while m["parent_id"]:
+        parent = icelite.read_manifest(table_dir, m["parent_id"])
+        if parent["round"] < round_n:
+            return m["row_count"] - parent["row_count"]
+        m = parent
+    return m["row_count"]
+
+
 def _reset_tombstones(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> None:
     """Replace-commit an empty tombstone table at ``round_n``."""
     empty = spark.createDataFrame([], "url_canon string, url_hash long")
@@ -387,9 +401,16 @@ def crawl_round(spark: SparkSession, cfg: CrawlConfig, round_n: int) -> dict:
     """Execute one crawl round; returns the round's metric counters.
 
     Action discipline: every Spark job costs fixed scheduling latency,
-    so counters come from manifest row_counts (free) or single merged
-    aggregations — never one .count() per metric.  Returned stats
-    include per-phase wall times (``phases``) for scaling diagnosis.
+    so no counter re-reads rows another job produced.  n_pending, n_new
+    and n_robots_blocked are manifest row-count deltas; n_fetched and
+    n_errors an Observation on the fetch write; n_verify_failed the
+    verify pass's one aggregate (it decodes the bytes as stored);
+    n_candidates a count of the candidate cache global_rank already
+    materialized (an Observation there, or on the robots gate cache,
+    is pruned by AQE when the plan below it is empty, and its ``get``
+    fails).  Every source exists on every attempt, crash re-runs
+    included.  Returned stats include per-phase wall times
+    (``phases``) for scaling diagnosis.
 
     Every DataFrame the round persists is registered and released in
     a ``finally`` — a round that dies mid-flight (crash-injection
@@ -484,9 +505,9 @@ def _crawl_round_impl(
         )
 
     # 2. robots gate (J2/J7/P5 — all JVM-side); the robots dim
-    # (as-of-resolved) is memoized across rounds.  The gate METRICS are
-    # not computed here — they ride along in the fetch-metrics action
-    # below, so the gate phase launches zero jobs of its own.
+    # (as-of-resolved) is memoized across rounds.  The gate launches no
+    # job of its own: n_robots_blocked is the tombstone append's row
+    # delta minus n_fetched (step 8).
     robots_cur = _robots_df(spark, cfg)
     gated = with_robots_decision(frontier, robots_cur).cache()
     caches.append(gated)
@@ -542,62 +563,40 @@ def _crawl_round_impl(
         if corpus_done
         else icelite.next_data_dir(cfg.table("corpus"))
     )
-    fetch_selected(selected).write.mode("overwrite").option(
+    # observed directly under the write, the node survives AQE even
+    # when every pending URL was blocked (it then observes n = 0)
+    fetch_obs = Observation()
+    fetch_selected(selected).observe(
+        fetch_obs,
+        F.count("*").alias("n"),
+        F.count_if(F.col("http_status") != 200).alias("n_err"),
+        F.count("image_id").alias("n_img"),
+    ).write.mode("overwrite").option(
         "parquet.enable.dictionary", "false"  # fat binary col, see icelite
     ).parquet(fetch_dir)
+    fo = fetch_obs.get
+    n_fetched, n_errors, n_images = fo["n"], fo["n_err"], fo["n_img"]
     # the schema is known (fetch_selected emits FETCHED): no inference job
     fetched = spark.read.schema(FETCHED).parquet(fetch_dir)
     mark("fetch_write")
 
-    # 5. fetch metrics + U4 decode/phash verification (north_star:
-    # "images decoded/phash-verified in Arrow-batch UDFs") + the robots
-    # gate metrics, all in ONE action: the three aggregate subtrees are
-    # cross-joined so a single job computes them in parallel (the gate
-    # side reads the cached ``gated``) instead of paying serial job
-    # round-trips per metric.  The action runs to completion BEFORE the
+    # 5. U4 decode/phash verification (north_star: "images
+    # decoded/phash-verified in Arrow-batch UDFs") of the bytes as
+    # STORED: the round's one aggregate action.  It runs BEFORE the
     # trace phase, not overlapped with it from a second driver thread:
-    # that overlap measured flat on 4 cores (benchmark crawl round,
-    # 12.98 vs 13.16 reference-s, inside run-to-run noise), since the
-    # decode pass and the trace exchange compete for the same cores
-    # anyway.  Serial, every job runs inside exactly one phase, so each
-    # phase wall in the returned stats is the time of that phase's own
-    # jobs.
-    from ..operators.images import decode_verify
-
-    verify_agg = decode_verify(
+    # that measured flat on 4 cores (benchmark crawl round, 12.98 vs
+    # 13.16 reference-s), the decode pass and the trace exchange
+    # competing for the same cores.  Serial, every job runs inside one
+    # phase, so each phase wall is the time of that phase's own jobs.
+    n_verify_failed = decode_verify(
         fetched.filter(F.col("image_id").isNotNull()).select(
-            "image_id", F.col("image_bytes").alias("bytes"),
+            F.col("image_bytes").alias("bytes"),
             F.col("img_w").alias("w"), F.col("img_h").alias("h"),
             F.col("img_fmt").alias("fmt"), "phash",
         )
-    ).agg(
-        F.count("*").alias("n_img"),
-        F.sum(
-            (
-                ~F.col("decode_ok")
-                | (F.col("dec_phash") != F.col("phash"))
-                | (F.col("dec_w") != F.col("w"))
-                | (F.col("dec_h") != F.col("h"))
-            ).cast("long")
-        ).alias("n_bad"),
-    )
-    gate_agg = gated.agg(
-        F.count("*").alias("n_gated"),
-        F.sum(F.col("robots_allowed").cast("long")).alias("n_allowed"),
-    )
-    metrics_df = (
-        fetched.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("http_status") != 200).cast("long")).alias("n_err"),
-        )
-        .crossJoin(verify_agg)
-        .crossJoin(gate_agg)
-    )
-    fr = metrics_df.first()
-    n_fetched, n_errors = int(fr["n"]), int(fr["n_err"] or 0)
-    n_images = int(fr["n_img"] or 0)
-    n_verify_failed = int(fr["n_bad"] or 0)
-    n_blocked = int(fr["n_gated"] - (fr["n_allowed"] or 0))
+    ).filter(
+        "NOT decode_ok OR dec_phash != phash OR dec_w != w OR dec_h != h"
+    ).count()
     mark("fetch_verify")
 
     trace_caches: list = []
@@ -740,28 +739,25 @@ def _crawl_round_impl(
                 "dir": new_dir, "k": k, "n_bits": n_bits,
                 "capacity": int(n_seen * BLOOM_HEADROOM),
             }
-        probe = bloom_prefilter_files(links, bst["dir"], cfg.n_shards, bst["k"])
+        links = bloom_prefilter_files(links, bst["dir"], cfg.n_shards, bst["k"])
         bst["files"] = cur_files
         cfg._dims["bloom"] = bst
-        # cache the probe output: both branches below read it, so the
-        # Arrow probe pass runs once, not once per branch
-        probed = probe.cache()
-        caches.append(probed)
+    # cache the candidates (with the bloom on, the probe output: both
+    # branches below read it, so the Arrow probe pass runs once)
+    links = links.cache()
+    caches.append(links)
+    if bloom_on:
         # definitely-unseen rows skip the exact join; possible hits go
         # through the exact anti-join (the authority)
-        fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+        fresh = links.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        maybe = links.filter(F.col("maybe_seen")).drop("maybe_seen")
         new_links = fresh.unionByName(
             _anti_join_snapshot(spark, maybe, cfg.table("seen"), seen_snap_id)
         )
-        cand_df = probed
     else:
-        links = links.cache()
-        caches.append(links)
         new_links = _anti_join_snapshot(
             spark, links, cfg.table("seen"), seen_snap_id
         )
-        cand_df = links
     # discovery_seq = ADMISSION rank (module docstring): base = n_seen
     # (the as-of manifest row count already read for the crossover —
     # O(1), and pinned to round_n-1 so a crash re-run reproduces the
@@ -778,24 +774,22 @@ def _crawl_round_impl(
     ).select(*[f.name for f in FRONTIER.fields])
     new_links = place_by_shard(new_links, cfg.n_shards).cache()
     caches.append(new_links)
+    # cache-local: global_rank's eager count just materialized the
+    # candidates, on every attempt (crash re-runs included)
+    n_candidates = links.count()
 
     # 8. commits: seen += new, frontier += new, fetched += consumed
     # (n_new comes free from the append-commit's manifest delta; each
     # append is guarded by _round_committed so a crash re-run never
     # double-appends)
     if not _round_committed(cfg.table("seen"), round_n):
-        seen_snap = icelite.commit(
+        icelite.commit(
             new_links.select("url_canon", "url_hash"),
             cfg.table("seen"),
             round_n,
             mode="append",
         )
-    else:
-        seen_snap = icelite.latest_snapshot_id(cfg.table("seen"))
-    n_new = icelite.read_manifest(cfg.table("seen"), seen_snap)["row_count"] - n_seen
-    # the commit just materialized cand_df's cache as a side effect, so
-    # this count is a cache-local read, not a recompute job
-    n_candidates = cand_df.count()
+    n_new = _appended_rows(cfg.table("seen"), round_n)
     # maintenance plane: the seen table is probed EVERY round by the
     # anti-join but grows by O(n_shards) files per append — periodic
     # compaction (by url_hash shard, keeping file i = shard i) + expiry
@@ -830,6 +824,8 @@ def _crawl_round_impl(
     )
     if not _round_committed(fetched_tbl, round_n):
         icelite.commit(tombs, fetched_tbl, round_n, mode="append")
+    # one tombstone per consumed row: each fetched and each blocked one
+    n_blocked = _appended_rows(fetched_tbl, round_n) - n_fetched
     if not _round_committed(cfg.table("frontier"), round_n):
         frontier_snap = icelite.commit(
             new_links.select(*[f.name for f in FRONTIER.fields]),
@@ -896,19 +892,18 @@ def _crawl_round_impl(
         shutil.rmtree(fetch_dir, ignore_errors=True)
     mark("lineage")
 
-    stats = {
+    return {
         "phases": phases,
         "round": round_n,
         "n_pending": n_pending,
-        "n_robots_blocked": int(n_blocked),
-        "n_fetched": int(n_fetched),
-        "n_errors": int(n_errors),
+        "n_robots_blocked": n_blocked,
+        "n_fetched": n_fetched,
+        "n_errors": n_errors,
         "n_verify_failed": n_verify_failed,
-        "n_candidates": int(n_candidates),
-        "n_new": int(n_new),
+        "n_candidates": n_candidates,
+        "n_new": n_new,
         "wall_s": time.monotonic() - t_start,
     }
-    return stats
 
 
 def run_crawl(

@@ -60,13 +60,9 @@ def get_spark(
         cpus = default_cpus()
     if shuffle_partitions is None:
         # default = core count (right for local mode at the driver's
-        # SFs); $SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for derived
-        # big tiers (sf100: 32 partitions of a 600M-row shuffle spill;
-        # a cluster deployment sizes this to ~2-3x total cores and
+        # SFs; a cluster deployment sizes this to ~2-3x total cores and
         # lets AQE coalesce back down)
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-        ) or max(int(cpus), 4)
+        shuffle_partitions = max(int(cpus), 4)
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
