@@ -230,14 +230,12 @@ def test_shard_col_matches_shard_ids(spark, n_shards):
     assert [got[int(k)] for k in keys] == want.tolist()
 
 
-def test_probe_batches_loads_only_touched_shards():
-    """The distributed-bitmap probe must pull exactly the shards its
+def test_bloom_mask_loads_only_touched_shards():
+    """The seen probe's bloom step must pull exactly the shards its
     keys map to (one per task when links are placed by
     ``place_by_shard``) — the property that makes the file-based path
     O(bitmap x shards-touched) per task instead of O(all shards)."""
-    import pandas as pd
-
-    from topicalcrawler_spark.operators.dedup import _probe_batches, shard_ids
+    from topicalcrawler_spark.operators.dedup import bloom_mask, shard_ids
 
     n_shards, k = 16, 4
     n_bits, _ = bloom.params_for(100, 0.01)
@@ -256,30 +254,16 @@ def test_probe_batches_loads_only_touched_shards():
         loads.append(sid)
         return bloom.build(np.array([], dtype=np.int64), n_bits, k)
 
-    out = list(
-        _probe_batches(
-            iter([pd.DataFrame({"url_hash": keys})]), get_shard, n_shards, k
-        )
-    )
+    mask = bloom_mask(keys, get_shard, n_shards, k)
     assert set(loads) == touched
-    assert not out[0]["maybe_seen"].any()  # empty bitmaps -> all unseen
+    assert not mask.any()  # empty bitmaps -> all unseen
 
 
-def test_probe_batches_missing_shard_is_all_unseen():
-    import pandas as pd
-
-    from topicalcrawler_spark.operators.dedup import _probe_batches
+def test_bloom_mask_missing_shard_clears_rows():
+    from topicalcrawler_spark.operators.dedup import bloom_mask
 
     keys = np.array([1, 2, 3], dtype=np.int64)
-    out = list(
-        _probe_batches(
-            iter([pd.DataFrame({"url_hash": keys})]),
-            lambda sid: None,
-            16,
-            4,
-        )
-    )
-    assert not out[0]["maybe_seen"].any()
+    assert not bloom_mask(keys, lambda sid: None, 16, 4).any()
 
 
 def test_shard_ids_rejects_non_power_of_two():
@@ -297,11 +281,8 @@ def test_anti_join_seen_files_equals_shuffle_join(spark, tmp_path):
     """The file-probed exact anti-join (design-point path) must equal
     the shuffle left-anti join exactly — including url_hash-collision
     safety (two distinct canons sharing a hash must not merge)."""
-    from pyspark.sql import functions as F
-
     from topicalcrawler_spark import icelite
     from topicalcrawler_spark.operators.dedup import (
-        anti_join_seen,
         anti_join_seen_files,
         overlapping_files,
     )
@@ -321,7 +302,6 @@ def test_anti_join_seen_files_equals_shuffle_join(spark, tmp_path):
     t = str(tmp_path / "seen")
     icelite.commit(seen, t, round_n=0)
     index = icelite.file_hash_index(t)
-    assert index is not None
 
     links = spark.createDataFrame(
         [(i * 7, f"http://h.test/p/{i}", i) for i in range(0, 1000, 3)]
@@ -330,7 +310,8 @@ def test_anti_join_seen_files_equals_shuffle_join(spark, tmp_path):
     )
     seen_df = icelite.read_snapshot(spark, t)
     expected = {
-        tuple(r) for r in anti_join_seen(links, seen_df).collect()
+        tuple(r)
+        for r in links.join(seen_df, ["url_hash", "url_canon"], "left_anti").collect()
     }
     got = {
         tuple(r)
@@ -349,13 +330,8 @@ def test_anti_join_seen_files_eviction_under_small_batches(spark, tmp_path):
     churns constantly, and the result must still equal the shuffle
     anti-join exactly (an over-eager eviction would resurrect seen
     rows; a missed overlap would drop fresh ones)."""
-    from pyspark.sql import functions as F
-
     from topicalcrawler_spark import icelite
-    from topicalcrawler_spark.operators.dedup import (
-        anti_join_seen,
-        anti_join_seen_files,
-    )
+    from topicalcrawler_spark.operators.dedup import anti_join_seen_files
 
     t = str(tmp_path / "seen")
     # 3 append commits x 8 range files = 24 files, overlapping ranges
@@ -366,14 +342,17 @@ def test_anti_join_seen_files_eviction_under_small_batches(spark, tmp_path):
         ).repartitionByRange(8, "url_hash")
         icelite.commit(seen_c, t, round_n=c, mode="append" if c else "replace")
     index = icelite.file_hash_index(t)
-    assert index is not None and len(index) >= 16
+    assert len(index) >= 16
 
     links = spark.createDataFrame(
         [(i, f"http://h.test/p/{i // 5}-{i % 5}") for i in range(0, 20000, 2)],
         "url_hash long, url_canon string",
     )
     seen_df = icelite.read_snapshot(spark, t)
-    expected = {tuple(r) for r in anti_join_seen(links, seen_df).collect()}
+    expected = {
+        tuple(r)
+        for r in links.join(seen_df, ["url_hash", "url_canon"], "left_anti").collect()
+    }
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "200")
     try:
@@ -386,6 +365,71 @@ def test_anti_join_seen_files_eviction_under_small_batches(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert got == expected
+
+
+def test_seen_probe_bloom_cleared_batch_opens_no_seen_file(spark, tmp_path):
+    """A batch the bloom clears entirely passes straight through and
+    opens no seen file: the index names a file that does not exist and
+    covers every hash, so any read of it would raise.  The bloom dir
+    has no shard files, i.e. every shard is empty."""
+    from topicalcrawler_spark.operators.dedup import (
+        anti_join_seen_files,
+        place_by_shard,
+    )
+
+    missing = str(tmp_path / "no-such-seen-file.parquet")
+    index = [(missing, -(1 << 63), (1 << 63) - 1)]
+    links = spark.createDataFrame(
+        [(i * 7919 - 5000, f"http://h.test/p/{i}") for i in range(300)],
+        "url_hash long, url_canon string",
+    )
+    got = anti_join_seen_files(
+        place_by_shard(links, 4), index, bloom=(str(tmp_path / "bloom"), 4, 7)
+    ).collect()
+    assert {tuple(r) for r in got} == {tuple(r) for r in links.collect()}
+
+
+def test_seen_probe_all_maybe_bloom_equals_reference(spark, tmp_path):
+    """A bloom that reports every row maybe-seen (built over the
+    probe's own keys) sends every row to the exact step: the result
+    equals the plain left-anti join, and a row that shares a seen
+    url_hash under a different canon is kept."""
+    from topicalcrawler_spark import icelite
+    from topicalcrawler_spark.operators.dedup import (
+        anti_join_seen_files,
+        place_by_shard,
+        write_bloom_shard_files,
+    )
+
+    n_shards = 4
+    seen = spark.createDataFrame(
+        [(i * 104729 - 10**7, f"http://h.test/p/{i}") for i in range(400)],
+        "url_hash long, url_canon string",
+    )
+    t = str(tmp_path / "seen")
+    icelite.commit(place_by_shard(seen, n_shards), t, round_n=0)
+    links = spark.createDataFrame(
+        [(i * 104729 - 10**7, f"http://h.test/p/{i}") for i in range(0, 800, 3)]
+        + [(5 * 104729 - 10**7, "http://h.test/p/collide")],
+        "url_hash long, url_canon string",
+    )
+    bloom_dir = str(tmp_path / "bloom")
+    k, _ = write_bloom_shard_files(links, bloom_dir, n_shards, total=300)
+    expected = {
+        tuple(r)
+        for r in links.join(seen, ["url_hash", "url_canon"], "left_anti").collect()
+    }
+    got = {
+        tuple(r)
+        for r in anti_join_seen_files(
+            place_by_shard(links, n_shards),
+            icelite.file_hash_index(t),
+            bloom=(bloom_dir, n_shards, k),
+        ).collect()
+    }
+    assert got == expected
+    assert (5 * 104729 - 10**7, "http://h.test/p/collide") in got
+    assert len(got) < links.count()
 
 
 def test_update_bloom_shard_files_rejects_in_place(spark, tmp_path):

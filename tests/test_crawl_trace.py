@@ -73,22 +73,13 @@ def test_trace_and_seen_match_oracle(spark, tmp_path, rounds):
 
 
 @pytest.mark.parametrize("bloom", [True, False])
-def test_file_probed_exact_join_is_trace_identical(
-    spark, tmp_path, monkeypatch, bloom
-):
-    """The exact anti-join is probed from the seen table's own files via
-    manifest url_hash stats at every seen-set size — with the default
-    config, once with the bloom prefilter forced on (maybe-side path)
-    and once without (full-links path: the default bloom_min_keys is
-    above this crawl's seen-set size).  The plain left_anti join is
-    only the fallback for stats-less manifests, so it must never run
-    here.  Results must equal the oracle exactly."""
-    from topicalcrawler_spark.plans import round as round_mod
-
-    def no_shuffle_join(*a, **k):
-        raise AssertionError("shuffle anti-join ran on a stats-bearing table")
-
-    monkeypatch.setattr(round_mod, "anti_join_seen", no_shuffle_join)
+def test_file_probed_exact_join_is_trace_identical(spark, tmp_path, bloom):
+    """The one seen probe reads the seen table's own files via manifest
+    url_hash stats at every seen-set size — with the default config,
+    once with the bloom forced on (its bloom step clears rows before
+    the exact step) and once without (the default bloom_min_keys is
+    above this crawl's seen-set size, so every row takes the exact
+    step).  Results must equal the oracle exactly."""
     strace, sseen, cfg = _spark_crawl(
         spark, tmp_path, 3, **({"bloom_min_keys": 0} if bloom else {}),
     )
@@ -98,35 +89,22 @@ def test_file_probed_exact_join_is_trace_identical(
     assert sseen == oseen
 
 
-def test_stats_less_seen_manifest_falls_back_to_shuffle_join(
-    spark, tmp_path, monkeypatch
-):
-    """A seen manifest without per-file url_hash stats (a foreign or
-    pre-stats manifest) cannot be file-probed: the round falls back to
-    the plain left_anti join against the snapshot, never to skipping
-    the join.  Two default-config rounds, with the stats stripped from
-    the seen head manifest before round 2: round 1 file-probes, round 2
-    falls back."""
+def test_stats_less_seen_manifest_is_probed_unpruned(spark, tmp_path):
+    """A seen manifest without per-file url_hash stats (a foreign
+    manifest) indexes every file over the full url_hash range, so every
+    probe task reads every seen file — slower, never inexact.  Two
+    default-config rounds, with the stats stripped from the seen head
+    manifest before round 2; trace and seen equal the oracle."""
     import json
 
     from topicalcrawler_spark import icelite
-    from topicalcrawler_spark.plans import round as round_mod
     from topicalcrawler_spark.plans.round import crawl_round, init_crawl
 
-    calls = []
-    real = round_mod.anti_join_seen
-
-    def counting(links, seen):
-        calls.append(1)
-        return real(links, seen)
-
-    monkeypatch.setattr(round_mod, "anti_join_seen", counting)
     seeds_path = str(tmp_path / "seeds.txt")
     fx.write_seed_file(seeds_path)
     cfg = CrawlConfig(root=str(tmp_path / "crawl"))
     init_crawl(spark, cfg, seeds_path)
     crawl_round(spark, cfg, 1)
-    assert not calls, "round 1 ran the shuffle anti-join on a stats-bearing table"
     seen_dir = cfg.table("seen")
     path = icelite._manifest_path(seen_dir, icelite.latest_snapshot_id(seen_dir))
     with open(path) as f:
@@ -134,9 +112,10 @@ def test_stats_less_seen_manifest_falls_back_to_shuffle_join(
     del manifest["file_stats"]
     with open(path, "w") as f:
         json.dump(manifest, f)
-    assert icelite.file_hash_index(seen_dir) is None
+    full = (-(1 << 63), (1 << 63) - 1)
+    index = icelite.file_hash_index(seen_dir)
+    assert len(index) > 1 and {(lo, hi) for _, lo, hi in index} == {full}
     crawl_round(spark, cfg, 2)
-    assert calls, "round 2 did not fall back to the shuffle anti-join"
     strace = [
         tuple(r[c] for c in TRACE_COLS)
         for r in read_trace(spark, cfg).select(*TRACE_COLS).collect()
@@ -556,6 +535,37 @@ def test_lineage_rows_follow_fetch_tasks(spark, tmp_path):
         assert rows == files
         assert sum(rows.values()) == st["n_fetched"]
         assert len([r for r in lineage if r["round"] == st["round"]]) == len(files)
+
+
+def test_table_manifest_schemas_match_declared(spark, tmp_path):
+    """Every manifest of every crawl table records the schema
+    schemas.py declares for it, by column name and type — a column
+    written from a bare Python literal (an int where the table declares
+    a long) drifts from it silently."""
+    from pyspark.sql.types import StructType
+
+    from topicalcrawler_spark import icelite, schemas
+
+    seeds_path = str(tmp_path / "seeds.txt")
+    fx.write_seed_file(seeds_path)
+    cfg = CrawlConfig(root=str(tmp_path / "crawl"), bloom_min_keys=0)
+    run_crawl(spark, cfg, seeds_path, 1)
+    declared = {
+        "seen": schemas.SEEN,
+        "frontier": schemas.FRONTIER,
+        "fetched": schemas.SEEN,  # the tombstone keys of consumed rows
+        "trace": schemas.TRACE,
+        "lineage": schemas.LINEAGE,
+    }
+    for table, schema in declared.items():
+        want = [(f.name, f.dataType) for f in schema.fields]
+        manifests = icelite.history(cfg.table(table))
+        assert manifests, table
+        for m in manifests:
+            got = StructType.fromJson(m["schema"])
+            assert [(f.name, f.dataType) for f in got.fields] == want, (
+                table, m["snapshot_id"],
+            )
 
 
 @pytest.mark.parametrize(
@@ -1221,7 +1231,7 @@ def test_round_counters_pinned_and_match_tables(spark, tmp_path, bloom):
 
 # round 2's Spark jobs below, in the test session (local[8], 8 shuffle
 # partitions)
-WARM_ROUND_JOBS = 43
+WARM_ROUND_JOBS = 42
 
 
 def test_warm_round_spark_job_count(spark, tmp_path):

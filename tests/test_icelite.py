@@ -28,6 +28,14 @@ def _read_jobs(spark, table_dir: str) -> tuple[set, int]:
     return {tuple(r) for r in df.collect()}, jobs
 
 
+def _stats_cover_head(table_dir: str) -> bool:
+    """Every file of the head snapshot carries footer url_hash stats,
+    so ``file_hash_index`` prunes it (a file without stats is indexed
+    over the full range and probed by every task)."""
+    head = icelite.read_manifest(table_dir, icelite.latest_snapshot_id(table_dir))
+    return set(head["files"]) <= set(head.get("file_stats", {}))
+
+
 def _check_schema_read(spark, table_dir: str, expect_cols: list[str]) -> None:
     """The head manifest records the Spark schema and read_snapshot
     starts no job; with the schema key removed (a manifest from before
@@ -237,8 +245,8 @@ def test_recover_reclaims_orphan_manifest(spark, tmp_path):
 def test_manifest_file_stats_and_hash_index(spark, tmp_path):
     """Commit records per-file url_hash [min,max] (the Iceberg
     manifest-stats analogue); file_hash_index surfaces a complete
-    pruning index, survives appends and compaction, and is None for
-    tables without the column."""
+    pruning index, survives appends and compaction, and gives files
+    without the column the full range."""
     from pyspark.sql import functions as F
 
     from topicalcrawler_spark.operators.dedup import shard_col
@@ -254,7 +262,7 @@ def test_manifest_file_stats_and_hash_index(spark, tmp_path):
     )
     icelite.commit(df, t, round_n=0)
     idx = icelite.file_hash_index(t)
-    assert idx is not None and len(idx) >= 2
+    assert len(idx) >= 2 and _stats_cover_head(t)
     rows = {(r["url_hash"], r["url_canon"]) for r in icelite.read_snapshot(spark, t).collect()}
     # every row's hash falls inside its file's recorded range, and the
     # index covers the full hash span
@@ -265,19 +273,21 @@ def test_manifest_file_stats_and_hash_index(spark, tmp_path):
     df2 = df.withColumn("url_canon", F.concat(F.col("url_canon"), F.lit("x")))
     icelite.commit(df2, t, round_n=1, mode="append")
     idx2 = icelite.file_hash_index(t)
-    assert idx2 is not None and len(idx2) > len(idx)
+    assert len(idx2) > len(idx) and _stats_cover_head(t)
     _check_schema_read(spark, t, ["url_hash", "url_canon"])
 
     icelite.compact(
         spark, t, round_n=2, partition_id=shard_col("url_hash", 2), target_files=2
     )
     idx3 = icelite.file_hash_index(t)
-    assert idx3 is not None and len(idx3) <= 4
+    assert len(idx3) <= 4 and _stats_cover_head(t)
 
-    # a table without url_hash has no index
+    # a table without url_hash: every file spans the full range
     t2 = str(tmp_path / "plain")
     icelite.commit(spark.range(5), t2, round_n=0)
-    assert icelite.file_hash_index(t2) is None
+    idx4 = icelite.file_hash_index(t2)
+    assert idx4 and not _stats_cover_head(t2)
+    assert {(lo, hi) for _, lo, hi in idx4} == {(-(1 << 63), (1 << 63) - 1)}
 
 
 def test_next_data_dir_per_attempt_isolation(spark, tmp_path, monkeypatch):
@@ -517,10 +527,10 @@ def test_recover_grace_spares_fresh_claims_and_debris(spark, tmp_path):
 
 def test_commit_files_carries_stats(spark, tmp_path):
     """The zero-copy path must harvest footer url_hash stats exactly
-    like commit(): file_hash_index requires EVERY file in the snapshot
-    to carry stats, so one stats-less commit_files on a stats-bearing
-    chain would silently demote the file-probed anti-join to its
-    shuffle fallback for the rest of the table's life."""
+    like commit(): file_hash_index gives a file without stats the full
+    url_hash range, so a stats-less commit_files would leave its files
+    read by every task of the file-probed anti-join for the rest of
+    the table's life."""
     from pyspark.sql import functions as F
 
     t = str(tmp_path / "seen")
@@ -534,7 +544,7 @@ def test_commit_files_carries_stats(spark, tmp_path):
         )
 
     icelite.commit(batch(0, 500), t, round_n=0)
-    assert icelite.file_hash_index(t) is not None
+    assert _stats_cover_head(t)
 
     # zero-copy append: files written directly, registered by metadata
     d = icelite.next_data_dir(t)
@@ -543,7 +553,7 @@ def test_commit_files_carries_stats(spark, tmp_path):
     icelite.commit_files(t, d, round_n=1, row_count=n)
 
     idx = icelite.file_hash_index(t)
-    assert idx is not None, "commit_files dropped footer stats"
+    assert _stats_cover_head(t), "commit_files dropped footer stats"
     # index covers BOTH the commit()'d and the commit_files'd files
     head = icelite.read_manifest(t, icelite.latest_snapshot_id(t))
     assert len(idx) == len(head["files"])
@@ -559,8 +569,8 @@ def test_commit_files_empty_partition_keeps_index(spark, tmp_path):
     footer stats; commit_files must still keep the snapshot fully
     stats-covered — via an empty-range sentinel, NOT by deleting the
     file (the zero-copy caller may still be lazily reading the dir) —
-    or one skewed fetch round would permanently demote the file-probed
-    anti-join to its shuffle fallback."""
+    or one skewed fetch round would leave a file every probe task of
+    the file-probed anti-join reads."""
     from pyspark.sql import functions as F
 
     t = str(tmp_path / "seen")
@@ -592,7 +602,7 @@ def test_commit_files_empty_partition_keeps_index(spark, tmp_path):
 
     icelite.commit_files(t, d, round_n=1, row_count=60)
     idx = icelite.file_hash_index(t)
-    assert idx is not None, "empty part file disabled the stats index"
+    assert _stats_cover_head(t), "empty part file left without stats"
     head = icelite.read_manifest(t, icelite.latest_snapshot_id(t))
     assert len(idx) == len(head["files"])
     # the sentinel range overlaps nothing
@@ -612,3 +622,18 @@ def test_commit_files_empty_partition_keeps_index(spark, tmp_path):
     )
     # and reading the snapshot still returns exactly the real rows
     assert icelite.read_snapshot(spark, t).count() == 160
+
+
+def test_wide_snapshot_read_starts_no_job(spark, tmp_path):
+    """A snapshot of more files than Spark lists in a job (past 32
+    paths by default) still reads without one: icelite hands Spark the
+    exact file list, so the driver lists it."""
+    t = str(tmp_path / "wide")
+    icelite.commit(
+        spark.range(0, 4800, 1, 48).selectExpr("id AS v"), t, round_n=0
+    )
+    head = icelite.read_manifest(t, icelite.latest_snapshot_id(t))
+    assert len(head["files"]) == 48
+    rows, jobs = _read_jobs(spark, t)
+    assert jobs == 0
+    assert rows == {(i,) for i in range(4800)}

@@ -1,7 +1,8 @@
 """One scaling-evidence run: a large-frontier crawl at one parallelism
-level. Invoked once per level by tools/run_scaling.py (fresh JVM each,
-same input) — the sandbox proxy for the north-rule's N vs 4N executor
-criterion (SURVEY.md §5.5).
+level. tools/submit_scaling.sh runs it once per level through
+``spark-submit --py-files`` (fresh JVM each, same input) — the
+single-node proxy for the north-rule's N vs 4N executor criterion
+(SURVEY.md §5.5).
 
 Prints one JSON line: {"cpus": N, "n_urls": ..., "rounds": ...,
 "wall_s": ..., "urls_per_sec": ...}.

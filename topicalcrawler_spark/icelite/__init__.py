@@ -139,6 +139,8 @@ def _url_hash_stats(md) -> list[int] | None:
 # it, and the probe task whose url_hash range covers that gap would
 # re-read every accumulated 0-row file each round.
 EMPTY_RANGE_SENTINEL: list[int] = [(1 << 63) - 1, -(1 << 63)]
+# the index range of a file without stats: overlaps every probe window
+FULL_RANGE: list[int] = [-(1 << 63), (1 << 63) - 1]
 
 
 def _collect_file_stats(
@@ -146,10 +148,10 @@ def _collect_file_stats(
 ) -> tuple[list[str], int, dict[str, list[int]], list[str], dict | None]:
     """One parquet-footer pass over a commit's part files — the SHARED
     stats loop of ``commit`` and ``commit_files`` (a hand-duplicated
-    copy drifting in one of them would silently break
-    ``file_hash_index``'s every-file-has-stats completeness check on
-    that path, permanently demoting the file-probed anti-join to its
-    shuffle fallback).  Returns (kept_files, row_count, file_stats,
+    copy drifting in one of them would silently leave that path's files
+    without stats, so ``file_hash_index`` would give them the full
+    range and every probe task of the file-probed anti-join would read
+    every one of them).  Returns (kept_files, row_count, file_stats,
     empty_files, schema); ``schema`` is the Spark schema JSON of the
     first footer that has one (0-row files included), None when no
     file was written by Spark.
@@ -164,8 +166,8 @@ def _collect_file_stats(
     * ``'sentinel'`` — ``commit_files`` must NOT touch the caller's
       files (zero-copy contract: the directory may still be lazily
       read this same round), so empties stay listed carrying
-      ``EMPTY_RANGE_SENTINEL``: completeness stays satisfied and range
-      pruning skips them, which is exactly their semantics.
+      ``EMPTY_RANGE_SENTINEL``: range pruning skips them, which is
+      exactly their semantics.
     """
     assert on_empty in ("drop", "sentinel"), on_empty
     kept: list[str] = []
@@ -367,11 +369,10 @@ def commit_files(
     parent = latest_snapshot_id(table_dir)
     snap_id = (parent or 0) + 1
     files = sorted(glob(os.path.join(data_dir, "part-*.parquet")))
-    # footer stats via the shared loop: without them one commit_files
-    # on a stats-bearing chain would permanently disable
-    # file_hash_index (it requires EVERY file to carry stats), silently
-    # demoting the zero-shuffle file-probed anti-join to the shuffle
-    # fallback for the rest of the table's life.  0-row files stay
+    # footer stats via the shared loop: without them file_hash_index
+    # would give these files the full range, and every task of the
+    # file-probed anti-join would read them for the rest of the
+    # table's life.  0-row files stay
     # listed with EMPTY_RANGE_SENTINEL (see _collect_file_stats: the
     # zero-copy contract forbids deleting the caller's files).
     files, _, file_stats, _, schema = _collect_file_stats(
@@ -402,21 +403,19 @@ def commit_files(
 
 def file_hash_index(
     table_dir: str, snapshot_id: int | None = None
-) -> list[tuple[str, int, int]] | None:
+) -> list[tuple[str, int, int]]:
     """[(path, min_url_hash, max_url_hash)] for every data file of a
-    snapshot, from the manifest's commit-time footer stats — the
-    pruning index of the file-probed exact anti-join.  None when any
-    file lacks stats (e.g. a pre-stats manifest), so callers can fall
-    back to the shuffle join."""
+    snapshot (latest when None), from the manifest's commit-time footer
+    stats — the pruning index of the file-probed exact anti-join.  A
+    file without stats (a foreign manifest) gets the full int64 range,
+    so every probe task reads it: slower, never inexact."""
     if snapshot_id is None:
         snapshot_id = latest_snapshot_id(table_dir)
         if snapshot_id is None:
-            return None
+            raise FileNotFoundError(f"no snapshots in {table_dir}")
     m = read_manifest(table_dir, snapshot_id)
     stats = m.get("file_stats", {})
-    if any(f not in stats for f in m["files"]):
-        return None
-    return [(f, stats[f][0], stats[f][1]) for f in m["files"]]
+    return [(f, *stats.get(f, FULL_RANGE)) for f in m["files"]]
 
 
 def next_data_dir(table_dir: str) -> str:

@@ -1,31 +1,29 @@
-"""URL-seen deduplication — J1 (two-phase), T1 (deterministic union-dedup).
+"""URL-seen deduplication — J1 (bloom-guarded exact probe), T1
+(deterministic union-dedup).
 
 North-rule (``BASELINE.json:14``) requires the *exact* URL-seen set, so
 a Bloom filter alone can never be the authority (false positives would
-silently drop URLs the reference fetches).  Architecture:
+silently drop URLs the reference fetches).  ONE seen probe,
+``anti_join_seen_files``, does both steps inside one Arrow-batch pass:
 
-  phase 1 (optional, scale): bloom-shard prefilter inside an
-           Arrow-batch UDF — drops ~(1-fpp) of already-seen candidates
-           before any shuffle;
-  phase 2 (authority): exact anti-join against the seen table on
-           (url_hash, url_canon) — hash first so the join keys compare
-           cheaply, canonical string second so a 64-bit collision can
-           never merge two distinct URLs (at 10^10 keys the birthday
-           bound makes pure-hash joins wrong).  One form at every
-           seen-set size: the seen table's own shard files probed in
-           place (``anti_join_seen_files``); ``anti_join_seen``, a
-           plain left_anti join, serves only manifests without
-           per-file stats.
+  bloom step (optional, scale): each batch's keys are probed against
+           the task's bloom shard; rows it clears pass straight
+           through, and a batch it clears entirely reads no seen file;
+  exact step (authority): the rows the bloom reports maybe-seen are
+           anti-joined on (url_hash, url_canon) against the seen
+           table's own shard files, probed in place — hash first so
+           the keys compare cheaply, canonical string second so a
+           64-bit collision can never merge two distinct URLs (at
+           10^10 keys the birthday bound makes pure-hash joins wrong).
 
-The spec's "broadcast + per-partition shards" filter has ONE form here:
-shard bitmaps keyed by the top url_hash bits (``shard_ids``) are written
-as partition-local parquet files straight from their merge tasks
-(``write_bloom_shard_files``, ``update_bloom_shard_files``).  The same
-shard function places every url_hash-keyed table and the crawl's
-candidates (``place_by_shard``), so table file i is bloom shard i is
-probe task i: what is broadcast is only the shard directory path, each
-probe task reads its one shard (``bloom_prefilter_files``), and no
-bitmap ever transits the driver, at any seen-set size.
+The bloom has ONE form: shard bitmaps keyed by the top url_hash bits
+(``shard_ids``) written as partition-local parquet files straight from
+their merge tasks (``write_bloom_shard_files``,
+``update_bloom_shard_files``).  The same shard function places every
+url_hash-keyed table and the crawl's candidates (``place_by_shard``),
+so table file i is bloom shard i is probe task i: what is broadcast is
+only the shard directory path, each probe task reads its one shard, and
+no bitmap ever transits the driver, at any seen-set size.
 
 The build has ONE plan: per-task partial bitmaps OR-merged per shard
 and written.  The incremental update runs that plan over the delta keys
@@ -103,12 +101,6 @@ def dedup_batch(links: DataFrame, order: list | None = None) -> DataFrame:
     )
 
 
-def anti_join_seen(links: DataFrame, seen: DataFrame) -> DataFrame:
-    """J1 phase 2 as a plain left_anti join — the fallback for a seen
-    snapshot whose manifest has no per-file url_hash stats."""
-    return links.join(seen, ["url_hash", "url_canon"], "left_anti")
-
-
 def overlapping_files(
     index: list[tuple[str, int, int]], lo: int, hi: int
 ) -> list[str]:
@@ -118,44 +110,67 @@ def overlapping_files(
     return [p for p, fmin, fmax in index if fmin <= hi and lo <= fmax]
 
 
+def bloom_mask(keys: np.ndarray, get_shard, n_shards: int, k: int) -> np.ndarray:
+    """The probe's bloom step: True where a key may be seen.
+    ``get_shard(sid) -> uint8 bitmap | None`` supplies bitmaps — in the
+    crawl, a lazy per-shard file read (None = the shard has no keys, so
+    nothing in it can be seen).  Only the shards the keys map to are
+    asked for."""
+    sids = shard_ids(keys, n_shards)
+    hit = np.zeros(len(keys), dtype=bool)
+    for sid in np.unique(sids):
+        bm = get_shard(int(sid))
+        if bm is None:
+            continue
+        m = sids == sid
+        hit[m] = bloom.probe(keys[m], bm, k)
+    return hit
+
+
 def anti_join_seen_files(
-    links: DataFrame, file_index: list[tuple[str, int, int]]
+    links: DataFrame,
+    file_index: list[tuple[str, int, int]],
+    bloom: tuple[str, int, int] | None = None,
 ) -> DataFrame:
-    """J1 phase 2: the exact anti-join with the seen side probed IN
-    PLACE from its own icelite data files instead of shuffled — the
-    crawl's one exact seen join, at every seen-set size.
+    """J1: ``links`` minus the (url_hash, url_canon) keys of the seen
+    table — the crawl's one seen probe, exact and collision-safe, with
+    the seen side probed IN PLACE from its own icelite data files
+    instead of shuffled.
 
     Why: ``links LEFT ANTI seen`` broadcasts the seen side only while
     it is small; past broadcast size Spark plans a sort-merge join that
     SHUFFLES the full 10^10-row seen table every round — the single
-    largest per-round data movement at the design point.  At fixture
-    size the two forms measured equal (same job counts and round
-    walls), so there is no crossover between them.  The seen table's
-    files are url_hash-clustered (every commit and compaction goes
-    through ``place_by_shard``, so each file holds one shard) and the
-    manifest records per-file url_hash
-    [min,max] (icelite commit footer stats — the Iceberg manifest-stats
-    analogue).  So each probe task can read ONLY the seen files
-    overlapping its batch's url_hash range and anti-merge locally:
-    the seen side is read once, never shuffled, never sorted.
+    largest per-round data movement at the design point.  The seen
+    table's files are url_hash-clustered (every commit and compaction
+    goes through ``place_by_shard``, so each file holds one shard) and
+    the manifest records per-file url_hash [min,max] (icelite commit
+    footer stats — the Iceberg manifest-stats analogue).  So each probe
+    task reads ONLY the seen files overlapping its batch's url_hash
+    range and anti-merges locally: the seen side is read once, never
+    shuffled, never sorted.
 
-    ``file_index``: [(path, min_hash, max_hash)] from the manifest —
-    O(n_files) metadata, broadcast with the closure.  Callers should
-    place ``links`` with ``place_by_shard`` so task i overlaps only
-    shard i's files (the pruning is exact on any layout).  Exactness:
-    membership is tested on the full (url_hash, url_canon) pair via a
-    vectorized indicator merge — identical semantics to
-    ``anti_join_seen`` (collision-safe).
+    ``file_index``: [(path, min_hash, max_hash)] from the manifest
+    (``icelite.file_hash_index``) — O(n_files) metadata, broadcast with
+    the closure.  Callers should place ``links`` with
+    ``place_by_shard`` so task i overlaps only shard i's files (the
+    pruning is exact on any layout).
 
-    Per-task memory bound: the probe side is ADDITIONALLY sorted within
-    each partition by url_hash, so a task's Arrow batches arrive in
+    ``bloom``: (shard_dir, n_shards, k) of bitmaps over the same seen
+    keys (``write_bloom_shard_files``), or None.  Each task lazily
+    reads only the shards its keys map to, caching them for its
+    remaining batches.  Only the rows it reports maybe-seen narrow the
+    file window and the ``is_in`` below; the rows it clears pass
+    straight through, and a batch it clears entirely opens no seen
+    file.  The filter thus saves its work at the authority it guards,
+    in the same task.
+
+    Per-task memory bound: the probe side is sorted within each
+    partition by url_hash, so a task's Arrow batches arrive in
     ascending hash order and every cached seen file whose max hash falls
     below the current batch's min can be evicted — it can never overlap
     a later batch.  The cache therefore holds only the files overlapping
     the CURRENT batch window, O(compaction target file size), even on an
-    append-heavy table accumulating O(rounds) files per hash range
-    (round-3 ADVICE: the unsorted form cached every overlapping file
-    for the task's lifetime, approaching O(n_seen/n_partitions)).
+    append-heavy table accumulating O(rounds) files per hash range.
 
     The seen side never leaves Arrow: files are cached as pyarrow
     Tables and narrowed per batch with a vectorized ``is_in`` semi-join
@@ -164,8 +179,7 @@ def anti_join_seen_files(
     round-4 design-point run measured why this matters: pandas-
     materializing a 60M-key seen table is tens of millions of Python
     string allocations PER ROUND (~46 s wall at 32 cores), all for a
-    probe set of a few hundred maybe-rows — O(seen) CPU hidden in what
-    the cost model requires to be an O(overlapping-file reads) step.
+    probe set of a few hundred maybe-rows.
     """
     from pyspark.sql import types as T
 
@@ -175,21 +189,38 @@ def anti_join_seen_files(
     fmax_of = {p: fmax for p, _, fmax in index}
 
     def probe(batches):
+        import glob as _glob
+
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as _pq
 
         cache: dict[str, tuple[pa.Table, int]] = {}
+        shards: dict[int, np.ndarray | None] = {}
+
+        def get_shard(sid: int):
+            if sid not in shards:
+                files = _glob.glob(f"{bloom[0]}/shard_id={sid}/*.parquet")
+                shards[sid] = (
+                    np.frombuffer(
+                        _pq.read_table(files[0], columns=["bits"])["bits"][0].as_py(),
+                        dtype=np.uint8,
+                    )
+                    if files
+                    else None
+                )
+            return shards[sid]
+
         for pdf in batches:
-            if len(pdf) == 0:
+            keys = pdf["url_hash"].to_numpy(dtype=np.int64)
+            if bloom is not None:
+                keys = keys[bloom_mask(keys, get_shard, bloom[1], bloom[2])]
+            if len(keys) == 0:
                 yield pdf[cols]
                 continue
-            lo = int(pdf["url_hash"].min())
-            hi = int(pdf["url_hash"].max())
+            lo, hi = int(keys.min()), int(keys.max())
             # evict files the ascending batch order has moved past
-            for path in [
-                p for p, (_, fmax) in cache.items() if fmax < lo
-            ]:
+            for path in [p for p, (_, fmax) in cache.items() if fmax < lo]:
                 del cache[path]
             need = overlapping_files(index, lo, hi)
             for path in need:
@@ -198,12 +229,7 @@ def anti_join_seen_files(
                         _pq.read_table(path, columns=["url_hash", "url_canon"]),
                         fmax_of[path],
                     )
-            if not need:
-                yield pdf[cols]
-                continue
-            probe_hashes = pa.array(
-                pdf["url_hash"].to_numpy(dtype=np.int64), type=pa.int64()
-            )
+            probe_hashes = pa.array(keys, type=pa.int64())
             hits = []
             for p in need:
                 t = cache[p][0]
@@ -213,82 +239,18 @@ def anti_join_seen_files(
             if not hits:
                 yield pdf[cols]
                 continue
-            keys = pd.concat(hits, ignore_index=True)
+            # a bloom-cleared row cannot match: its hash is in no seen file
             m = pdf.merge(
-                keys, on=["url_hash", "url_canon"],
-                how="left", indicator=True,
+                pd.concat(hits, ignore_index=True),
+                on=["url_hash", "url_canon"],
+                how="left",
+                indicator=True,
             )
             yield m[m["_merge"] == "left_only"][cols]
 
     return links.sortWithinPartitions("url_hash").mapInPandas(
         probe, schema=out_schema
     )
-
-
-def _probe_batches(batches, get_shard, n_shards: int, k: int):
-    """Probe kernel: annotate each Arrow batch with maybe_seen.
-    ``get_shard(sid) -> uint8 bitmap | None`` supplies bitmaps — in the
-    crawl, a lazy per-shard file read (``bloom_prefilter_files``; None =
-    shard has no keys, so nothing in it can be seen).  Kept injectable
-    so tests can count exactly which shards a partition pulls."""
-    for pdf in batches:
-        keys = pdf["url_hash"].to_numpy(dtype=np.int64)
-        sids = shard_ids(keys, n_shards)
-        hit = np.zeros(len(pdf), dtype=bool)
-        for sid in np.unique(sids):
-            bm = get_shard(int(sid))
-            if bm is None:
-                continue
-            m = sids == sid
-            hit[m] = bloom.probe(keys[m], bm, k)
-        yield pdf.assign(maybe_seen=pd.Series(hit, index=pdf.index))
-
-
-def bloom_prefilter_files(
-    links: DataFrame, shard_dir: str, n_shards: int, k: int
-) -> DataFrame:
-    """J1 phase 1 — probe the bloom shard files in ``shard_dir``
-    (``write_bloom_shard_files``); returns links annotated with
-    ``maybe_seen``.  Definitely-unseen rows may skip the exact join;
-    possible hits must go through it (it is the authority).
-
-    The bitmaps never transit the driver: each probe task lazily reads
-    ONLY the shards its keys map to (shard = top url_hash bits; links
-    placed by ``place_by_shard`` make that exactly one file per task),
-    caching them for the task's remaining batches.
-    At the 10^10-key design point that is O(bitmap × shards-touched)
-    per executor read from shared storage (on a cluster, ``shard_dir``
-    is an HDFS/S3 path).  A shard with no keys has no file and probes
-    as all-unseen."""
-    from pyspark.sql import types as T
-
-    # never .add() onto df.schema — it mutates the DataFrame's cached schema
-    out_schema = T.StructType(
-        list(links.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-
-    def probe_iter(batches):
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        cache: dict[int, np.ndarray | None] = {}
-
-        def get_shard(sid: int):
-            if sid not in cache:
-                files = _glob.glob(f"{shard_dir}/shard_id={sid}/*.parquet")
-                if not files:
-                    cache[sid] = None
-                else:
-                    bits = _pq.read_table(files[0], columns=["bits"])
-                    cache[sid] = np.frombuffer(
-                        bits["bits"][0].as_py(), dtype=np.uint8
-                    )
-            return cache[sid]
-
-        yield from _probe_batches(batches, get_shard, n_shards, k)
-
-    return links.mapInPandas(probe_iter, schema=out_schema)
 
 
 def _shard_partials(seen: DataFrame, n_shards: int, n_bits: int, k: int) -> DataFrame:
@@ -357,7 +319,7 @@ def write_bloom_shard_files(
     fpp=0.01, sized for ``BLOOM_HEADROOM`` × ``total`` keys (e.g. an
     icelite manifest row_count), written as parquet files partitioned
     by shard_id so NO bitmap ever transits the driver;
-    ``bloom_prefilter_files`` probes them in place.  Returns (k, n_bits)
+    ``anti_join_seen_files`` probes them in place.  Returns (k, n_bits)
     — the params ``update_bloom_shard_files`` must reuse.  n_shards
     must be a power of two (top-bits shard function)."""
     per_shard = max(total // n_shards, 1)

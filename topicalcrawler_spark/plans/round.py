@@ -10,8 +10,9 @@ trace / lineage):
   5. O1 global fetch order -> trace append
   6. U4 decode/verify -> corpus append
   7. links: explode + canon (U1) + score (U2) + scheme/depth filter
-     + T1 deterministic batch dedup + (optional bloom prefilter) +
-     J1 exact anti-join vs seen, probed in place from the seen
+     + T1 deterministic batch dedup + J1 seen probe: one Arrow pass
+     per shard task that checks the bloom shard (when on) and then
+     anti-joins only the maybe-seen rows, exactly, against the seen
      table's own shard files (no shuffle of the seen side, at any size)
   8. commit: seen += new links, frontier += new links, fetched +=
      the keys this round consumed (tombstones), lineage +=
@@ -61,9 +62,7 @@ from ..functions import (
 )
 from ..operators.dedup import (
     BLOOM_HEADROOM,
-    anti_join_seen,
     anti_join_seen_files,
-    bloom_prefilter_files,
     dedup_batch,
     place_by_shard,
     shard_col,
@@ -91,12 +90,12 @@ class CrawlConfig:
     max_depth: int = 3
     default_budget: int = fx.DEFAULT_BUDGET
     n_shards: int = 16
-    # bloom prefilter (operators.dedup): shard bitmaps at fpp=0.01,
-    # written as partition-local parquet files keyed by the top url_hash
-    # bits and probed in place (one shard read per task) — no bitmap
-    # ever transits the driver, at any seen-set size.  Crossover: below
-    # this seen-set size the prefilter's extra python jobs cost more
-    # than the exact anti-join they would save, so the bloom is off
+    # bloom step of the seen probe (operators.dedup): shard bitmaps at
+    # fpp=0.01, written as partition-local parquet files keyed by the
+    # top url_hash bits and read in place by the probe task of the same
+    # shard — no bitmap ever transits the driver, at any seen-set size.
+    # Crossover: below this seen-set size the bloom's build/update jobs
+    # cost more than the seen-file reads it would save, so it is off
     # (the anti-join is always the authority, so this never changes
     # results; trace tests pin that by forcing bloom_min_keys=0).  Set
     # it above any reachable n_seen to turn the bloom off.  At the
@@ -303,10 +302,10 @@ def _snap_as_of(table_dir: str, round_max: int) -> int | None:
 
 
 def _anti_join_snapshot(
-    spark: SparkSession,
     df: DataFrame,
     table_dir: str,
     snap_id: int | None = None,
+    bloom: tuple[str, int, int] | None = None,
 ) -> DataFrame:
     """``df`` minus the (url_hash, url_canon) keys of an icelite table
     snapshot (latest when ``snap_id`` is None) — exact and
@@ -314,14 +313,14 @@ def _anti_join_snapshot(
     place, pruned by the manifest's per-file url_hash stats
     (``anti_join_seen_files``: zero shuffle of the table side, at any
     table size); a ``df`` placed by ``place_by_shard`` makes probe task
-    i read only shard i's files.  Without stats (a foreign or pre-stats
-    manifest) it falls back to a plain left-anti join against the
-    snapshot — never to skipping the join, which would resurrect rows
-    the table was meant to remove."""
-    index = icelite.file_hash_index(table_dir, snap_id)
-    if index is None:
-        return anti_join_seen(df, icelite.read_snapshot(spark, table_dir, snap_id))
-    return anti_join_seen_files(df, index)
+    i read only shard i's files.  A file without stats (a foreign
+    manifest) is indexed over the full url_hash range, so every task
+    probes it: slower, still exact.  ``bloom`` (shard dir, n_shards, k)
+    over the same snapshot's keys lets the probe skip the rows it
+    clears."""
+    return anti_join_seen_files(
+        df, icelite.file_hash_index(table_dir, snap_id), bloom
+    )
 
 
 def _appended_rows(table_dir: str, round_n: int) -> int:
@@ -500,9 +499,7 @@ def _crawl_round_impl(
         # LSM read path: pending = append-files MINUS tombstones, via
         # the zero-shuffle file-probed anti-join (both tables are
         # shard-placed; manifest stats prune file reads)
-        frontier = _anti_join_snapshot(
-            spark, frontier, fetched_tbl, tomb_snap_id
-        )
+        frontier = _anti_join_snapshot(frontier, fetched_tbl, tomb_snap_id)
 
     # 2. robots gate (J2/J7/P5 — all JVM-side); the robots dim
     # (as-of-resolved) is memoized across rounds.  The gate launches no
@@ -681,13 +678,16 @@ def _crawl_round_impl(
     seen_manifest = icelite.read_manifest(cfg.table("seen"), seen_snap_id)
     n_seen = seen_manifest["row_count"]
     bloom_on = n_seen >= cfg.bloom_min_keys
-    # the one candidate layout, partition i = url_hash shard i, read by
-    # the bloom probe and the file-probed exact join
-    links = place_by_shard(links, cfg.n_shards)
+    # the one candidate layout, partition i = url_hash shard i = bloom
+    # shard i = seen file i, cached: global_rank's count and the
+    # cache-local n_candidates below read it
+    links = place_by_shard(links, cfg.n_shards).cache()
+    caches.append(links)
     mark("links")
-    # bloom crossover (see CrawlConfig.bloom_min_keys): the prefilter
-    # pays only when the seen table is big enough that skipping the
-    # exact join for definitely-fresh rows beats the two bloom jobs
+    # bloom crossover (see CrawlConfig.bloom_min_keys): the bloom pays
+    # only when the seen table is big enough that the seen-file reads
+    # it skips outweigh its build/update jobs
+    bloom = None
     if bloom_on:
         # Incremental maintenance: bloom bitmaps are OR-monotone and
         # the seen table is append-only, so the manifest file-diff
@@ -739,25 +739,12 @@ def _crawl_round_impl(
                 "dir": new_dir, "k": k, "n_bits": n_bits,
                 "capacity": int(n_seen * BLOOM_HEADROOM),
             }
-        links = bloom_prefilter_files(links, bst["dir"], cfg.n_shards, bst["k"])
         bst["files"] = cur_files
         cfg._dims["bloom"] = bst
-    # cache the candidates (with the bloom on, the probe output: both
-    # branches below read it, so the Arrow probe pass runs once)
-    links = links.cache()
-    caches.append(links)
-    if bloom_on:
-        # definitely-unseen rows skip the exact join; possible hits go
-        # through the exact anti-join (the authority)
-        fresh = links.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = links.filter(F.col("maybe_seen")).drop("maybe_seen")
-        new_links = fresh.unionByName(
-            _anti_join_snapshot(spark, maybe, cfg.table("seen"), seen_snap_id)
-        )
-    else:
-        new_links = _anti_join_snapshot(
-            spark, links, cfg.table("seen"), seen_snap_id
-        )
+        bloom = (bst["dir"], cfg.n_shards, bst["k"])
+    # the one seen probe: bloom step (when on), then the exact join of
+    # the maybe-seen rows (the authority)
+    new_links = _anti_join_snapshot(links, cfg.table("seen"), seen_snap_id, bloom)
     # discovery_seq = ADMISSION rank (module docstring): base = n_seen
     # (the as-of manifest row count already read for the crossover —
     # O(1), and pinned to round_n-1 so a crash re-run reproduces the
@@ -843,8 +830,7 @@ def _crawl_round_impl(
         # materialize the pending view and restart both chains —
         # amortized O(frontier / K); result-invariant (trace test)
         pend = _anti_join_snapshot(
-            spark, icelite.read_snapshot(spark, cfg.table("frontier")),
-            fetched_tbl,
+            icelite.read_snapshot(spark, cfg.table("frontier")), fetched_tbl
         )
         frontier_snap = icelite.commit(
             place_by_shard(pend, cfg.n_shards),
@@ -876,12 +862,14 @@ def _crawl_round_impl(
         .select(
             F.lit(round_n).alias("round"),
             "partition_id",
-            F.lit(n_candidates).alias("n_candidates"),
-            F.lit(n_candidates - n_new).alias("n_dedup"),
-            F.lit(n_blocked).alias("n_robots_blocked"),
+            F.lit(n_candidates).cast("long").alias("n_candidates"),
+            F.lit(n_candidates - n_new).cast("long").alias("n_dedup"),
+            F.lit(n_blocked).cast("long").alias("n_robots_blocked"),
             "n_fetched",
             "n_errors",
-            F.lit(int((time.monotonic() - t_start) * 1000)).alias("wall_ms"),
+            F.lit(int((time.monotonic() - t_start) * 1000))
+            .cast("long")
+            .alias("wall_ms"),
             F.lit(frontier_snap).cast("long").alias("snapshot_id"),
         )
     )

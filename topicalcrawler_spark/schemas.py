@@ -117,12 +117,3 @@ LINEAGE = T.StructType(
         T.StructField("snapshot_id", T.LongType()),
     ]
 )
-
-BLOOM_SHARD = T.StructType(
-    [
-        T.StructField("shard_id", T.IntegerType()),
-        T.StructField("bits", T.BinaryType()),
-        T.StructField("nkeys", T.LongType()),
-        T.StructField("fpp", T.DoubleType()),
-    ]
-)

@@ -80,6 +80,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", PYWORKER_MODULE)
+        # icelite reads hand Spark a snapshot's exact file list; past 32
+        # paths Spark would list them in a Spark job, one per read
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(1 << 30)
+        )
     )
     conf = dict(extra_conf or {})
     paths = conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
