@@ -1312,7 +1312,10 @@ def test_all_blocked_round_counts_every_url_as_blocked(spark, tmp_path):
     """Robots rules that disallow every host leave the fetch, the links
     and the candidate set empty: the round still reports its counters
     (an Observation pruned by AQE along with an empty plan would fail
-    here instead), and the next round finds nothing pending."""
+    here instead), and the next round finds nothing pending.  The
+    round's corpus snapshot lists no file: it reads its data dir, whose
+    0-row part file carries the schema, through the corpus view."""
+    from topicalcrawler_spark import icelite, schemas
     from topicalcrawler_spark.plans.round import crawl_round, init_crawl
 
     seeds_path = str(tmp_path / "seeds.txt")
@@ -1324,4 +1327,11 @@ def test_all_blocked_round_counts_every_url_as_blocked(spark, tmp_path):
     init_crawl(spark, cfg, seeds_path)
     st = crawl_round(spark, cfg, 1)
     assert tuple(st[k] for k in COUNTER_KEYS) == (193, 193, 0, 0, 0, 0, 0)
+    (corpus,) = [
+        m for m in icelite.history(cfg.table("corpus")) if m["round"] == 1
+    ]
+    assert corpus["files"] == []
+    df = icelite.read_snapshot(spark, cfg.table("corpus"), corpus["snapshot_id"])
+    assert df.columns == schemas.CORPUS.names
+    assert df.count() == 0
     assert crawl_round(spark, cfg, 2)["n_pending"] == 0

@@ -8,6 +8,7 @@ import os
 import uuid
 
 import pyarrow.parquet as pq
+import pytest
 
 from topicalcrawler_spark import icelite
 
@@ -383,35 +384,6 @@ def test_commit_expected_parent_is_cas(spark, tmp_path):
     assert icelite.read_snapshot(spark, t).count() == 5
 
 
-def test_recover_keeps_legacy_empty_snapshot_dir(spark, tmp_path):
-    """Pre-data_dir manifests fall back to the un-suffixed
-    data/snap-NNNNNN dir for the empty-snapshot schema read
-    (read_snapshot and expire_snapshots both honor it); the recover()
-    debris sweep must apply the same fallback instead of deleting the
-    dir out from under a live legacy snapshot."""
-    import json
-    import shutil
-
-    t = str(tmp_path / "tbl")
-    icelite.commit(spark.range(3).selectExpr("id AS v"), t, round_n=0)
-    # snapshot 2: all-empty replace — files=[], 0-row schema parquet
-    icelite.commit(
-        spark.range(3).selectExpr("id AS v").where("v < 0"),
-        t, round_n=1, mode="replace",
-    )
-    # rewrite snapshot 2 into the legacy on-disk form
-    m = icelite.read_manifest(t, 2)
-    legacy = os.path.join(t, "data", "snap-000002")
-    shutil.move(m["data_dir"], legacy)
-    del m["data_dir"]
-    with open(icelite._manifest_path(t, 2), "w") as f:
-        json.dump(m, f)
-
-    assert icelite.recover(t) == []
-    assert os.path.isdir(legacy)
-    assert icelite.read_snapshot(spark, t).count() == 0
-
-
 def test_expire_on_pointerless_claim_crash_is_noop(tmp_path):
     """Crash window: a manifest was claimed but no pointer was ever
     published (empty table, first commit died mid-flight).  Maintenance
@@ -564,64 +536,52 @@ def test_commit_files_carries_stats(spark, tmp_path):
     _check_schema_read(spark, t, ["url_hash", "url_canon"])
 
 
-def test_commit_files_empty_partition_keeps_index(spark, tmp_path):
-    """A 0-row part file (empty partition of a skewed write) has no
-    footer stats; commit_files must still keep the snapshot fully
-    stats-covered — via an empty-range sentinel, NOT by deleting the
-    file (the zero-copy caller may still be lazily reading the dir) —
-    or one skewed fetch round would leave a file every probe task of
-    the file-probed anti-join reads."""
+@pytest.mark.parametrize("path", ["commit", "commit_files"])
+def test_0_row_part_file_is_never_listed(spark, tmp_path, path):
+    """Spark writes a 0-row part file when a write's first partition is
+    empty.  It has no footer stats, so a listed one would be indexed
+    over the full url_hash range and read by every probe task.  Neither
+    commit path lists it, and neither deletes it (commit_files must not
+    touch the caller's files): it stays on disk, absent from the
+    manifest's files, stats and the hash index, until its dir is swept.
+    The read returns exactly the real rows."""
     from pyspark.sql import functions as F
 
-    t = str(tmp_path / "seen")
-    icelite.commit(
-        spark.range(0, 100).select(
+    def batch(ids):
+        return ids.select(
             F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
             F.concat(F.lit("http://h.test/p/"), F.col("id")).alias(
                 "url_canon"
             ),
-        ),
-        t,
-        round_n=0,
-    )
+        )
 
-    d = icelite.next_data_dir(t)
-    # force an empty partition: 2 partitions over rows that all hash to
-    # one of them is fiddly, so write one empty and one real DataFrame
-    # into the same dir the way a skewed partitioned write lands
-    spark.range(100, 160).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-        F.concat(F.lit("http://h.test/p/"), F.col("id")).alias("url_canon"),
-    ).coalesce(1).write.parquet(d)
-    empty = spark.createDataFrame([], "url_hash long, url_canon string")
-    empty.coalesce(1).write.mode("append").parquet(d)
-    files = sorted(glob.glob(os.path.join(d, "part-*.parquet")))
-    assert any(
-        pq.ParquetFile(f).metadata.num_rows == 0 for f in files
-    ), "fixture did not produce an empty part file"
+    t = str(tmp_path / "seen")
+    icelite.commit(batch(spark.range(0, 100)), t, round_n=0)
+    # 2 partitions, the first filtered empty
+    df = batch(spark.range(100, 300, 1, 2).where("id >= 200"))
+    if path == "commit":
+        icelite.commit(df, t, round_n=1, mode="append")
+    else:
+        d = icelite.next_data_dir(t)
+        df.write.parquet(d)
+        icelite.commit_files(t, d, round_n=1, row_count=100)
 
-    icelite.commit_files(t, d, round_n=1, row_count=60)
-    idx = icelite.file_hash_index(t)
-    assert _stats_cover_head(t), "empty part file left without stats"
     head = icelite.read_manifest(t, icelite.latest_snapshot_id(t))
-    assert len(idx) == len(head["files"])
-    # the sentinel range overlaps nothing
-    from topicalcrawler_spark.operators.dedup import overlapping_files
-
-    sentinels = [(p, lo, hi) for p, lo, hi in idx if lo > hi]
-    assert sentinels, "empty file did not get the empty-range sentinel"
-    # the sentinel must be excluded from ANY non-full-range probe
-    # window — including one straddling zero, which a [1, 0]-style
-    # sentinel with a finite gap would wrongly match (the predicate is
-    # fmin <= hi AND lo <= fmax), making the zero-straddling probe task
-    # re-read every accumulated empty file each round
-    assert sentinels[0][0] not in overlapping_files(idx, 2, 1 << 60)
-    assert sentinels[0][0] not in overlapping_files(idx, -5, 5)
-    assert sentinels[0][0] not in overlapping_files(
-        idx, -(1 << 62), (1 << 62)
-    )
-    # and reading the snapshot still returns exactly the real rows
-    assert icelite.read_snapshot(spark, t).count() == 160
+    empties = [
+        f
+        for f in glob.glob(os.path.join(head["data_dir"], "part-*.parquet"))
+        if pq.ParquetFile(f).metadata.num_rows == 0
+    ]
+    assert empties, "fixture did not produce an empty part file"
+    indexed = {p for p, _, _ in icelite.file_hash_index(t)}
+    for f in empties:
+        assert os.path.exists(f)
+        assert f not in head["files"]
+        assert f not in head["file_stats"]
+        assert f not in indexed
+    assert _stats_cover_head(t)
+    assert head["row_count"] == 200
+    assert icelite.read_snapshot(spark, t).count() == 200
 
 
 def test_wide_snapshot_read_starts_no_job(spark, tmp_path):

@@ -27,6 +27,7 @@ DataFrame path shares claim/publish/recover/expire with it).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -55,6 +56,42 @@ def _write_part(data_dir: str, n_rows: int) -> None:
     )
 
 
+def _unreferenced_dirs(table_dir: str) -> set[str]:
+    """The ``data/snap-*`` dirs that no surviving manifest names as its
+    ``data_dir`` and none lists a file in."""
+    live = icelite.history(table_dir)
+    keep = {os.path.normpath(m["data_dir"]) for m in live}
+    keep |= {os.path.dirname(f) for m in live for f in m["files"]}
+    dirs = glob.glob(os.path.join(table_dir, "data", "snap-*"))
+    return {os.path.normpath(d) for d in dirs} - keep
+
+
+def test_expiry_leaves_no_unreferenced_data_dir(tmp_path):
+    """A replace, then 24 appends with a replace and
+    expire_snapshots(keep_last=3) after every 8th (the crawl's seen
+    compaction cadence).  An append snapshot's files outlive it; when a
+    later expiry deletes them, their dir must go with them instead of
+    staying behind, holding only writer sidecars, until a recover()."""
+    t = str(tmp_path / "tbl")
+
+    def commit(round_n, n, mode):
+        d = icelite.next_data_dir(t)
+        _write_part(d, n)
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+        icelite.commit_files(t, d, round_n=round_n, row_count=n, mode=mode)
+
+    commit(0, 3, "replace")
+    for r in range(1, 25):
+        commit(r, 2, "append")
+        if r % 8 == 0:
+            commit(r, 5, "replace")
+            icelite.expire_snapshots(t, keep_last=3)
+            assert not _unreferenced_dirs(t), f"round {r}"
+    assert icelite.read_manifest(t, icelite.latest_snapshot_id(t))[
+        "row_count"
+    ] == 5
+
+
 class IceliteMachine(RuleBasedStateMachine):
     def __init__(self):
         super().__init__()
@@ -65,6 +102,7 @@ class IceliteMachine(RuleBasedStateMachine):
         self.orphan = False  # claimed-but-unpublished manifest pending
         self.max_epoch: int | None = None
         self.n_commits = 0
+        self.debris: set[str] = set()  # dirs left for recover() to sweep
 
     def teardown(self):
         shutil.rmtree(self.tmp, ignore_errors=True)
@@ -125,12 +163,14 @@ class IceliteMachine(RuleBasedStateMachine):
         # a writer died after its per-attempt write, before any claim
         d = icelite.next_data_dir(self.t)
         _write_part(d, n)
+        self.debris.add(os.path.normpath(d))
 
     @precondition(lambda self: self.orphan)
     @rule()
     def commit_blocked_by_orphan(self):
         d = icelite.next_data_dir(self.t)
         _write_part(d, 1)
+        self.debris.add(os.path.normpath(d))
         with pytest.raises(icelite.CommitConflict):
             icelite.commit_files(self.t, d, round_n=0, row_count=1)
 
@@ -140,6 +180,7 @@ class IceliteMachine(RuleBasedStateMachine):
         if self.orphan:
             assert removed, "recover() must reclaim the orphan claim"
         self.orphan = False
+        self.debris.clear()
 
     @rule(keep=hst.integers(1, 3))
     def expire(self, keep):
@@ -172,6 +213,10 @@ class IceliteMachine(RuleBasedStateMachine):
                 assert os.path.exists(f), (
                     f"snapshot {m['snapshot_id']} references deleted {f}"
                 )
+
+    @invariant()
+    def every_data_dir_is_referenced_or_debris(self):
+        assert _unreferenced_dirs(self.t) <= self.debris
 
     @invariant()
     def replay_guard_equals_true_max_epoch(self):

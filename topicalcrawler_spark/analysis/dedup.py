@@ -38,7 +38,6 @@ NUM_PERM = 64
 SIMHASH_BITS = 60
 SIMHASH_CHUNKS = 4
 CHUNK_BITS = 15
-CHUNK_MASK = (1 << CHUNK_BITS) - 1
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:

@@ -50,21 +50,14 @@ def _with_pred_lang(scored: DataFrame) -> DataFrame:
     return scored.withColumn("pred_lang", pred.otherwise(F.lit("und")))
 
 
-def lang_scores(docs: DataFrame) -> DataFrame:
-    """Per-doc stopword-hit ratio per language + argmax prediction
-    (ties and all-zero fall to 'und'). Output:
-    (doc_id, en_ratio, es_ratio, fr_ratio, de_ratio, pred_lang)."""
-    toks = tokens_expr("text")
-    return _with_pred_lang(docs.select("doc_id", *_lang_ratio_cols(toks)))
-
-
 def lang_quality_scores(docs: DataFrame) -> DataFrame:
-    """lang_scores + quality_scores in ONE row-local projection —
-    both families are pure per-row expressions over the same token
-    array, so joining their outputs on doc_id (the obvious
-    composition) would cost a second full scan of ``documents`` plus a
-    doc_id exchange for nothing.  Column order matches the join form:
-    (doc_id, *_ratio, pred_lang, n_tokens .. quality)."""
+    """Per-doc language and quality scores in ONE row-local
+    projection over one token array.  Language: the stopword-hit ratio
+    per language and the argmax prediction (ties and all-zero fall to
+    'und').  Quality: heuristic features and a composite 0..1-ish
+    score.  Output: (doc_id, en_ratio, es_ratio, fr_ratio, de_ratio,
+    pred_lang, n_tokens, n_distinct, type_token_ratio, mean_token_len,
+    stopword_ratio, quality)."""
     toks = tokens_expr("text")
     one = _with_pred_lang(
         docs.select(
@@ -110,13 +103,6 @@ def _quality_cols(toks: Column) -> list[Column]:
         stop.alias("stopword_ratio"),
         quality.alias("quality"),
     ]
-
-
-def quality_scores(docs: DataFrame) -> DataFrame:
-    """Heuristic quality features + a composite score:
-    n_tokens, n_distinct, type_token_ratio, mean_token_len,
-    stopword_ratio, quality (0..1-ish). Output keyed by doc_id."""
-    return docs.select("doc_id", *_quality_cols(tokens_expr("text")))
 
 
 def token_stats(docs: DataFrame) -> DataFrame:

@@ -26,9 +26,8 @@ does: the Spark schema JSON from the parquet footers, harvested in the
 same footer pass as the per-file stats.  ``read_snapshot`` hands it to
 ``spark.read.schema`` and starts no Spark job, where a bare
 ``spark.read.parquet`` runs a schema-inference job on every read.  A
-manifest without a ``schema`` key (written before it was recorded, or
-over files no Spark writer produced) keeps the inference read, so old
-crawl roots still resume.
+manifest without a ``schema`` key (``commit_files`` over files no Spark
+writer produced) keeps the inference read.
 
 A commit writes data first, manifest second, pointer last — a crashed
 commit leaves the previous snapshot intact and fully readable
@@ -47,6 +46,11 @@ advanced) leaves an orphan manifest that would otherwise block the
 next snapshot id forever; ``recover()`` — called at resume/startup,
 when single-writer ownership is re-established — deletes orphan
 manifests beyond the pointer along with their (unique) data dirs.
+
+Storage is reclaimed by one rule (``_sweep_dirs``): a data dir stays
+while a live manifest names it as its ``data_dir`` or lists a file in
+it, and goes whole, with its 0-row part files, ``_SUCCESS`` and
+``.crc`` sidecars, once neither holds.
 """
 
 from __future__ import annotations
@@ -54,6 +58,8 @@ from __future__ import annotations
 import json
 import os
 import secrets
+import shutil
+import time
 from glob import glob
 
 import pyarrow.parquet as pq
@@ -86,10 +92,9 @@ def latest_snapshot_id(table_dir: str) -> int | None:
 
 
 def latest_pointer(table_dir: str) -> dict | None:
-    """The LATEST pointer dict ({snapshot_id, round, meta} for commits
-    made by this version; older pointers may lack round/meta) — the
-    O(1) read the round-idempotency guards use instead of parsing an
-    O(files) manifest."""
+    """The LATEST pointer dict {snapshot_id, round, meta}, or None for
+    a table with no snapshot — the O(1) read the round-idempotency
+    guards use instead of parsing an O(files) manifest."""
     p = _latest_path(table_dir)
     if not os.path.exists(p):
         return None
@@ -131,47 +136,21 @@ def _url_hash_stats(md) -> list[int] | None:
     return None if lo is None else [int(lo), int(hi)]
 
 
-# Stats sentinel for 0-row files kept in a manifest.  The reader's
-# pruning predicate (operators.dedup.overlapping_files) is
-# `fmin <= hi AND lo <= fmax`, so only the extreme pair is
-# unsatisfiable by every non-full-range probe window — a sentinel with
-# a finite gap (e.g. [1, 0]) would still match any window straddling
-# it, and the probe task whose url_hash range covers that gap would
-# re-read every accumulated 0-row file each round.
-EMPTY_RANGE_SENTINEL: list[int] = [(1 << 63) - 1, -(1 << 63)]
 # the index range of a file without stats: overlaps every probe window
 FULL_RANGE: list[int] = [-(1 << 63), (1 << 63) - 1]
 
 
 def _collect_file_stats(
-    files: list[str], on_empty: str
-) -> tuple[list[str], int, dict[str, list[int]], list[str], dict | None]:
-    """One parquet-footer pass over a commit's part files — the SHARED
-    stats loop of ``commit`` and ``commit_files`` (a hand-duplicated
-    copy drifting in one of them would silently leave that path's files
-    without stats, so ``file_hash_index`` would give them the full
-    range and every probe task of the file-probed anti-join would read
-    every one of them).  Returns (kept_files, row_count, file_stats,
-    empty_files, schema); ``schema`` is the Spark schema JSON of the
-    first footer that has one (0-row files included), None when no
-    file was written by Spark.
-
-    ``on_empty`` is the 0-row-file policy — the one legitimate
-    difference between the two commit paths:
-
-    * ``'drop'`` — ``commit`` owns the directory it just wrote, so
-      empty part files are excluded from the manifest (the caller
-      unlinks them: unlisted files are invisible to expire_snapshots
-      and would leak forever).
-    * ``'sentinel'`` — ``commit_files`` must NOT touch the caller's
-      files (zero-copy contract: the directory may still be lazily
-      read this same round), so empties stay listed carrying
-      ``EMPTY_RANGE_SENTINEL``: range pruning skips them, which is
-      exactly their semantics.
-    """
-    assert on_empty in ("drop", "sentinel"), on_empty
+    files: list[str],
+) -> tuple[list[str], int, dict[str, list[int]], dict | None]:
+    """One parquet-footer pass over a commit's part files.  Returns
+    (files, row_count, file_stats, schema).  A 0-row file (Spark writes
+    one when a write's first partition is empty) is never listed: it
+    has no rows and no footer stats, and stays on disk until its dir
+    is swept.  ``schema`` is the Spark schema JSON of the first
+    footer that has one, 0-row files included (an empty snapshot reads
+    its data dir with it), None when no file was written by Spark."""
     kept: list[str] = []
-    empties: list[str] = []
     row_count = 0
     file_stats: dict[str, list[int]] = {}
     schema = None
@@ -180,17 +159,13 @@ def _collect_file_stats(
         if schema is None and SPARK_SCHEMA_KEY in (md.metadata or {}):
             schema = json.loads(md.metadata[SPARK_SCHEMA_KEY])
         if md.num_rows == 0:
-            empties.append(f)
-            if on_empty == "sentinel":
-                kept.append(f)
-                file_stats[f] = list(EMPTY_RANGE_SENTINEL)
             continue
         kept.append(f)
         row_count += md.num_rows
         st = _url_hash_stats(md)
         if st is not None:
             file_stats[f] = st
-    return kept, row_count, file_stats, empties, schema
+    return kept, row_count, file_stats, schema
 
 
 def _claim_manifest(manifest: dict, mpath: str) -> None:
@@ -249,6 +224,59 @@ def _advance_pointer(
 _UNSET = object()
 
 
+def _new_data_dir(table_dir: str, snap_id: int) -> str:
+    """A fresh per-attempt data dir for snapshot ``snap_id``: the random
+    suffix makes every attempt's dir its own."""
+    return os.path.join(
+        table_dir, "data", f"snap-{snap_id:06d}-{secrets.token_hex(4)}"
+    )
+
+
+def _publish(
+    table_dir: str,
+    data_dir: str,
+    parent: int | None,
+    round_n: int,
+    meta: dict | None,
+    mode: str,
+    row_count: int | None = None,
+) -> int:
+    """Publish the part files of ``data_dir`` as snapshot parent + 1:
+    the footer pass, the parent's file list on append, the manifest
+    claim and the pointer advance.  ``row_count`` overrides the footer
+    row count (a commit_files view counts its rows after ``where``)."""
+    snap_id = (parent or 0) + 1
+    # row counts + per-file url_hash min/max from parquet footers — no
+    # second Spark job needed.  The stats are the Iceberg manifest
+    # column-stats analogue: they let readers prune files by url_hash
+    # range WITHOUT opening footers at read time (the file-probed exact
+    # anti-join depends on this — operators/dedup.anti_join_seen_files).
+    files, n_rows, file_stats, schema = _collect_file_stats(
+        sorted(glob(os.path.join(data_dir, "part-*.parquet")))
+    )
+    if row_count is None:
+        row_count = n_rows
+    if mode == "append" and parent is not None:
+        pm = read_manifest(table_dir, parent)
+        files = pm["files"] + files
+        row_count += pm["row_count"]
+        file_stats = {**pm.get("file_stats", {}), **file_stats}
+    manifest = {
+        "snapshot_id": snap_id,
+        "parent_id": parent,
+        "files": files,
+        "row_count": row_count,
+        "round": round_n,
+        "meta": meta or {},
+        "file_stats": file_stats,
+        "schema": schema,
+        "data_dir": data_dir,
+    }
+    _claim_manifest(manifest, _manifest_path(table_dir, snap_id))
+    _advance_pointer(table_dir, snap_id, round_n, meta)
+    return snap_id
+
+
 def commit(
     df: DataFrame,
     table_dir: str,
@@ -285,10 +313,7 @@ def commit(
         if expected_parent is _UNSET
         else expected_parent
     )
-    snap_id = (parent or 0) + 1
-    data_dir = os.path.join(
-        table_dir, "data", f"snap-{snap_id:06d}-{secrets.token_hex(4)}"
-    )
+    data_dir = _new_data_dir(table_dir, (parent or 0) + 1)
     # Dictionary encoding is pathological for fat unique BINARY values
     # (the corpus `bytes` column: ~14x write slowdown hashing 25KB
     # blobs into dict pages) and useless for the unique URL/hash
@@ -296,52 +321,12 @@ def commit(
     df.write.mode("overwrite").option(
         "parquet.enable.dictionary", "false"
     ).parquet(data_dir)
-
-    files = sorted(glob(os.path.join(data_dir, "part-*.parquet")))
-    # row counts + per-file url_hash min/max from parquet footers — no
-    # second Spark job needed.  The stats are the Iceberg manifest
-    # column-stats analogue: they let readers prune files by url_hash
-    # range WITHOUT opening footers at read time (the file-probed exact
-    # anti-join depends on this — operators/dedup.anti_join_seen_files).
-    nonempty, row_count, file_stats, empty, schema = _collect_file_stats(
-        files, on_empty="drop"
-    )
-    if nonempty:
-        # unlisted files are invisible to expire_snapshots (it deletes
-        # only manifest-referenced files), so delete them NOW or they
-        # leak forever.  When the whole commit is empty, one 0-row file
-        # is kept — read_snapshot's empty branch reads the data dir for
-        # the schema.
-        for f in empty:
-            os.unlink(f)
-    files = nonempty
-    if mode == "append" and parent is not None:
-        pm = read_manifest(table_dir, parent)
-        files = pm["files"] + files
-        row_count += pm["row_count"]
-        file_stats = {**pm.get("file_stats", {}), **file_stats}
-
-    manifest = {
-        "snapshot_id": snap_id,
-        "parent_id": parent,
-        "files": files,
-        "row_count": row_count,
-        "round": round_n,
-        "meta": meta or {},
-        "file_stats": file_stats,
-        "schema": schema,
-        "data_dir": data_dir,
-    }
     try:
-        _claim_manifest(manifest, _manifest_path(table_dir, snap_id))
+        return _publish(table_dir, data_dir, parent, round_n, meta, mode)
     except CommitConflict:
         # the losing attempt's data dir is exclusively ours — reclaim it
-        import shutil
-
         shutil.rmtree(data_dir, ignore_errors=True)
         raise
-    _advance_pointer(table_dir, snap_id, round_n, meta)
-    return snap_id
 
 
 def commit_files(
@@ -359,6 +344,8 @@ def commit_files(
     The caller may record a logical view in ``meta``:
       meta["select"] — selectExpr list applied at read time
       meta["where"]  — filter applied at read time (before select)
+    ``row_count`` is the row count of that view.  ``meta`` is this
+    snapshot's own; nothing is inherited from the parent.
 
     This is how the corpus table avoids a second full pass over the
     image bytes each round: the fetch stage's one parquet write IS the
@@ -366,39 +353,10 @@ def commit_files(
     columns in those files cost only cold storage — parquet is
     columnar, so corpus readers never deserialize them.
     """
-    parent = latest_snapshot_id(table_dir)
-    snap_id = (parent or 0) + 1
-    files = sorted(glob(os.path.join(data_dir, "part-*.parquet")))
-    # footer stats via the shared loop: without them file_hash_index
-    # would give these files the full range, and every task of the
-    # file-probed anti-join would read them for the rest of the
-    # table's life.  0-row files stay
-    # listed with EMPTY_RANGE_SENTINEL (see _collect_file_stats: the
-    # zero-copy contract forbids deleting the caller's files).
-    files, _, file_stats, _, schema = _collect_file_stats(
-        files, on_empty="sentinel"
+    return _publish(
+        table_dir, data_dir, latest_snapshot_id(table_dir), round_n, meta,
+        mode, row_count,
     )
-    if mode == "append" and parent is not None:
-        pm = read_manifest(table_dir, parent)
-        files = pm["files"] + files
-        row_count += pm["row_count"]
-        meta = meta or pm.get("meta")
-        file_stats = {**pm.get("file_stats", {}), **file_stats}
-
-    manifest = {
-        "snapshot_id": snap_id,
-        "parent_id": parent,
-        "files": files,
-        "row_count": row_count,
-        "round": round_n,
-        "meta": meta or {},
-        "file_stats": file_stats,
-        "schema": schema,
-        "data_dir": data_dir,
-    }
-    _claim_manifest(manifest, _manifest_path(table_dir, snap_id))
-    _advance_pointer(table_dir, snap_id, round_n, meta)
-    return snap_id
 
 
 def file_hash_index(
@@ -426,10 +384,7 @@ def next_data_dir(table_dir: str) -> str:
     can never delete the files a winner's manifest already references.
     An attempt that crashes before its commit_files leaves an
     unreferenced debris dir; recover() sweeps those at restart."""
-    snap_id = (latest_snapshot_id(table_dir) or 0) + 1
-    return os.path.join(
-        table_dir, "data", f"snap-{snap_id:06d}-{secrets.token_hex(4)}"
-    )
+    return _new_data_dir(table_dir, (latest_snapshot_id(table_dir) or 0) + 1)
 
 
 def read_snapshot(
@@ -439,7 +394,9 @@ def read_snapshot(
     pruning); applies the manifest's logical view (where/select) when
     the snapshot was committed via commit_files.  Reads with the
     manifest's schema when it has one (no Spark job), else infers it
-    from a footer (a legacy manifest: one inference job)."""
+    from a footer (files no Spark writer produced: one inference job).
+    An empty snapshot reads its data dir, whose 0-row part file carries
+    the schema."""
     if snapshot_id is None:
         snapshot_id = latest_snapshot_id(table_dir)
         if snapshot_id is None:
@@ -448,21 +405,37 @@ def read_snapshot(
     reader = spark.read
     if manifest.get("schema"):
         reader = reader.schema(StructType.fromJson(manifest["schema"]))
-    if not manifest["files"]:
-        # empty snapshot: re-read the (schema-bearing) empty parquet dir
-        return reader.parquet(
-            manifest.get(
-                "data_dir",
-                os.path.join(table_dir, "data", f"snap-{snapshot_id:06d}"),
-            )
-        )
-    df = reader.parquet(*manifest["files"])
+    df = reader.parquet(*(manifest["files"] or [manifest["data_dir"]]))
     meta = manifest.get("meta") or {}
     if meta.get("where"):
         df = df.where(meta["where"])
     if meta.get("select"):
         df = df.selectExpr(*meta["select"])
     return df
+
+
+def _sweep_dirs(
+    dirs: set[str], live: list[dict], min_age_s: float = 0.0
+) -> None:
+    """The one storage-reclaim rule: remove each of ``dirs`` that no
+    manifest in ``live`` names as its ``data_dir`` and none lists a
+    file in.  A dir goes whole, with its 0-row part files and writer
+    sidecars.  ``min_age_s`` spares dirs modified more recently (a
+    live writer's in-flight data write)."""
+    keep = {os.path.normpath(m["data_dir"]) for m in live}
+    keep |= {
+        os.path.dirname(os.path.normpath(f)) for m in live for f in m["files"]
+    }
+    cutoff = time.time() - min_age_s
+    for d in dirs:
+        if os.path.normpath(d) in keep:
+            continue
+        try:
+            if min_age_s and os.path.getmtime(d) > cutoff:
+                continue
+        except FileNotFoundError:
+            continue
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 2) -> dict:
@@ -478,6 +451,11 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> dict:
     rewrites, compactions) are reclaimed.  Crash-safe in the same way
     as commit: manifests are deleted only after the files they
     uniquely referenced are gone, and the kept chain is never touched.
+
+    Then sweeps (``_sweep_dirs``, against the kept manifests) the data
+    dirs of the dropped snapshots and of the deleted files: an append
+    snapshot's files outlive it, so its dir goes with its last file.
+    No other dir is touched — it may be an in-flight writer's.
 
     Returns {"kept": [ids], "deleted_snapshots": [ids],
     "deleted_files": n}.
@@ -508,38 +486,24 @@ def expire_snapshots(table_dir: str, keep_last: int = 2) -> dict:
             if k not in hw or m["snapshot_id"] > hw[k]:
                 hw[k] = m["snapshot_id"]
     keep |= set(hw.values())
-    drop = [i for i in ids if i not in keep]
-    referenced: set[str] = set()
-    for i in keep:
-        referenced.update(read_manifest(table_dir, i)["files"])
+    kept = [m for m in manifests if m["snapshot_id"] in keep]
+    drop = [m for m in manifests if m["snapshot_id"] not in keep]
+    referenced = {f for m in kept for f in m["files"]}
 
     n_deleted = 0
-    drop_dirs: list[str] = []
-    for i in drop:
-        m = read_manifest(table_dir, i)
-        drop_dirs.append(
-            m.get("data_dir", os.path.join(table_dir, "data", f"snap-{i:06d}"))
-        )
+    sweep: set[str] = set()
+    for m in drop:
+        sweep.add(m["data_dir"])
         for f in m["files"]:
             if f not in referenced and os.path.exists(f):
                 os.remove(f)
+                sweep.add(os.path.dirname(f))
                 n_deleted += 1
-        os.remove(_manifest_path(table_dir, i))
-    # sweep data dirs of dropped snapshots whose parquet files are all
-    # unreferenced by kept manifests (this includes the one 0-row
-    # schema-bearing file an all-empty commit keeps — referenced by no
-    # manifest, so the dir goes once its snapshot is dropped)
-    for d in drop_dirs:
-        if os.path.isdir(d) and not any(
-            fn.endswith(".parquet") and os.path.join(d, fn) in referenced
-            for fn in os.listdir(d)
-        ):
-            import shutil
-
-            shutil.rmtree(d, ignore_errors=True)
+        os.remove(_manifest_path(table_dir, m["snapshot_id"]))
+    _sweep_dirs(sweep, kept)
     return {
         "kept": sorted(keep),
-        "deleted_snapshots": drop,
+        "deleted_snapshots": [m["snapshot_id"] for m in drop],
         "deleted_files": n_deleted,
     }
 
@@ -562,72 +526,27 @@ def recover(table_dir: str, min_age_s: float = 0.0) -> list[int]:
     advance leaves an ORPHAN manifest (id beyond LATEST) that is
     invisible to every reader but permanently blocks the next commit's
     id claim with ``CommitConflict``.  Those orphans are pure debris:
-    delete each one's manifest and its per-attempt data directory
-    (unique to it by construction, so nothing referenced by the live
-    chain can be touched).  Returns the removed snapshot ids.
+    their manifests are deleted.  Returns the removed snapshot ids.
 
-    Also sweeps DEBRIS DATA DIRS: an attempt that crashed after writing
-    its (per-attempt, unique) data directory but BEFORE claiming a
-    manifest leaves a ``data/snap-*`` dir referenced by nothing.  A dir
-    is kept iff some surviving manifest records it as its ``data_dir``
-    (the empty-commit case keeps a 0-row schema file there with
-    ``files=[]``) or references at least one file inside it."""
-    import shutil
-    import time as _time
-
-    cutoff = _time.time() - min_age_s
-
-    def _old_enough(path: str) -> bool:
-        try:
-            return os.path.getmtime(path) <= cutoff
-        except OSError:
-            return True
-
+    Then every ``data/snap-*`` dir, and each orphan's ``data_dir``, is
+    swept by the one rule of ``_sweep_dirs`` against the surviving
+    manifests, with the same grace window.  That reclaims the orphans'
+    per-attempt dirs and the debris of attempts that crashed after
+    writing their data dir but before claiming a manifest."""
+    cutoff = time.time() - min_age_s
     ptr = latest_snapshot_id(table_dir)
     removed: list[int] = []
+    dirs = set(glob(os.path.join(table_dir, "data", "snap-*")))
     for m in history(table_dir):
         if ptr is not None and m["snapshot_id"] <= ptr:
             continue
         mp = _manifest_path(table_dir, m["snapshot_id"])
-        if min_age_s and not _old_enough(mp):
+        if min_age_s and os.path.getmtime(mp) > cutoff:
             continue  # possibly a live writer mid-commit — grace
-        d = m.get(
-            "data_dir",
-            os.path.join(table_dir, "data", f"snap-{m['snapshot_id']:06d}"),
-        )
-        if os.path.isdir(d):
-            shutil.rmtree(d, ignore_errors=True)
         os.remove(mp)
+        dirs.add(m["data_dir"])
         removed.append(m["snapshot_id"])
-
-    live = history(table_dir)  # post-orphan-removal chain
-    # legacy manifests (pre-data_dir) fall back to the un-suffixed
-    # data/snap-NNNNNN dir — the SAME fallback read_snapshot's empty
-    # branch and expire_snapshots use; sweeping it would break the
-    # schema read of a live legacy empty snapshot
-    keep_dirs = {
-        os.path.normpath(
-            m.get("data_dir")
-            or os.path.join(
-                table_dir, "data", f"snap-{m['snapshot_id']:06d}"
-            )
-        )
-        for m in live
-    }
-    referenced = {f for m in live for f in m["files"]}
-    for d in glob(os.path.join(table_dir, "data", "snap-*")):
-        nd = os.path.normpath(d)
-        if nd in keep_dirs or not os.path.isdir(d):
-            continue
-        if min_age_s and not _old_enough(d):
-            continue  # possibly a live writer's in-flight data write
-        if any(
-            os.path.join(d, fn) in referenced
-            for fn in os.listdir(d)
-            if fn.endswith(".parquet")
-        ):
-            continue
-        shutil.rmtree(d, ignore_errors=True)
+    _sweep_dirs(dirs, history(table_dir), min_age_s)
     return removed
 
 

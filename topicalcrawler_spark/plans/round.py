@@ -252,15 +252,11 @@ def _ensure_seen_initialized(spark: SparkSession, cfg: CrawlConfig) -> None:
 
 def _latest_round(table_dir: str) -> tuple[int | None, int | None, dict]:
     """(snapshot_id, round, meta) of the head — O(1) via the LATEST
-    pointer, falling back to one manifest parse for pre-round-pointer
-    tables."""
+    pointer."""
     ptr = icelite.latest_pointer(table_dir)
     if ptr is None:
         return None, None, {}
-    if "round" in ptr:
-        return ptr["snapshot_id"], ptr["round"], ptr.get("meta", {})
-    m = icelite.read_manifest(table_dir, ptr["snapshot_id"])
-    return m["snapshot_id"], m["round"], m.get("meta", {})
+    return ptr["snapshot_id"], ptr["round"], ptr["meta"]
 
 
 def _compaction_done(table_dir: str, round_n: int) -> bool:

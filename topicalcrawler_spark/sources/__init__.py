@@ -4,19 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TEST_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def scan(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """S1 — parquet scan of one driver test table (TESTDATA.md)."""
