@@ -1231,16 +1231,17 @@ def test_round_counters_pinned_and_match_tables(spark, tmp_path, bloom):
 
 # round 2's Spark jobs below, in the test session (local[8], 8 shuffle
 # partitions)
-WARM_ROUND_JOBS = 42
+WARM_ROUND_JOBS = 37
 
 
 def test_warm_round_spark_job_count(spark, tmp_path):
     """A warm round in the benchmark's crawl settings (4 shards, bloom
     forced on, both compactions every round) starts a pinned number of
-    Spark jobs: its counters ride jobs it runs anyway (Observations on
-    the fetch write and the robots gate cache, one verify aggregate),
-    not a separate metrics action.  A change that adds a job per round
-    fails here and has to update the count on purpose."""
+    Spark jobs: its counters ride jobs it runs anyway (an Observation on
+    the fetch write, manifest row-count deltas, one verify aggregate),
+    not a separate metrics action, and its trace commit is a plain
+    append with no rank.  A change that adds a job per round fails
+    here and has to update the count on purpose."""
     import uuid
 
     from topicalcrawler_spark.plans.round import crawl_round, init_crawl

@@ -128,18 +128,15 @@ def _window_specs(plan: str) -> list[str]:
 
 
 def test_no_unpartitioned_window_in_trace_plan(spark):
-    """The round-1 scale-killer: global_fetch_order's old global
-    row_number single-partitioned each round's selected set (five
-    WindowExec warnings in the driver bench).  global_rank now ranks
-    with no Window at all — range exchange, per-partition sort,
-    driver-side offsets — so its plan must hold no Window, no
-    BroadcastNestedLoopJoin and exactly one range exchange, and its
-    ranks must be exactly base+1..base+n: for the trace order, for
-    base > 0, and when a range partition is left empty."""
-    from topicalcrawler_spark.operators.politeness import (
-        global_fetch_order,
-        global_rank,
-    )
+    """The round-1 scale-killer: a global row_number single-partitions
+    its input (five WindowExec warnings in the driver bench).
+    global_rank ranks with no Window at all — range exchange,
+    per-partition sort, driver-side offsets — so its plan must hold no
+    Window, no BroadcastNestedLoopJoin and exactly one range exchange,
+    and its ranks must be exactly base+1..base+n: for the trace order,
+    for base > 0, and when a range partition is left empty."""
+    from topicalcrawler_spark.functions import order_cols
+    from topicalcrawler_spark.operators.politeness import global_rank
 
     def check(df, caches, key_cols, out_col, base):
         plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -168,13 +165,13 @@ def test_no_unpartitioned_window_in_trace_plan(spark):
         -r["relevance_q"], r["depth"], r["discovery_time"], r["discovery_seq"]
     )
     caches: list = []
-    df = global_fetch_order(frontier, caches, partitions=8)
+    df = global_rank(frontier, order_cols(), "trace_seq", caches)
     check(df, caches, trace_key, "trace_seq", 0)
 
     # base > 0 (the admission rank: base = n_seen)
     caches = []
     df = global_rank(
-        frontier, [F.col("discovery_seq").asc()], "rk", caches, 8, base=5000
+        frontier, [F.col("discovery_seq").asc()], "rk", caches, base=5000
     )
     check(df, caches, lambda r: r["discovery_seq"], "rk", 5000)
 
@@ -184,7 +181,7 @@ def test_no_unpartitioned_window_in_trace_plan(spark):
         F.least(F.col("id"), F.lit(7)).alias("k")
     )
     caches = []
-    df = global_rank(skewed, [F.col("k").asc()], "rk", caches, 8, base=3)
+    df = global_rank(skewed, [F.col("k").asc()], "rk", caches, base=3)
     ranged = caches[0]
     assert ranged.select("_pid").distinct().count() < ranged.rdd.getNumPartitions()
     check(df, caches, lambda r: r["k"], "rk", 3)

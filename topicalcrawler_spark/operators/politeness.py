@@ -96,12 +96,14 @@ def global_rank(
     order: list,
     out_col: str,
     cache_registry: list,
-    partitions: int | None = None,
     base: int = 0,
 ) -> DataFrame:
     """Scale-safe global dense rank (``base`` + 1-based position in the
     total order ``order``) with no Window, self-join or broadcast, and
-    one range exchange:
+    one range exchange over ``defaultParallelism`` partitions.  Its
+    callers number stored state: ``init_crawl``'s seed admission and
+    each round's admission rank of new links (``discovery_seq``).
+    Fetch order is not stored; ``read_trace`` ranks it.  Steps:
 
       1. ``repartitionByRange`` on the order key (partition i holds
          smaller keys than partition i+1), ``sortWithinPartitions`` on
@@ -129,7 +131,7 @@ def global_rank(
     call time, so a call site that "didn't care" would leak one entry
     per call (the per-round leak of round-3 ADVICE).
     """
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     ranged = (
         df.repartitionByRange(n, *order)
         .sortWithinPartitions(*order)
@@ -149,21 +151,3 @@ def global_rank(
     return ranged.withColumn(
         out_col, (F.lit(base).cast("long") + off + F.col("_pos") + 1).cast("long")
     ).drop("_pid", "_pos")
-
-
-def global_fetch_order(
-    selected: DataFrame,
-    cache_registry: list,
-    partitions: int | None = None,
-) -> DataFrame:
-    """O1 — total fetch order within a round; trace_seq is the rank.
-
-    ``global_rank`` over the frontier order key — exact because
-    ``order_cols()`` is a total order (depth then discovery_seq is
-    unique — SURVEY.md §7 hard part 1).  Scale contract: callers
-    project payload columns away first; the selected set is
-    politeness-budget-bounded, and the ranged layout is small and
-    LRU-evictable."""
-    return global_rank(
-        selected, order_cols(), "trace_seq", cache_registry, partitions
-    )

@@ -7,7 +7,8 @@ trace / lineage):
   2. J2/P5 robots gate (broadcast join + codegen'd longest-prefix)
   3. J3/W1/P6 per-host budget top-k (salted two-stage window)
   4. U3 fetch (Arrow-batch synthetic web)
-  5. O1 global fetch order -> trace append
+  5. trace append: the fetched rows, unranked (O1, the global fetch
+     order, is ranked where the trace is read: read_trace)
   6. U4 decode/verify -> corpus append
   7. links: explode + canon (U1) + score (U2) + scheme/depth filter
      + T1 deterministic batch dedup + J1 seen probe: one Arrow pass
@@ -50,12 +51,14 @@ from datetime import timedelta
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .. import icelite
 from ..core.relevance import REL_Q_PER_UNIT, SEED_RELEVANCE_Q
 from ..functions import (
     canon_udf,
     host_expr,
+    order_cols,
     relevance_expr,
     url_hash_expr,
     with_canon_and_relevance,
@@ -73,7 +76,6 @@ from ..operators.fetch import fetch_selected
 from ..operators.gates import scheme_depth_gate
 from ..operators.images import decode_verify
 from ..operators.politeness import (
-    global_fetch_order,
     global_rank,
     select_per_host_topk,
     with_budget,
@@ -576,11 +578,11 @@ def _crawl_round_impl(
     # 5. U4 decode/phash verification (north_star: "images
     # decoded/phash-verified in Arrow-batch UDFs") of the bytes as
     # STORED: the round's one aggregate action.  It runs BEFORE the
-    # trace phase, not overlapped with it from a second driver thread:
-    # that measured flat on 4 cores (benchmark crawl round, 12.98 vs
-    # 13.16 reference-s), the decode pass and the trace exchange
-    # competing for the same cores.  Serial, every job runs inside one
-    # phase, so each phase wall is the time of that phase's own jobs.
+    # trace append, not overlapped with the next phase from a second
+    # driver thread: that measured flat on 4 cores (benchmark crawl
+    # round, 12.98 vs 13.16 reference-s), the two competing for the
+    # same cores.  Serial, every job runs inside one phase, so each
+    # phase wall is the time of that phase's own jobs.
     n_verify_failed = decode_verify(
         fetched.filter(F.col("image_id").isNotNull()).select(
             F.col("image_bytes").alias("bytes"),
@@ -592,41 +594,24 @@ def _crawl_round_impl(
     ).count()
     mark("fetch_verify")
 
-    trace_caches: list = []
-    try:
-        if not _round_committed(cfg.table("trace"), round_n):
-            trace = global_fetch_order(
-                partitions=par,
-                cache_registry=trace_caches,
-                selected=fetched.select(
-                    "url_canon",
-                    "host",
-                    "depth",
-                    "relevance_q",
-                    "discovery_time",
-                    "discovery_seq",
-                    "http_status",
-                    "image_id",
-                )
-            ).select(
-                "trace_seq",
+    # trace append: what was fetched, unranked; read_trace ranks it
+    if not _round_committed(cfg.table("trace"), round_n):
+        icelite.commit(
+            fetched.select(
                 F.lit(round_n).alias("round"),
                 "url_canon",
                 "host",
                 "depth",
                 "relevance_q",
+                "discovery_time",
                 "discovery_seq",
                 F.col("http_status").alias("status"),
                 "image_id",
-            )
-            icelite.commit(trace, cfg.table("trace"), round_n, mode="append")
-    finally:
-        # the commit materialized the ranged layout — release it even
-        # when the commit fails (a crash re-run's CommitConflict here
-        # would otherwise leak the very CacheManager entry this
-        # registry exists to free — ADVICE)
-        for c in trace_caches:
-            c.unpersist()
+            ),
+            cfg.table("trace"),
+            round_n,
+            mode="append",
+        )
     mark("trace")
 
     # 6. corpus append (authoritative schema, BASELINE.json:15) —
@@ -746,8 +731,8 @@ def _crawl_round_impl(
     # O(1), and pinned to round_n-1 so a crash re-run reproduces the
     # identical seqs), rank over (parent_seq, idx) among the admitted
     # links.  O(Δ log Δ) — one range exchange of the new links, the
-    # same class as the trace rank; bounded forever: max seq == total
-    # URLs ever discovered.
+    # round's one rank; bounded forever: max seq == total URLs ever
+    # discovered.
     new_links = global_rank(
         new_links,
         [F.col("parent_seq").asc(), F.col("idx").asc()],
@@ -947,10 +932,20 @@ def resume(spark: SparkSession, cfg: CrawlConfig, rounds: int) -> list[dict]:
 
 
 def read_trace(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
-    """Full fetch trace across all rounds, in fetch order."""
-    return icelite.read_snapshot(spark, cfg.table("trace")).orderBy(
-        "round", "trace_seq"
-    )
+    """Full fetch trace across all rounds, in fetch order: O1.
+
+    The trace table stores what each round fetched, unranked.  Here
+    ``trace_seq`` (first column) is each row's 1-based position in its
+    round's fetch order, the one order spec ``order_cols()``, a total
+    order.  Scale trade: the window sorts each round's fetched set in
+    one task (a round is politeness-budget-bounded), and it runs only
+    on verification reads, never in the crawl loop."""
+    trace = icelite.read_snapshot(spark, cfg.table("trace"))
+    fetch_order = Window.partitionBy("round").orderBy(*order_cols())
+    return trace.select(
+        F.row_number().over(fetch_order).cast("long").alias("trace_seq"),
+        *trace.columns,
+    ).orderBy("round", "trace_seq")
 
 
 def read_seen(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:

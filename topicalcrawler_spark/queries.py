@@ -968,20 +968,13 @@ def conditional_functions_customer(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST2 ⊕ — tumbling 1h window agg (same F.window the streaming
-    pipeline uses; epoch-aligned, so equals date_trunc('hour'));
+    """ST2 ⊕ — tumbling 1h window agg: the streaming pipeline's own
+    ``tumbling_counts`` over the batch table (epoch-aligned, so equals
+    date_trunc('hour'); the watermark is a no-op in a batch plan);
     bigint-cents value sum."""
-    return (
-        scan(spark, "events", sf_dir)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(_cents(F.col("value"))).alias("sum_value_c"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n", "sum_value_c"
-        )
-    )
+    from . import streaming as st
+
+    return st.tumbling_counts(scan(spark, "events", sf_dir))
 
 
 @register(
@@ -994,14 +987,12 @@ def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST3 ⊕ — sliding window (1h size, 15m slide): every event lands
-    in exactly 4 windows."""
-    return (
-        scan(spark, "events", sf_dir)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("win.start").alias("win_start"), "event_type", "n")
-    )
+    """ST3 ⊕ — sliding window (1h size, 15m slide), the streaming
+    ``sliding_counts`` over the batch table: every event lands in
+    exactly 4 windows."""
+    from . import streaming as st
+
+    return st.sliding_counts(scan(spark, "events", sf_dir))
 
 
 @register(
@@ -1025,19 +1016,12 @@ def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST4 ⊕ — session windows (30 min gap) per user; the oracle is the
-    classic gaps-and-islands formulation."""
-    return (
-        scan(spark, "events", sf_dir)
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    """ST4 ⊕ — session windows (30 min gap) per user, the streaming
+    ``session_counts`` over the batch table; the oracle is the classic
+    gaps-and-islands formulation."""
+    from . import streaming as st
+
+    return st.session_counts(scan(spark, "events", sf_dir))
 
 
 _SSJOIN_SEQ = [0]  # memory-sink table names must be unique per run

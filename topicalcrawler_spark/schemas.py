@@ -72,15 +72,17 @@ HOST_BUDGET = T.StructType(
     ]
 )
 
-# one fetch attempt, in trace order (the crawl-ordering artifact)
+# one fetch attempt as stored (the crawl-ordering artifact): unranked;
+# read_trace adds trace_seq, the rank in the round's fetch order,
+# computed from the order key columns kept here (discovery_time too)
 TRACE = T.StructType(
     [
-        T.StructField("trace_seq", T.LongType()),
         T.StructField("round", T.IntegerType()),
         T.StructField("url_canon", T.StringType()),
         T.StructField("host", T.StringType()),
         T.StructField("depth", T.IntegerType()),
         T.StructField("relevance_q", T.LongType()),
+        T.StructField("discovery_time", T.TimestampType()),
         T.StructField("discovery_seq", T.LongType()),
         T.StructField("status", T.IntegerType()),
         T.StructField("image_id", T.StringType()),

@@ -9,10 +9,10 @@ TESTDATA.md): watermarked windowed aggregation, streaming dedup
 (token bucket via applyInPandasWithState), and icelite-snapshot
 micro-batch sinks via foreachBatch.
 
-ST2/ST3/ST4 use the SAME F.window / F.session_window expressions as
-the batch queries the DuckDB oracle checks (queries.py) — batch/stream
-parity comes from sharing the expression, the core Structured
-Streaming design point.
+ST2/ST3/ST4 are the SAME functions the batch queries the DuckDB oracle
+checks apply to the batch table (queries.py; a watermark is a no-op
+in a batch plan) — batch/stream parity comes from sharing the
+expression, the core Structured Streaming design point.
 """
 
 from __future__ import annotations
