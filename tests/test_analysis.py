@@ -3,6 +3,8 @@ hash parity with DuckDB, multimodal plumbing."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -129,18 +131,13 @@ def test_connected_components_random_graphs_match_union_find(spark):
             for r in dd.connected_components(pairs, verts).collect()
         }
         assert got == expect, seed
-        got_star = {
-            r["doc_id"]: r["comp"]
-            for r in dd.connected_components_star(pairs, verts).collect()
-        }
-        assert got_star == expect, ("star", seed)
 
 
-def test_connected_components_star_long_chain(spark):
+def test_connected_components_long_chain(spark):
     """The case min-label propagation needs O(n) rounds for: a 30-hop
     chain. large-star/small-star must label it in O(log n) rounds, and
-    the propagation path must RAISE (never silently return partial
-    labels) when its iteration budget is too small for the diameter."""
+    must RAISE (never silently return partial labels) when its round
+    budget is too small to reach the fixpoint."""
     import pytest
 
     n = 30
@@ -150,11 +147,11 @@ def test_connected_components_star_long_chain(spark):
     verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     got = {
         r["doc_id"]: r["comp"]
-        for r in dd.connected_components_star(pairs, verts, max_iter=10).collect()
+        for r in dd.connected_components(pairs, verts, max_iter=10).collect()
     }
     assert got == {i: 0 for i in range(n)}
     with pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(pairs, verts, max_iter=3).collect()
+        dd.connected_components(pairs, verts, max_iter=1).collect()
 
 
 def test_connected_components_clusters_and_singletons(spark):
@@ -184,6 +181,35 @@ def test_simhash_identical_docs_pair(spark):
              for r in dd.simhash_pairs(docs, max_hamming=3).collect()}
     assert pairs.get((1, 2)) == 0
     assert (1, 3) not in pairs and (2, 3) not in pairs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "simhash_neardup_pairs",
+        "dup_components_docs",
+        "phash_neardup_corpus",
+        "phash_components_corpus",
+    ],
+)
+def test_near_dup_entries_match_oracle(spark, name):
+    """Both near-dup tails (text simhash, image phash) run the one
+    banded Hamming pair join and the one connected-components
+    algorithm; each entry must equal its brute-force DuckDB oracle on
+    the sf0.01 tables, which hold real near-dup pairs."""
+    from tools.check_oracle import to_rows
+    from topicalcrawler_spark.queries import oracle_sql, queries
+
+    sf_dir = os.path.join(os.path.dirname(SF), "sf0.01")
+    df = queries()[name](spark, sf_dir)
+    got = to_rows(df.columns, [tuple(r) for r in df.collect()])
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    res = con.sql(oracle_sql()[name])
+    want = to_rows(res.columns, res.fetchall())
+    assert got == want and len(want[1]) > 0
 
 
 def test_lsh_ann_recall_vs_exact(spark):

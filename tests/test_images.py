@@ -33,8 +33,10 @@ def test_phash_banding_adversarial_bit_patterns(spark):
     """Pin the banding's unsigned-shift semantics on hand-built
     signatures that a signed shift or %-mod banding would mishandle:
     pairs differing ONLY in bit 63 (sign bit), pairs with every
-    differing bit crammed into a single band, and a pair at exactly
-    max_hamming+1 that must NOT appear."""
+    differing bit crammed into a single band, a pair at exactly
+    max_hamming whose differing bits spread one per band so that it
+    shares only the last band, and a pair at exactly max_hamming+1
+    that must NOT appear."""
     k = 8
     base = -0x7FF0_1234_5678_9ABD  # negative: top bits set
     def flip(v, *bits):
@@ -49,6 +51,10 @@ def test_phash_banding_adversarial_bit_patterns(spark):
         ("sign_b", flip(base, 63)),            # hamming 1, sign differs
         ("band_a", 0x0123_4567_89AB_CDEF),
         ("band_b", _signed(0x0123_4567_89AB_CDEF ^ 0x7F)),  # 7 bits, one band
+        ("spread_a", 0x0F0F_0F0F_0F0F_0F0F),
+        ("spread_b", _signed(0x0F0F_0F0F_0F0F_0F0F ^ sum(
+            1 << c * (64 // (k + 1)) for c in range(k)  # bit 0 of bands 0..k-1
+        ))),
         ("far_a", 0),
         ("far_b", _signed((1 << k + 1) - 1)),  # hamming k+1: excluded
     ]
@@ -67,5 +73,6 @@ def test_phash_banding_adversarial_bit_patterns(spark):
         if ham(pa, pb) <= k
     }
     assert ("sign_a", "sign_b") in expect  # the case a signed shift drops
+    assert expect[("spread_a", "spread_b")] == k  # recall needs every band
     assert ("far_a", "far_b") not in expect
     assert got == expect

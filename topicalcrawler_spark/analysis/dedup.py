@@ -1,6 +1,6 @@
 """Document deduplication operators over the ``documents`` table.
 
-Four families (task brief "Deduplication"):
+Four families (task brief "Deduplication") and one clustering step:
 
 - exact:        md5(text) hash-groupBy                      (exact_dedup)
 - n-gram Jaccard: token-postings self-join, exact Jaccard   (jaccard_pairs)
@@ -8,6 +8,10 @@ Four families (task brief "Deduplication"):
                 self-join candidates, exact-Jaccard verify   (minhash_*)
 - SimHash:      60-bit majority-bit hash, pigeonhole chunk
                 band join + exact hamming verify             (simhash_*)
+                (analysis.hashing.hamming_pairs, the band join the
+                image phash pairs also run)
+- clustering:   large-star/small-star connected components over any
+                pair list, min id as keeper       (connected_components)
 
 Scale notes (100 TB design point):
 
@@ -32,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .hashing import chunk_explode, hash60_expr, tokens_expr
+from .hashing import hamming_pairs, hash60_expr, tokens_expr
 
 NUM_PERM = 64
 SIMHASH_BITS = 60
@@ -292,122 +296,40 @@ def connected_components(
     pairs: DataFrame,
     vertices: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 50,
+    max_iter: int = 40,
 ) -> DataFrame:
     """Duplicate-cluster assignment — the final step of every dedup
-    pipeline: group near-dup PAIRS into components and pick a canonical
-    keeper (the component's min id).  Exact min-label propagation to
-    fixpoint:
-
-      comp(v) <- min(comp(v), min over neighbors n of comp(n))
-
-    iterated until no label changes — the unique fixpoint assigns every
-    vertex the minimum id reachable in its component, so the result is
-    deterministic and an independent engine (DuckDB recursive CTE over
-    the same pairs) reproduces it exactly.
+    pipeline: group near-dup PAIRS into components and label each
+    vertex with its component's min id (the canonical keeper).
 
     Inputs: ``pairs`` with (doc_a, doc_b); ``vertices`` with id_col
     (vertices absent from pairs stay their own singleton component).
     Output: (id_col, comp).
 
-    Scale notes: each step is one join + min-aggregate, shuffling only
-    the edge list on its endpoints; steps needed = O(component
-    diameter), and near-dup graphs are short-diameter by construction
-    (members all sit within threshold of each other).  For 10^10-edge
-    graphs with long chains use ``connected_components_star`` (below) —
-    the alternating large-star/small-star contraction converges in
-    O(log n) rounds to the same fixpoint (property-tested equal); this
-    direct form keeps every step oracle-replayable.
-
-    Raises RuntimeError if max_iter is exhausted before the fixpoint —
-    silently returning partial labels would make every downstream
-    keeper assignment wrong with no diagnostic.
-    """
-    # cache the symmetrized edge list: every propagation step joins
-    # against it, and recomputing the (expensive) pair-generation
-    # lineage per iteration would dominate the loop
-    sym = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).cache()
-    # labels MUST be lineage-truncated per step (localCheckpoint), not
-    # merely cached: each iteration's plan references the previous
-    # labels TWICE (the neighbor-min join and the carry-forward join),
-    # so with cache() — which materializes data but keeps the logical
-    # plan — the analyzed plan DOUBLES per iteration and the driver
-    # OOMs optimizing it once the graph's diameter needs enough rounds
-    # (found at sf0.1: java.lang.OutOfMemoryError in .cache() plan
-    # analysis after ~20 rounds; sf0.01's shallow graphs converged
-    # before the blowup).  Same contract the star variant has always
-    # used; checkpoint blocks are GC-scoped, so nothing leaks either.
-    labels = (
-        vertices.select(F.col(id_col).alias("v"))
-        .withColumn("comp", F.col("v"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.dst == labels.v)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.v == nbr_min.src, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if n_changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "iterations — a component chain exceeds max_iter hops; "
-            "raise max_iter or use connected_components_star"
-        )
-    return labels.select(F.col("v").alias(id_col), "comp")
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond" — public literature): converges in O(log n) rounds even on
-    long chains, vs O(diameter) for plain min-label propagation — the
-    right form once dup graphs chain (crawl mirrors at 10^10 edges).
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014):
+    O(log n) rounds even on long chains, where min-label propagation
+    needs O(diameter) — the form that holds once dup graphs chain
+    (crawl mirrors at 10^10 edges).
 
     large-star: for each node u, let m = min(N(u) ∪ {u}); re-point
     every STRICTLY LARGER neighbor v > u at m.  small-star: orient
     edges toward the smaller endpoint, then for each node u re-point u
     and all its smaller neighbors at m.  Both steps preserve
     connectivity; the fixpoint is a star forest whose roots are the
-    component minima — identical output contract to
-    ``connected_components`` (property-tested equal on fixtures).
+    component minima, so the labeling is unique and an independent
+    engine (a DuckDB recursive-CTE closure over the same pairs)
+    reproduces it exactly.
 
     Each round is two groupBy-min + join passes over the edge list —
     shuffle keys are node ids, no step ever concentrates a component
     on one task beyond its star fan-in (the known large-star hotspot
     is the final root; acceptable because emitted edges shrink
-    geometrically).  Raises RuntimeError if not converged.
+    geometrically).
+
+    Raises RuntimeError if max_iter is exhausted before the fixpoint —
+    silently returning partial labels would make every downstream
+    keeper assignment wrong with no diagnostic.
     """
     # localCheckpoint (eager) rather than cache: each round's plan is
     # built ON TOP of the previous round's — without truncating the
@@ -465,7 +387,7 @@ def connected_components_star(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {max_iter} rounds"
         )
     roots = (
         edges.select(F.greatest("u", "v").alias("v_"), F.least("u", "v").alias("comp"))
@@ -484,24 +406,10 @@ def connected_components_star(
 
 
 def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs at hamming(simhash) <= max_hamming via lossless
-    pigeonhole chunk-band join (requires max_hamming < SIMHASH_CHUNKS).
-    Output: (doc_a, doc_b, hamming)."""
-    assert max_hamming < SIMHASH_CHUNKS, "pigeonhole bound violated"
-    chunks = chunk_explode(
-        simhash(docs), "simhash", "doc_id", SIMHASH_CHUNKS, CHUNK_BITS
-    )
-    return (
-        chunks.alias("a")
-        .join(chunks.alias("b"), ["c", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    """Near-dup pairs at hamming(simhash) <= max_hamming via the
+    lossless pigeonhole band join over 4 chunks of 15 bits (requires
+    max_hamming < SIMHASH_CHUNKS).  Output: (doc_a, doc_b, hamming)."""
+    return hamming_pairs(
+        simhash(docs), "simhash", "doc_id", SIMHASH_CHUNKS, CHUNK_BITS,
+        max_hamming,
+    ).toDF("doc_a", "doc_b", "hamming")

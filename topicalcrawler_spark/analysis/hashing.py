@@ -62,11 +62,6 @@ def chunk_explode(
     ``n_chunks`` bit-chunks as (c, chunk) rows.  Two signatures within
     hamming < n_chunks must agree on at least one chunk (pigeonhole),
     so an equi-join on (c, chunk) is a LOSSLESS candidate generator.
-    The one banding implementation shared by the SimHash
-    (analysis.dedup.simhash_pairs), sign-LSH
-    (analysis.similarity.lsh_topk), and image-phash
-    (operators.images.phash_near_dup_pairs) paths — hand-copied
-    variants could silently drift on the shift/mask math.
 
     shiftrightUNSIGNED + AND, not arithmetic shiftright + ``%``: the
     two agree on non-negative signatures (SimHash/sign-LSH are 60-bit
@@ -89,4 +84,32 @@ def chunk_explode(
                 ]
             )
         ).alias("c", "chunk"),
+    )
+
+
+def hamming_pairs(
+    df, sig_col: str, id_col: str, n_chunks: int, chunk_bits: int,
+    max_hamming: int,
+):
+    """Every pair (a, b, hamming) with a < b and
+    bit_count(sig_a ^ sig_b) <= max_hamming: the ``chunk_explode``
+    bands self-equi-joined on (c, chunk), pairs sharing several bands
+    collapsed to one row, then the exact hamming verify.  Lossless
+    when max_hamming < n_chunks (pigeonhole over the banded bits)."""
+    if max_hamming >= n_chunks:
+        raise ValueError("pigeonhole bound violated: max_hamming >= n_chunks")
+    bands = chunk_explode(df, sig_col, id_col, n_chunks, chunk_bits)
+    return (
+        bands.alias("l")
+        .join(bands.alias("r"), ["c", "chunk"])
+        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+        .select(
+            F.col(f"l.{id_col}").alias("a"),
+            F.col(f"r.{id_col}").alias("b"),
+            F.bit_count(
+                F.col(f"l.{sig_col}").bitwiseXOR(F.col(f"r.{sig_col}"))
+            ).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )

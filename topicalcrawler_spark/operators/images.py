@@ -6,22 +6,20 @@ against the carried metadata — the per-row invariant plumbing of
 ``BASELINE.json:15``.
 
 J8: phash near-duplicate join via LSH banding — the 64-bit hash is
-split into ``n_bands`` contiguous bands; two images within hamming
-distance k share at least one identical band when n_bands > k (pigeon-
-hole), so a self-equi-join on (band_id, band_value) finds every
-candidate pair with NO cross product, then `bit_count(a^b) <= k`
-verifies exactly.  Pure JVM: shiftrightunsigned + mask for banding,
-xor + bit_count for hamming — no UDF, broadcast-free, shuffle on the
-band key only.
+split into k+1 contiguous bands; two images within hamming distance k
+share at least one identical band (pigeonhole), so a self-equi-join
+on (band_id, band_value) finds every candidate pair with NO cross
+product, then `bit_count(a^b) <= k` verifies exactly.  The join is
+``analysis.hashing.hamming_pairs``, the one the text SimHash pairs
+run; pure JVM, no UDF, shuffle on the band key only.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..analysis.hashing import chunk_explode
+from ..analysis.hashing import hamming_pairs
 from ..core.imagecodec import decode, phash64
 
 
@@ -63,49 +61,11 @@ def decode_verify(df: DataFrame, bytes_col="bytes", fmt_col="fmt") -> DataFrame:
     return df.mapInPandas(run, schema=out_schema)
 
 
-def phash_near_dup_pairs(
-    corpus: DataFrame,
-    max_hamming: int = 8,
-    id_col: str = "image_id",
-    phash_col: str = "phash",
-    n_bands: int | None = None,
-) -> DataFrame:
-    """J8 — (id_a, id_b, hamming) for all pairs with hamming <= k.
-
-    n_bands defaults to max_hamming+1 (the minimal band count with a
-    100% recall guarantee at distance <= max_hamming).
-    """
-    if n_bands is None:
-        n_bands = max_hamming + 1
-    band_bits = 64 // n_bands
-
-    base = corpus.select(
-        F.col(id_col).alias("id"), F.col(phash_col).alias("ph")
-    )
-    # the shared pigeonhole banding (analysis.hashing.chunk_explode —
-    # one implementation for SimHash / sign-LSH / phash, unsigned-shift
-    # semantics correct for full-range signed-int64 phashes)
-    bands = chunk_explode(base, "ph", "id", n_bands, band_bits)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.c") == F.col("b.c"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.ph").alias("ph_a"),
-            F.col("b.ph").alias("ph_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # same pair may share several bands
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+def phash_near_dup_pairs(corpus: DataFrame, max_hamming: int = 8) -> DataFrame:
+    """J8 — (id_a, id_b, hamming) for all image_id pairs with
+    hamming(phash) <= max_hamming, over max_hamming+1 bands (the
+    minimal band count with a 100% recall guarantee)."""
+    n_bands = max_hamming + 1
+    return hamming_pairs(
+        corpus, "phash", "image_id", n_bands, 64 // n_bands, max_hamming
+    ).toDF("id_a", "id_b", "hamming")

@@ -1609,7 +1609,7 @@ def dup_components_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash near-dup pairs (hamming<=3), every doc labeled with its
     component's min doc_id (the canonical keeper).  The oracle is a
     DuckDB recursive-CTE transitive closure over the same brute-force
-    pairs — exact because min-label propagation's fixpoint is unique."""
+    pairs."""
     docs = scan(spark, "documents", sf_dir)
     pairs = dd.simhash_pairs(docs, max_hamming=3)
     return dd.connected_components(pairs, docs.select("doc_id"))
@@ -1746,12 +1746,9 @@ def _phash_neardup_oracle() -> str:
     """
 
 
-@register("phash_neardup_corpus", _phash_neardup_oracle)
-def phash_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J8 ⊕ -- phash near-duplicate pairs over the deterministic
-    corpus fixture (LSH band join + exact hamming verify) vs a DuckDB
-    brute-force all-pairs hamming oracle on the same (embedded)
-    phashes."""
+def _phash_corpus_pairs(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """The phash corpus fixture the oracles embed, and its hamming<=8
+    pairs (id_a, id_b, hamming)."""
     from .operators.images import phash_near_dup_pairs
     from .schemas import CORPUS
     from .sources.fixtures import make_corpus
@@ -1759,9 +1756,16 @@ def phash_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = spark.createDataFrame(
         make_corpus(PHASH_N, near_dup_rate=PHASH_NEAR_DUP_RATE), CORPUS
     )
-    return phash_near_dup_pairs(corpus, max_hamming=8).withColumn(
-        "hamming", F.col("hamming").cast("int")
-    )
+    return corpus, phash_near_dup_pairs(corpus, max_hamming=8)
+
+
+@register("phash_neardup_corpus", _phash_neardup_oracle)
+def phash_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J8 ⊕ -- phash near-duplicate pairs over the deterministic
+    corpus fixture (LSH band join + exact hamming verify) vs a DuckDB
+    brute-force all-pairs hamming oracle on the same (embedded)
+    phashes."""
+    return _phash_corpus_pairs(spark)[1]
 
 
 def _phash_components_oracle() -> str:
@@ -1797,27 +1801,12 @@ def phash_components_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     numeric min), i.e. the canonical keeper of a visual duplicate
     group.  Completes the image-dedup pipeline (band join -> exact
     hamming verify -> cluster -> keeper); the oracle is a recursive-CTE
-    transitive closure over the same embedded phashes.
-
-    This entry runs the O(log n) large-star/small-star contraction
-    (the 10^10-edge scale path) so BOTH clustering algorithms sit in
-    the driver's hard signal: dup_components_docs checks min-label
-    propagation, this one checks the star contraction, each against an
-    independent SQL closure."""
-    from .operators.images import phash_near_dup_pairs
-    from .schemas import CORPUS
-    from .sources.fixtures import make_corpus
-
-    corpus = spark.createDataFrame(
-        make_corpus(PHASH_N, near_dup_rate=PHASH_NEAR_DUP_RATE), CORPUS
+    transitive closure over the same embedded phashes."""
+    corpus, pairs = _phash_corpus_pairs(spark)
+    return dd.connected_components(
+        pairs.toDF("doc_a", "doc_b", "hamming"), corpus.select("image_id"),
+        id_col="image_id",
     )
-    pairs = phash_near_dup_pairs(corpus, max_hamming=8).select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-    )
-    comps = dd.connected_components_star(
-        pairs, corpus.select(F.col("image_id").alias("doc_id"))
-    )
-    return comps.select(F.col("doc_id").alias("image_id"), "comp")
 
 
 _FEATURE_COLS = (
